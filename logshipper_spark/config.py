@@ -283,6 +283,7 @@ def run_from_config(
     each transform consumes (fan-in), apply its remap, run the standard
     parse→enrich→route batch with sink rules from the config."""
     from . import pipeline, transform
+    from .session import local_frame
 
     cfg.validate()
     compiled = compile_pipeline(cfg)
@@ -293,7 +294,8 @@ def run_from_config(
 
     hosts_df = None
     if compiled["host_rows"]:
-        hosts_df = spark.createDataFrame(
+        hosts_df = local_frame(
+            spark,
             compiled["host_rows"],
             "host_pattern string, service string, is_wildcard boolean, priority int",
         )

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 # (src, dst, operation, base_ms, std_ms, err_rate, weight)
 # reference: cmd/demo/main.go:24-55
 TOPOLOGY: list[tuple[str, str, str, float, float, float, int]] = [
@@ -264,8 +266,8 @@ def lookup_roles(spark: SparkSession) -> DataFrame:
             tier = tiers.get(tool, "free")
             sink_hint = "sink_tools" if role == "tool" else "sink_default"
             rows.append((role, tool, team, tier, sink_hint))
-    return spark.createDataFrame(
-        rows, "role string, tool string, team string, cost_tier string, sink_hint string"
+    return local_frame(
+        spark, rows, "role string, tool string, team string, cost_tier string, sink_hint string"
     )
 
 
@@ -281,8 +283,8 @@ def lookup_hosts(spark: SparkSession) -> DataFrame:
         ("mailer", "mail-service", False, 5),
         ("*.mail.svc", "mail-service", True, 6),
     ]
-    return spark.createDataFrame(
-        rows, "host_pattern string, service string, is_wildcard boolean, priority int"
+    return local_frame(
+        spark, rows, "host_pattern string, service string, is_wildcard boolean, priority int"
     )
 
 

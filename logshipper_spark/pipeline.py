@@ -9,7 +9,7 @@ intermediate (the reference's transform output channel).
 
 Exactly-once + lineage (north rule): every batch writes its sinks under
 ``batch_id=N`` directories (re-running a batch overwrites its own
-output — idempotent restart), and appends per-partition lineage rows
+output — idempotent restart), and commits per-stage lineage totals
 plus pipeline counters (mirroring the reference's Prometheus counters,
 internal/metrics/metrics.go:12-72) to a checkpoint table, committed
 last so a half-written batch is re-done on restart.
@@ -17,12 +17,14 @@ last so a half-written batch is re-done on restart.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import aggregate as agg
 from . import enrich, gen, parse, route
@@ -34,7 +36,9 @@ from .schemas import (
     FORMAT_METRIC,
     FORMAT_PLAIN,
     FORMAT_TEMPLATE,
+    LINEAGE_SCHEMA,
 )
+from .session import local_frame
 
 KNOWN_FORMATS = [
     FORMAT_JSON, FORMAT_ECS, FORMAT_METRIC, FORMAT_TEMPLATE, FORMAT_PLAIN,
@@ -77,11 +81,33 @@ def normalize_and_enrich(
     return enriched.withColumn("turn_rank", F.row_number().over(w))
 
 
-def _partition_counts(df: DataFrame, stage: str) -> DataFrame:
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows_out"))
-        .withColumn("stage", F.lit(stage))
+def lineage_frame(
+    spark: SparkSession,
+    run_id: str,
+    rows_in: int,
+    sink_rows: dict[str, int],
+    counters: list[tuple[str, int]],
+    ingest_ts: str = DEFAULT_INGEST_TS,
+) -> DataFrame:
+    """One batch's lineage + counters rows, built on the driver (the
+    ``lineage/batch_id=N`` layout; ``batch_id`` lives in the directory
+    name). Stage totals use ``partition_id -1``: the parse total, one
+    ``sink:<name>`` row per non-empty sink, then the counters.
+
+    ``committed_at`` is the run's pinned ingestion clock, NOT wall
+    clock: a replayed batch re-commits identical lineage (determinism
+    rule)."""
+    rows = [(run_id, "parse", -1, rows_in, rows_in, None, None)]
+    rows += [
+        (run_id, f"sink:{sink}", -1, rows_in, n, None, None)
+        for sink, n in sorted(sink_rows.items())
+    ]
+    rows += [(run_id, "counters", -1, rows_in, None, k, int(v)) for k, v in counters]
+    schema = T.StructType(
+        [f for f in LINEAGE_SCHEMA.fields if f.name not in ("batch_id", "committed_at")]
+    )
+    return local_frame(spark, rows, schema).withColumn(
+        "committed_at", F.lit(ingest_ts).cast("timestamp")
     )
 
 
@@ -93,7 +119,6 @@ def run_batch(
     batch_id: int = 0,
     ingest_ts: str = DEFAULT_INGEST_TS,
     rules: list[tuple[str, str, int]] | None = None,
-    write: bool = True,
     sink_write_mode: str = "single_pass",
     lookup_roles: DataFrame | None = None,
     lookup_hosts: DataFrame | None = None,
@@ -104,9 +129,13 @@ def run_batch(
     per-sink row counts and counters (the numbers the north rule
     compares against the reference's fixture tests).
 
-    Counters ride the main pass via ``df.observe`` (the Spark analogue
-    of the reference's inline Prometheus counters, metrics.go:12-72) —
-    no extra jobs for rows_in / per-format counts / parse errors.
+    Counters AND per-sink row counts ride the write pass via
+    ``df.observe`` (the Spark analogue of the reference's inline
+    Prometheus counters, metrics.go:12-72) — no extra jobs for
+    rows_in / per-format counts / parse errors / sink rows. A sink's
+    count is the sum of ``count_if(predicate)`` over the rules naming
+    it (exactly the rows ``route.routed_rows`` fans out to it); sinks
+    with no rows are left out.
 
     ``sink_write_mode``:
       * ``per_sink`` — N filtered writes off a cached intermediate
@@ -116,18 +145,23 @@ def run_batch(
         route → write fuses into ONE pass (no cache materialization —
         a 100 TB batch is never memory-resident), written with
         ``partitionBy(sink)`` under ``sinks_by/batch_id=N/sink=<name>``.
-        Per-sink counts and windowed aggregates then *read back* the
-        written parquet (column-pruned scans of compact files — the
-        write IS the materialization); the edge aggregate recomputes
-        the narrow parse chain, which Catalyst prunes to the handful of
-        columns it needs.
+        The windowed aggregates then read back the written parquet
+        (column-pruned scans of compact files — the write IS the
+        materialization); the edge aggregate reads the catch-all
+        sink's partition, or recomputes the narrow parse chain when
+        no rule is a catch-all.
+
+    Lineage is committed last, as one small driver-built file per
+    batch (``lineage_frame``): stage totals plus the counters.
 
     Sink payload: the normalized event including the ``raw`` map but
     not the original source line (reference: NormalizedEvent,
     internal/event/event.go:24-38, carries Raw, not the raw text).
     """
+    if sink_write_mode not in ("single_pass", "per_sink"):
+        raise ValueError(f"unknown sink_write_mode {sink_write_mode!r}")
     run_id = run_id or uuid.uuid4().hex[:12]
-    rules = rules or gen.routing_rules()
+    rules = sorted(rules or gen.routing_rules(), key=lambda r: r[2])
     t0 = time.time()
 
     obs = Observation(f"pipeline_{run_id}_{batch_id}")
@@ -147,65 +181,49 @@ def run_batch(
             F.count_if(F.col("format") == f).alias(f"fmt_{f}")
             for f in KNOWN_FORMATS
         ],
+        *[
+            F.count_if(F.expr(pred)).alias(f"rule_{i}")
+            for i, (_, pred, _) in enumerate(rules)
+        ],
     )
-    single_pass = write and sink_write_mode == "single_pass"
-    if not single_pass:
-        enriched = enriched.cache()  # one parse, N filtered sink writes (K3)
-
-    routed = route.routed_rows(enriched, rules)
-    sink_rows: dict[str, int] = {}
+    single_pass = sink_write_mode == "single_pass"
 
     if single_pass:
         # THE pass: parse+enrich+route+write fused; observe() rides it
         path = os.path.join(out_dir, "sinks_by", f"batch_id={batch_id}")
-        sink_payload = routed.drop("text")
+        sink_payload = route.routed_rows(enriched, rules).drop("text")
         sink_payload.write.mode("overwrite").partitionBy("sink").parquet(path)
         # explicit schema: an all-empty batch writes no data files and
         # schema inference would throw; with the schema pinned the
         # read-back is simply an empty frame
-        routed_for_agg = spark.read.schema(sink_payload.schema).parquet(path)
-    elif write:
-        for sink, pred, _ in sorted(rules, key=lambda r: r[2]):
-            sink_df = enriched.filter(F.expr(pred))
+        routed = spark.read.schema(sink_payload.schema).parquet(path)
+    else:
+        enriched = enriched.cache()  # one parse, N filtered sink writes (K3)
+        for sink in dict.fromkeys(s for s, _, _ in rules):
+            # one write per sink NAME: rules sharing a name union their
+            # rows, as routed_rows' fan-out does (a write per rule would
+            # overwrite the sink with the last rule's rows alone)
+            sink_df = functools.reduce(
+                DataFrame.unionByName,
+                [enriched.filter(F.expr(p)) for s, p, _ in rules if s == sink],
+            )
             path = os.path.join(out_dir, "sinks", sink, f"batch_id={batch_id}")
             sink_df.drop("text").write.mode("overwrite").parquet(path)
-        routed_for_agg = routed
-    else:
-        routed_for_agg = routed
+        routed = route.routed_rows(enriched, rules)
 
-    # per-sink row counts AND per-sink per-partition lineage in ONE pass
-    # over the fan-out (read back from the written files in single_pass —
-    # a column-pruned footer-light scan, not a recompute)
-    sink_part = (
-        routed_for_agg.groupBy(
-            F.spark_partition_id().alias("partition_id"), F.col("sink")
-        )
-        .agg(F.count("*").alias("rows_out"))
-        .withColumn("stage", F.concat(F.lit("sink:"), F.col("sink")))
-        .cache()
-    )
-    for r in sink_part.groupBy("sink").agg(F.sum("rows_out").alias("cnt")).collect():
-        sink_rows[r["sink"]] = int(r["cnt"])
-
-    # observe() metrics are available after the first action above
+    # observe() metrics are available once the first write has run
     metrics = obs.get
     rows_in = metrics["rows_in"]
     parse_errors = metrics["parse_errors"]
     fmt_counts = {
         f: metrics[f"fmt_{f}"] for f in KNOWN_FORMATS if metrics[f"fmt_{f}"] > 0
     }
+    sink_rows: dict[str, int] = {}
+    for i, (sink, _, _) in enumerate(rules):
+        sink_rows[sink] = sink_rows.get(sink, 0) + metrics[f"rule_{i}"]
+    sink_rows = {sink: n for sink, n in sink_rows.items() if n > 0}
 
-    if single_pass:
-        # the write pass was the parse pass; per-partition parse lineage
-        # would need a second full scan, so commit the (exact) total
-        parse_lineage = spark.createDataFrame(
-            [(-1, rows_in, "parse")], "partition_id int, rows_out long, stage string"
-        ).select("partition_id", "rows_out", "stage")
-    else:
-        parse_lineage = _partition_counts(enriched, "parse")
-    lineage_parts = [parse_lineage, sink_part.select("partition_id", "rows_out", "stage")]
-
-    counts = route.sink_counts(routed_for_agg, ts_col="ts", window_duration="1 minute")
+    counts = route.sink_counts(routed, ts_col="ts", window_duration="1 minute")
     # edge aggregate input: with a catch-all sink (predicate 'true'),
     # its written partition IS the full enriched frame — a pruned,
     # column-projected read-back instead of a second parse pass
@@ -213,19 +231,18 @@ def run_batch(
         (s for s, pred, _ in rules if pred.strip().lower() == "true"), None
     )
     if single_pass and catch_all is not None:
-        edge_src = routed_for_agg.filter(F.col("sink") == catch_all)
+        edge_src = routed.filter(F.col("sink") == catch_all)
     else:
         edge_src = enriched
     edges = agg.edge_agg(
         edge_src, ts_col="event_ts", order_cols=["ts", "conv_id", "turn_idx"]
     )
-    if write:
-        counts.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "sink_counts", f"batch_id={batch_id}")
-        )
-        edges.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "edge_agg", f"batch_id={batch_id}")
-        )
+    counts.write.mode("overwrite").parquet(
+        os.path.join(out_dir, "sink_counts", f"batch_id={batch_id}")
+    )
+    edges.write.mode("overwrite").parquet(
+        os.path.join(out_dir, "edge_agg", f"batch_id={batch_id}")
+    )
 
     # lineage + counters checkpoint rows, committed last (restart point)
     counters = [
@@ -234,39 +251,17 @@ def run_batch(
         *[(f"parse_total_{fmt}", n) for fmt, n in sorted(fmt_counts.items())],
         *[(f"sink_rows_{sink}", n) for sink, n in sorted(sink_rows.items())],
     ]
-    lineage = lineage_parts[0]
-    for part in lineage_parts[1:]:
-        lineage = lineage.unionByName(part)
-    lineage = lineage.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(batch_id).cast("long").alias("batch_id"),
-        "stage",
-        F.col("partition_id").cast("int"),
-        F.lit(rows_in).cast("long").alias("rows_in"),
-        F.col("rows_out").cast("long"),
-        F.lit(None).cast("string").alias("counter"),
-        F.lit(None).cast("long").alias("value"),
-        # the run's pinned ingestion clock, NOT wall clock: a replayed
-        # batch re-commits byte-identical lineage (determinism rule)
-        F.lit(ingest_ts).cast("timestamp").alias("committed_at"),
+    # one directory per batch, overwritten on replay: a crash after
+    # run_batch but before the streaming checkpoint commit replays the
+    # batch and re-commits identical lineage instead of double-appending
+    # counters. batch_id lives in the directory name (partition
+    # discovery restores it on read).
+    lineage = lineage_frame(spark, run_id, rows_in, sink_rows, counters, ingest_ts)
+    lineage.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "lineage", f"batch_id={batch_id}")
     )
-    counter_df = spark.createDataFrame(
-        [(run_id, batch_id, "counters", -1, rows_in, None, k, int(v)) for k, v in counters],
-        "run_id string, batch_id long, stage string, partition_id int, "
-        "rows_in long, rows_out long, counter string, value long",
-    ).withColumn("committed_at", F.lit(ingest_ts).cast("timestamp"))
-    if write:
-        # one directory per batch, overwritten on replay: a crash after
-        # run_batch but before the streaming checkpoint commit replays
-        # the batch and re-commits identical lineage instead of
-        # double-appending counters. batch_id lives in the directory
-        # name (partition discovery restores it on read).
-        lineage.unionByName(counter_df).drop("batch_id").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "lineage", f"batch_id={batch_id}"))
 
     elapsed = time.time() - t0
-    sink_part.unpersist()
     if not single_pass:
         enriched.unpersist()
     return {

@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 ROWS_PER_TASK = 100_000  # generator rows; proxy for ~tens of MB per task
@@ -30,6 +31,28 @@ def work_targeted_partitions(
     tasks_per_core = int(os.environ.get("SPARK_GRAFT_TASKS_PER_CORE", "3"))
     by_work = max(1, n_rows // rows_per_task)
     return max(cores, min(cores * tasks_per_core, by_work))
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """A small driver-built frame (lookup dimensions, lineage and
+    counter rows) that stays in the JVM.
+
+    ``createDataFrame(list)`` builds a pickled Python RDD: every scan of
+    it starts Python workers and runs a Spark job, even for three rows.
+    Built from a ``pyarrow.Table``, the frame is a ``LocalRelation`` and
+    plans as ``LocalTableScan``: collecting or broadcasting it runs no
+    job, and writing it with ``coalesce(1)`` runs one task."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def get_spark(

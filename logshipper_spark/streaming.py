@@ -9,7 +9,7 @@ Two modes:
   route fan-out → per-sink windowed aggregates) with exactly-once
   restart semantics: Spark's checkpoint gives at-least-once batch
   replay, and batch outputs are written under ``batch_id=N`` paths
-  (idempotent overwrite) with the lineage/counter rows appended last —
+  (idempotent overwrite) with the lineage/counter rows committed last —
   a replayed half-written batch simply re-commits the same result.
   The reference has no restart story at all (process state is lost);
   this is the north rule's addition.
@@ -134,7 +134,7 @@ def run_stream(
     files belong to which epoch; on restart, finished epochs are not
     re-read, and a half-finished epoch is replayed — idempotent because
     `pipeline.run_batch` overwrites its own ``batch_id=N`` output paths
-    before appending lineage.
+    before committing lineage.
 
     ``chaos`` (tests only): callable invoked with the batch id after
     the batch's outputs AND lineage commit but before Spark's streaming
@@ -156,11 +156,12 @@ def run_stream(
         digest = hashlib.sha256(_stream_key(checkpoint_dir).encode()).hexdigest()
         run_id = f"stream-{digest[:12]}"
     rules = rules or gen.routing_rules()
-    # per-run constants built ONCE, not per micro-batch: the lookup
-    # dims (and their driver-side collects inside resolve_services)
-    # and the committed-batch set (one lineage scan at start; this
+    # per-run constants built once, not per micro-batch: the lookup
+    # dims and the committed-batch set (one lineage scan at start; this
     # process is the only lineage writer afterwards, so the local set
-    # stays exact and each epoch costs zero extra driver jobs)
+    # stays exact). resolve_services still collects the host dim in
+    # every epoch, but it is a driver-built LocalTableScan frame, so
+    # that collect (and the roles broadcast) runs no Spark job.
     lookup_roles = gen.lookup_roles(spark)
     lookup_hosts = gen.lookup_hosts(spark)
     runs = pipeline.lineage_runs(spark, out_dir)
@@ -192,7 +193,6 @@ def run_stream(
             batch_id=batch_id,
             ingest_ts=ingest_ts,
             rules=rules,
-            write=True,
             lookup_roles=lookup_roles,
             lookup_hosts=lookup_hosts,
         )

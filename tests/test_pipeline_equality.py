@@ -158,7 +158,7 @@ def test_run_batch_counters(spark, frames, tmp_path):
     assert summary["sink_rows"] == want_sinks
     # lineage committed → batch resumable
     assert pipeline.completed_batches(spark, out) == {0}
-    # lineage per-partition rows sum to the input size for the parse stage
+    # lineage parse-stage rows sum to the input size
     lineage = spark.read.parquet(f"{out}/lineage")
     parse_rows = (
         lineage.filter(F.col("stage") == "parse").agg(F.sum("rows_out")).first()[0]
