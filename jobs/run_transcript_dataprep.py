@@ -144,8 +144,8 @@ def main(argv: list[str] | None = None) -> int:
     from logshipper_spark.session import get_spark
 
     spark = get_spark(app_name="logshipper-transcript-dataprep")
-    # post-startup clock: scaling captures compare pipeline work, not
-    # constant JVM boot (the same reason bench.py times in-JVM)
+    # post-startup clock: scaling captures (tools/scaling.py) compare
+    # pipeline work, not constant JVM boot
     import time
 
     t0 = time.monotonic()

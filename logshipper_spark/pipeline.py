@@ -4,8 +4,9 @@ The reference wires bounded channels between stages (reference:
 internal/pipeline/pipeline.go:38-175). Here the stages are one
 declarative DataFrame chain: Catalyst fuses parse+transform+enrich into
 a single narrow whole-stage-codegen pass over the scan; the only wide
-boundaries are the aggregate shuffles. Fan-out writes share one cached
-intermediate (the reference's transform output channel).
+boundaries are the aggregate shuffles. Routing fans each row out to its
+sinks inside that same pass, and one partitioned write lands every sink
+(the reference's transform output channel).
 
 Exactly-once + lineage (north rule): every batch writes its sinks under
 ``batch_id=N`` directories (re-running a batch overwrites its own
@@ -17,7 +18,6 @@ last so a half-written batch is re-done on restart.
 
 from __future__ import annotations
 
-import functools
 import os
 import time
 import uuid
@@ -119,7 +119,6 @@ def run_batch(
     batch_id: int = 0,
     ingest_ts: str = DEFAULT_INGEST_TS,
     rules: list[tuple[str, str, int]] | None = None,
-    sink_write_mode: str = "single_pass",
     lookup_roles: DataFrame | None = None,
     lookup_hosts: DataFrame | None = None,
     transform_fn=None,
@@ -137,19 +136,14 @@ def run_batch(
     it (exactly the rows ``route.routed_rows`` fans out to it); sinks
     with no rows are left out.
 
-    ``sink_write_mode``:
-      * ``per_sink`` — N filtered writes off a cached intermediate
-        under ``sinks/<sink>/batch_id=N`` (clear per-sink layout; each
-        write prunes on its own pushed-down predicate).
-      * ``single_pass`` (default) — the 100 TB shape: parse → enrich →
-        route → write fuses into ONE pass (no cache materialization —
-        a 100 TB batch is never memory-resident), written with
-        ``partitionBy(sink)`` under ``sinks_by/batch_id=N/sink=<name>``.
-        The windowed aggregates then read back the written parquet
-        (column-pruned scans of compact files — the write IS the
-        materialization); the edge aggregate reads the catch-all
-        sink's partition, or recomputes the narrow parse chain when
-        no rule is a catch-all.
+    The write is the 100 TB shape: parse → enrich → route → write fuses
+    into ONE pass (no cache materialization — a 100 TB batch is never
+    memory-resident), written with ``partitionBy(sink)`` under
+    ``sinks_by/batch_id=N/sink=<name>``. The windowed aggregates then
+    read back the written parquet (column-pruned scans of compact files
+    — the write IS the materialization); the edge aggregate reads the
+    catch-all sink's partition, or recomputes the narrow parse chain
+    when no rule is a catch-all.
 
     Lineage is committed last, as one small driver-built file per
     batch (``lineage_frame``): stage totals plus the counters.
@@ -158,8 +152,6 @@ def run_batch(
     not the original source line (reference: NormalizedEvent,
     internal/event/event.go:24-38, carries Raw, not the raw text).
     """
-    if sink_write_mode not in ("single_pass", "per_sink"):
-        raise ValueError(f"unknown sink_write_mode {sink_write_mode!r}")
     run_id = run_id or uuid.uuid4().hex[:12]
     rules = sorted(rules or gen.routing_rules(), key=lambda r: r[2])
     t0 = time.time()
@@ -186,30 +178,15 @@ def run_batch(
             for i, (_, pred, _) in enumerate(rules)
         ],
     )
-    single_pass = sink_write_mode == "single_pass"
 
-    if single_pass:
-        # THE pass: parse+enrich+route+write fused; observe() rides it
-        path = os.path.join(out_dir, "sinks_by", f"batch_id={batch_id}")
-        sink_payload = route.routed_rows(enriched, rules).drop("text")
-        sink_payload.write.mode("overwrite").partitionBy("sink").parquet(path)
-        # explicit schema: an all-empty batch writes no data files and
-        # schema inference would throw; with the schema pinned the
-        # read-back is simply an empty frame
-        routed = spark.read.schema(sink_payload.schema).parquet(path)
-    else:
-        enriched = enriched.cache()  # one parse, N filtered sink writes (K3)
-        for sink in dict.fromkeys(s for s, _, _ in rules):
-            # one write per sink NAME: rules sharing a name union their
-            # rows, as routed_rows' fan-out does (a write per rule would
-            # overwrite the sink with the last rule's rows alone)
-            sink_df = functools.reduce(
-                DataFrame.unionByName,
-                [enriched.filter(F.expr(p)) for s, p, _ in rules if s == sink],
-            )
-            path = os.path.join(out_dir, "sinks", sink, f"batch_id={batch_id}")
-            sink_df.drop("text").write.mode("overwrite").parquet(path)
-        routed = route.routed_rows(enriched, rules)
+    # THE pass: parse+enrich+route+write fused; observe() rides it
+    path = os.path.join(out_dir, "sinks_by", f"batch_id={batch_id}")
+    sink_payload = route.routed_rows(enriched, rules).drop("text")
+    sink_payload.write.mode("overwrite").partitionBy("sink").parquet(path)
+    # explicit schema: an all-empty batch writes no data files and
+    # schema inference would throw; with the schema pinned the
+    # read-back is simply an empty frame
+    routed = spark.read.schema(sink_payload.schema).parquet(path)
 
     # observe() metrics are available once the first write has run
     metrics = obs.get
@@ -230,7 +207,7 @@ def run_batch(
     catch_all = next(
         (s for s, pred, _ in rules if pred.strip().lower() == "true"), None
     )
-    if single_pass and catch_all is not None:
+    if catch_all is not None:
         edge_src = routed.filter(F.col("sink") == catch_all)
     else:
         edge_src = enriched
@@ -262,8 +239,6 @@ def run_batch(
     )
 
     elapsed = time.time() - t0
-    if not single_pass:
-        enriched.unpersist()
     return {
         "run_id": run_id,
         "batch_id": batch_id,

@@ -9,13 +9,14 @@ from pyspark.sql.types import StructType
 
 
 ROWS_PER_TASK = 100_000  # generator rows; proxy for ~tens of MB per task
+OVERSUBSCRIPTION = 3  # tasks per core: shuffle width, generator ceiling
 
 
 def work_targeted_partitions(
     n_rows: int, cores: int | None = None, rows_per_task: int = ROWS_PER_TASK
 ) -> int:
     """Partition count targeting ~rows_per_task per task, clamped to
-    [1x, tasks_per_core x] cores.
+    [1x, OVERSUBSCRIPTION x] cores.
 
     Tasks-per-core is WORK-DEPENDENT, not a constant (measured,
     interleaved fresh-JVM A/Bs): at 16 cores / 9.6M turns, 3 tasks/core
@@ -28,9 +29,8 @@ def work_targeted_partitions(
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    tasks_per_core = int(os.environ.get("SPARK_GRAFT_TASKS_PER_CORE", "3"))
     by_work = max(1, n_rows // rows_per_task)
-    return max(cores, min(cores * tasks_per_core, by_work))
+    return max(cores, min(cores * OVERSUBSCRIPTION, by_work))
 
 
 def local_frame(
@@ -82,12 +82,11 @@ def get_spark(
         # 23-48 s to 17-19 s; 4-core leg 68.0 s vs 84.3 s. 6/core was
         # within noise of 3 and not adopted. On a real cluster the same
         # setting gives dynamic-allocation slack and skew headroom.
-        # Size-aware callers (bench.py, gen.transcripts) should use
+        # The size-aware caller, gen.transcripts, uses
         # work_targeted_partitions instead — 3/core hurts when tasks
         # are tiny (measured -20-30% at 600k turns / 32 cores).
-        tasks_per_core = int(os.environ.get("SPARK_GRAFT_TASKS_PER_CORE", "3"))
         shuffle_partitions = (
-            int(os.environ.get("SPARK_GRAFT_CPUS", "32")) * tasks_per_core
+            int(os.environ.get("SPARK_GRAFT_CPUS", "32")) * OVERSUBSCRIPTION
         )
 
     builder = (

@@ -2,18 +2,21 @@
 
 Per-sink row counts ride the write pass as ``observe()`` metrics, and
 lineage is one driver-built file per batch. These tests hold both to
-the routed rows actually written, and guard the job budget that
-motivated them.
+the routed rows actually written and to the pure-Python oracle, and
+guard the job budget that motivated them.
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from logshipper_spark import gen, pipeline, route
+
+from . import oracle
 
 # two rules share sink_mixed; status_code >= 500 is NULL wherever the
 # transform below drops a zero status (a source without the field)
@@ -28,6 +31,24 @@ RULES = [
 
 def _null_zero_status(df):
     return df.withColumn("status_code", F.expr("nullif(status_code, 0)"))
+
+
+def _oracle_route(n: dict, tool: str) -> list[str]:
+    """RULES evaluated Go-style over an oracle-parsed turn. After
+    _null_zero_status a zero status is NULL and matches no status
+    predicate, which is what ``0 >= 500`` gives here too."""
+    sinks = ["sink_mixed"] if tool != "" else []
+    if n["status_code"] >= 500:
+        sinks.append("sink_5xx")
+    if n["format"] == "metric_json":
+        sinks.append("sink_mixed")
+    return sinks + ["sink_all"]
+
+
+ORACLE_CASES = {
+    "default_rules": (gen.routing_rules(), None, oracle.route_row),
+    "shared_name_null_predicate": (RULES, _null_zero_status, _oracle_route),
+}
 
 
 def _group_counts(df) -> dict[str, int]:
@@ -63,12 +84,21 @@ def test_observed_sink_counts_match_routed_and_written_rows(spark, tmp_path):
     enriched.unpersist()
 
 
-@pytest.mark.parametrize("mode", ["single_pass", "per_sink"])
-def test_empty_batch_has_no_sink_counts(spark, tmp_path, mode):
+# the two sources of the edge aggregate: with a catch-all rule it reads
+# the catch-all partition back from the single written pass; with only
+# filtered per-sink rules it recomputes the narrow parse chain
+EMPTY_BATCH_RULES = {
+    "single_pass": RULES,
+    "per_sink": [r for r in RULES if r[1] != "true"],
+}
+
+
+@pytest.mark.parametrize("case", sorted(EMPTY_BATCH_RULES))
+def test_empty_batch_has_no_sink_counts(spark, tmp_path, case):
     tr = gen.transcripts(spark, 100).filter("false")
     out = str(tmp_path / "out")
     s = pipeline.run_batch(
-        spark, tr, out, run_id="e", batch_id=0, rules=RULES, sink_write_mode=mode
+        spark, tr, out, run_id="e", batch_id=0, rules=EMPTY_BATCH_RULES[case]
     )
     assert s["rows_in"] == 0 and s["sink_rows"] == {}
     lineage = spark.read.parquet(os.path.join(out, "lineage"))
@@ -76,42 +106,61 @@ def test_empty_batch_has_no_sink_counts(spark, tmp_path, mode):
     assert pipeline.completed_batches(spark, out, "e") == {0}
 
 
-def test_per_sink_counts_match_single_pass(spark, tmp_path):
+@pytest.mark.parametrize("case", sorted(ORACLE_CASES))
+def test_written_sinks_and_counts_match_oracle(spark, tmp_path, case):
+    """Every turn lands in exactly the sinks (with multiplicity: a turn
+    matching two rules of one sink name is written twice) the oracle
+    routes it to, and the summary and lineage totals are the oracle's."""
+    rules, transform_fn, route_row = ORACLE_CASES[case]
     tr = gen.transcripts(spark, 1500)
-    a, b = (
-        pipeline.run_batch(
-            spark, tr, str(tmp_path / mode), run_id="p", batch_id=0, rules=RULES,
-            sink_write_mode=mode, transform_fn=_null_zero_status,
-        )
-        for mode in ("per_sink", "single_pass")
+    out = str(tmp_path / "out")
+    s = pipeline.run_batch(
+        spark, tr, out, run_id="o", batch_id=0, rules=rules,
+        transform_fn=transform_fn,
     )
-    assert a["sink_rows"] == b["sink_rows"]
-    assert a["format_counts"] == b["format_counts"]
-    assert a["parse_errors"] == b["parse_errors"]
-    # per_sink writes one table per sink name; a shared name holds the
-    # rows of both its rules
-    per_sink = {
-        sink: spark.read.parquet(str(tmp_path / "per_sink" / "sinks" / sink)).count()
-        for sink in a["sink_rows"]
+
+    want: dict = {}
+    formats: Counter = Counter()
+    parse_errors = zero_status = 0
+    for r in tr.select("conv_id", "turn_idx", "role", "tool", "text").collect():
+        n = oracle.parse_normalized(r["text"], r["role"])
+        want[(r["conv_id"], r["turn_idx"])] = Counter(route_row(n, r["tool"]))
+        formats[n["format"]] += 1
+        parse_errors += n["src_service"] == ""
+        zero_status += n["status_code"] == 0
+    assert len(want) == 1500
+    if transform_fn is not None:
+        # the shared sink name and the NULL predicate are really exercised
+        assert any(c["sink_mixed"] == 2 for c in want.values())
+        assert zero_status > 0
+
+    written = spark.read.parquet(os.path.join(out, "sinks_by", "batch_id=0"))
+    got: dict = {}
+    for r in written.select("conv_id", "turn_idx", "sink").collect():
+        got.setdefault((r["conv_id"], r["turn_idx"]), Counter())[r["sink"]] += 1
+    assert got == want
+
+    sink_rows = dict(sum(want.values(), Counter()))
+    assert s["rows_in"] == 1500
+    assert s["sink_rows"] == sink_rows
+    assert s["format_counts"] == dict(formats)
+    assert s["parse_errors"] == parse_errors
+
+    lineage = spark.read.parquet(os.path.join(out, "lineage", "batch_id=0"))
+    sinks = {
+        r["stage"][len("sink:"):]: r["rows_out"]
+        for r in lineage.filter(F.col("stage").startswith("sink:")).collect()
     }
-    assert per_sink == a["sink_rows"]
-    # the lineage both modes commit is the same set of totals
-    rows = [
-        sorted(
-            map(tuple, spark.read.parquet(str(tmp_path / mode / "lineage"))
-                .drop("committed_at").collect())
-        )
-        for mode in ("per_sink", "single_pass")
-    ]
-    assert rows[0] == rows[1]
-
-
-def test_unknown_sink_write_mode_is_refused(spark, tmp_path):
-    with pytest.raises(ValueError, match="sink_write_mode"):
-        pipeline.run_batch(
-            spark, gen.transcripts(spark, 10), str(tmp_path / "o"),
-            sink_write_mode="per-sink",
-        )
+    counters = {
+        r["counter"]: r["value"] for r in lineage.filter("stage = 'counters'").collect()
+    }
+    assert sinks == sink_rows
+    assert counters == {
+        "events_received_total": 1500,
+        "parse_errors_total": parse_errors,
+        **{f"parse_total_{f}": k for f, k in formats.items()},
+        **{f"sink_rows_{sink}": k for sink, k in sink_rows.items()},
+    }
 
 
 def test_lineage_replay_leaves_one_identical_file(spark, tmp_path):

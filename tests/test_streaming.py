@@ -430,25 +430,6 @@ def test_single_pass_empty_batch_does_not_crash(spark, tmp_path):
     assert s["sink_rows"] == {}
 
 
-def test_single_pass_sink_write_matches_per_sink(spark, tmp_path):
-    tr = gen.transcripts(spark, 1500)
-    a = pipeline.run_batch(
-        spark, tr, str(tmp_path / "a"), run_id="x", batch_id=0,
-        sink_write_mode="per_sink",
-    )
-    b = pipeline.run_batch(
-        spark, tr, str(tmp_path / "b"), run_id="x", batch_id=0,
-        sink_write_mode="single_pass",
-    )
-    assert a["sink_rows"] == b["sink_rows"]
-    assert a["format_counts"] == b["format_counts"]
-    assert a["parse_errors"] == b["parse_errors"]
-    # single-pass layout is partitioned by sink under one directory
-    got = spark.read.parquet(str(tmp_path / "b" / "sinks_by" / "batch_id=0"))
-    per_sink = {r["sink"]: r["n"] for r in got.groupBy("sink").agg(F.count("*").alias("n")).collect()}
-    assert per_sink == b["sink_rows"]
-
-
 def test_streaming_substr_screen(spark, tmp_path):
     """Streaming substring screening against the growing fingerprint
     index: epoch 1 populates the index; a later epoch's page that is

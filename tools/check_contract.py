@@ -17,6 +17,7 @@ import pandas as pd
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod  # noqa: E402
+from logshipper_spark.datapipe import textstats  # noqa: E402
 from logshipper_spark.session import get_spark  # noqa: E402
 
 TABLES = [
@@ -64,6 +65,10 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {e}")
             continue
+        finally:
+            # the tfidf / bm25 / pmi builders persist their postings for
+            # the action; a sweep must not carry them into later queries
+            textstats.release_cached_postings()
         if name not in oracles:
             print(f"rows  {name}: {len(sdf)} rows ({time.time()-t0:.1f}s, rows-only)")
             continue
@@ -94,20 +99,6 @@ def main() -> int:
         else:
             print(f"OK    {name}: {len(a)} rows ({time.time()-t0:.1f}s)")
     print(f"\n{len(failures)} failures: {failures}")
-    # rotation-ledger summary rides along with every sweep (r4 verdict
-    # #6: the ledger regenerates with CI, not by archaeology)
-    try:
-        from rotation_ledger import ledger
-
-        rows = ledger()
-        never = [q for _, q, g, _ in rows if g == "—"]
-        print(
-            f"ledger: {len(rows)} declared, {len(rows) - len(never)} "
-            f"driver-green in some CORRECTNESS_r*.json, "
-            f"{len(never)} awaiting certification"
-        )
-    except Exception as exc:  # the compare result stays authoritative
-        print(f"ledger: unavailable ({exc})")
     return 1 if failures else 0
 
 
