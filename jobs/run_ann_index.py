@@ -25,7 +25,7 @@ index and prints the neighbors as JSON lines.
 
 At 100 TB: build is one pass (assignment is a narrow projection; the
 partitionBy shuffle is the only wide stage), probe reads only the
-probed cell directories (partition pruning, PLANS.md proof).
+probed cell directories (test_ivf_indexed_partition_pruning proves it).
 """
 
 from __future__ import annotations

@@ -942,10 +942,14 @@ def fuzzy_dup_pairs(
     short keys — bounded by the short-key length histogram, which a
     title/URL domain keeps tiny. Every candidate is verified with
     exact ``levenshtein`` before emission, so both lanes are
-    precision-exact; ``max_gram_df`` drops stop-grams (postings in
-    more than that many keys) before the join — the jaccard_pairs
-    scale guard, trading recall on keys whose ONLY shared grams are
-    corpus-universal boilerplate.
+    precision-exact. Recall is not: postings pair the i-th occurrence
+    of a repeated gram with the other key's i-th occurrence, which can
+    miss a true ``ed <= k`` pair whose corresponding occurrences sit
+    more than ``k`` positions apart (1 of 284 pairs on the benchmark
+    corpus; the oracle mirrors the miss). ``max_gram_df`` drops
+    stop-grams (postings in more than that many keys) before the
+    join — the jaccard_pairs scale guard, trading recall on keys whose
+    ONLY shared grams are corpus-universal boilerplate.
 
     Scale posture: one (id, gram) window for occurrence indexes
     (per-task state bounded by key length), one posting self-join with

@@ -218,16 +218,16 @@ def ivf_knn_join(
     cells across all queries are collected to the driver first — a
     tiny aggregation bounded by ``num_cells`` values by construction —
     and pushed as ``cell IN (...)`` onto the partitioned index scan, so
-    unprobed directories are skipped at planning time (verify:
-    PLANS.md shows ``PartitionFilters`` for this path, the same proof
-    as ``ivf_topk_indexed``).
+    unprobed directories are skipped at planning time (proof:
+    ``tests/test_plan_budgets.py::test_ivf_knn_join_prunes_to_literal_cells``).
 
     Skew: the candidate equi-join key has ≤ ``num_cells`` distinct
     values, so when BOTH sides are large (no broadcast) a hot cell
     concentrates in one task. Two mitigations, pick one: (a) default —
     the join is a plain shuffle join, so AQE's skew-join splits the
-    oversized partition at runtime (session default on; PLANS.md
-    carries the ``skew=true`` proof on a synthetic hot cell); (b)
+    oversized partition at runtime (session default on; the
+    ``skew=true`` proof on a synthetic hot cell is
+    ``tests/test_plan_budgets.py::test_ivf_knn_join_splits_hot_cell``); (b)
     ``salt=s`` — explicit two-sided salting: index rows carry
     ``pmod(xxhash64(id), s)``, each query-probe row fans out to all
     ``s`` salt lanes, and the join key becomes ``(cell, _salt)`` — a
@@ -570,6 +570,40 @@ _ARROW_ASSIGN_MIN_CELLS = 8
 _ARROW_PROBE_MIN_CELLS = 64
 
 
+def _dense_rows(vs: pd.Series, dim: int) -> np.ndarray:
+    """``(rows, dim)`` matrix of an Arrow vector batch; missing/NULL → NaN."""
+    arr = np.full((len(vs), dim), np.nan)
+    for i, vec in enumerate(vs):
+        if vec is None:
+            continue
+        a = np.asarray(vec, dtype=np.float64)[:dim]
+        arr[i, : len(a)] = a
+    return arr
+
+
+def _micro_sq_l2(arr: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """``(rows, centroids)`` kernel twin of ``_sq_l2_micros``: per-term
+    ``floor((a-b)²·1e6+0.5)``, NaN terms 0, summed left to right in
+    float64 — exact, with no int64 astype per term, only below 2^53.
+    The terms are non-negative, so the final max bounds every partial
+    sum (unit-scale vectors × dim ≤ 1e3 stay near 1e10)."""
+    acc = np.zeros((arr.shape[0], C.shape[0]))
+    for j in range(C.shape[1]):
+        d = arr[:, j][:, None] - C[None, :, j]
+        d *= d
+        np.nan_to_num(d, copy=False)
+        d *= 1e6
+        d += 0.5
+        np.floor(d, out=d)
+        acc += d
+    if acc.size and acc.max() >= 2**53:
+        raise ValueError(
+            "integer-micro squared L2 distance reached 2**53, where float64 "
+            "sums stop being exact; rescale the vectors toward unit scale"
+        )
+    return acc
+
+
 def _lloyd_assign(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """``(cell, _v)`` Lloyd assignment of ``base._v`` to the nearest
     driver-literal centroid — expression form for small centroid sets,
@@ -580,35 +614,11 @@ def _lloyd_assign(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
             _nearest_centroid(F.col("_v"), centroids).alias("cell"), "_v"
         )
     C = np.asarray(centroids, dtype=np.float64)
-    k, dim = C.shape
+    dim = C.shape[1]
 
     @F.pandas_udf("int")
     def cell_of(vs: pd.Series) -> pd.Series:
-        arr = np.full((len(vs), dim), np.nan)
-        for i, vec in enumerate(vs):
-            if vec is None:
-                continue
-            a = np.asarray(vec, dtype=np.float64)[:dim]
-            arr[i, : len(a)] = a
-        acc = np.zeros((len(vs), k))
-        for j in range(dim):
-            d = arr[:, j][:, None] - C[None, :, j]
-            d *= d
-            # NaN terms = missing/NULL elements: contribute 0, the
-            # zip_with coalesce convention
-            np.nan_to_num(d, copy=False)
-            # per-term integer micros (_sq_l2_micros): d*1e6 and +0.5
-            # are the same IEEE double ops as the expression form and
-            # floor is exact. The floored terms are integer-VALUED
-            # doubles; accumulating them in float64 is exact while the
-            # running total stays < 2^53 (term ≤ ~1.6e7 micros for
-            # unit-scale embeddings × dim ≤ 1e3 → ~1e10), so the sums
-            # equal the expression path's long sums without paying an
-            # int64 astype per (row × centroid × dim) term.
-            d *= 1e6
-            d += 0.5
-            np.floor(d, out=d)
-            acc += d
+        acc = _micro_sq_l2(_dense_rows(vs, dim), C)
         return pd.Series(np.argmin(acc, axis=1).astype("int32"))
 
     return base.select(cell_of("_v").alias("cell"), "_v")
@@ -1046,8 +1056,8 @@ def _pq_codes_arrow(
     ``array<int>`` of per-subspace nearest-code indexes, arithmetic
     identical to the ``nearest_centroid_struct`` expression form
     (per-term ``floor((a-b)²·1e6+0.5)`` with missing/NULL elements
-    contributing 0, int64 accumulation — exact, so parity with the
-    expression path and the SQL oracles is structural; first-index
+    contributing 0, exact accumulation in ``_micro_sq_l2``, so parity
+    with the expression path and the SQL oracles is structural; first-index
     argmin) — parity-tested against the expression path. The
     expression form spends seconds of Janino compilation on
     ``m·codes_per_sub`` fold expressions per projection and interprets
@@ -1059,26 +1069,10 @@ def _pq_codes_arrow(
 
     @F.pandas_udf("array<int>")
     def codes_of(vs: pd.Series) -> pd.Series:
-        arr = np.full((len(vs), dim), np.nan)
-        for i, vec in enumerate(vs):
-            if vec is None:
-                continue
-            a = np.asarray(vec, dtype=np.float64)[:dim]
-            arr[i, : len(a)] = a
+        arr = _dense_rows(vs, dim)
         out = np.empty((len(vs), len(bounds)), dtype=np.int32)
         for s, (st, w) in enumerate(bounds):
-            C = mats[s]
-            # float64 accumulation of integer-valued floored micros is
-            # exact below 2^53 — see _lloyd_assign's kernel note
-            acc = np.zeros((len(vs), C.shape[0]))
-            for j in range(w):
-                d = arr[:, st - 1 + j][:, None] - C[None, :, j]
-                d *= d
-                np.nan_to_num(d, copy=False)
-                d *= 1e6
-                d += 0.5
-                np.floor(d, out=d)
-                acc += d
+            acc = _micro_sq_l2(arr[:, st - 1 : st - 1 + w], mats[s])
             out[:, s] = np.argmin(acc, axis=1)
         return pd.Series(list(out))
 
@@ -1092,33 +1086,18 @@ def _cell_dist_arrow(
     Arrow kernel — the kernel twin of ``nearest_centroid_struct`` for
     consumers that need the winning DISTANCE too (pruning). Identical
     integer-micro arithmetic (floored micro terms summed exactly in
-    float64, see the ``_lloyd_assign`` kernel note), first-index
-    argmin; missing/NULL ELEMENTS contribute 0 — the per-term coalesce
+    float64, see ``_micro_sq_l2``), first-index argmin; missing/NULL
+    ELEMENTS contribute 0 — the per-term coalesce
     convention. A wholly-NULL vector mirrors the expression form
     exactly: cell 0 with a NULL distance (``F.aggregate`` over a NULL
     array is NULL)."""
     C = np.asarray(centroids, dtype=np.float64)
-    k, dim = C.shape
+    dim = C.shape[1]
 
     @F.pandas_udf("struct<d: long, i: int>")
     def cell_dist_of(vs: pd.Series) -> pd.DataFrame:
-        arr = np.full((len(vs), dim), np.nan)
-        null_row = np.zeros(len(vs), dtype=bool)
-        for i, vec in enumerate(vs):
-            if vec is None:
-                null_row[i] = True
-                continue
-            a = np.asarray(vec, dtype=np.float64)[:dim]
-            arr[i, : len(a)] = a
-        acc = np.zeros((len(vs), k))
-        for j in range(dim):
-            d = arr[:, j][:, None] - C[None, :, j]
-            d *= d
-            np.nan_to_num(d, copy=False)
-            d *= 1e6
-            d += 0.5
-            np.floor(d, out=d)
-            acc += d
+        null_row = np.array([vec is None for vec in vs], dtype=bool)
+        acc = _micro_sq_l2(_dense_rows(vs, dim), C)
         best = np.argmin(acc, axis=1)
         dvals = pd.array(
             acc[np.arange(len(vs)), best].astype(np.int64), dtype="Int64"
@@ -1147,21 +1126,7 @@ def _probe_cells_arrow(
 
     @F.pandas_udf("array<int>")
     def probes_of(vs: pd.Series) -> pd.Series:
-        arr = np.full((len(vs), dim), np.nan)
-        for i, vec in enumerate(vs):
-            if vec is None:
-                continue
-            a = np.asarray(vec, dtype=np.float64)[:dim]
-            arr[i, : len(a)] = a
-        acc = np.zeros((len(vs), k))
-        for j in range(dim):
-            d = arr[:, j][:, None] - C[None, :, j]
-            d *= d
-            np.nan_to_num(d, copy=False)
-            d *= 1e6
-            d += 0.5
-            np.floor(d, out=d)
-            acc += d
+        acc = _micro_sq_l2(_dense_rows(vs, dim), C)
         out = []
         for r in range(len(vs)):
             order = np.lexsort((cells, acc[r]))[:n_probe]

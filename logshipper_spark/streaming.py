@@ -54,6 +54,12 @@ def _stream_key(path: str) -> str:
     return os.path.abspath(path)
 
 
+def _stream_run_id(checkpoint_dir: str) -> str:
+    """The run id of the logical stream that owns ``checkpoint_dir``."""
+    digest = hashlib.sha256(_stream_key(checkpoint_dir).encode()).hexdigest()
+    return f"stream-{digest[:12]}"
+
+
 def _claim_stream_dir(
     spark: SparkSession, state_dir: str, checkpoint_dir: str
 ) -> str:
@@ -71,8 +77,7 @@ def _claim_stream_dir(
     to parquet directory listings."""
     from .datapipe.compaction import _exists
 
-    digest = hashlib.sha256(_stream_key(checkpoint_dir).encode()).hexdigest()
-    run_id = f"stream-{digest[:12]}"
+    run_id = _stream_run_id(checkpoint_dir)
     # migration: before the RFC-3986 scheme fix, a RELATIVE checkpoint
     # path containing a colon (e.g. ``ckpt:v2/cp``) hashed VERBATIM;
     # it now abspaths, so a restart over pre-fix state would derive a
@@ -153,8 +158,7 @@ def run_stream(
         # first epochs. Scheme-prefixed paths hash VERBATIM
         # (_stream_key) — including single-slash Hadoop forms like
         # file:/x that a '://' test would miss.
-        digest = hashlib.sha256(_stream_key(checkpoint_dir).encode()).hexdigest()
-        run_id = f"stream-{digest[:12]}"
+        run_id = _stream_run_id(checkpoint_dir)
     rules = rules or gen.routing_rules()
     # per-run constants built once, not per micro-batch: the lookup
     # dims and the committed-batch set (one lineage scan at start; this

@@ -2942,6 +2942,28 @@ def test_group_centroids_exact(spark):
             assert dbl[g][i] == exp
 
 
+def test_arrow_kernels_reject_micro_sums_past_2_53(spark):
+    """A vector of magnitude ~1e5 puts one micro term near 1e16, past
+    the 2^53 float64 exactness bound: every Arrow kernel must raise."""
+    from logshipper_spark.datapipe import similarity
+
+    cents = [[float(i), 0.0] for i in range(similarity._ARROW_ASSIGN_MIN_CELLS)]
+    df = spark.createDataFrame(
+        [([0.5, 0.5],), ([1e5, 0.0],)], "_v array<double>"
+    )
+    kernels = [
+        lambda: similarity._lloyd_assign(df, cents),
+        lambda: df.select(similarity._pq_codes_arrow("_v", [cents])),
+        lambda: df.select(similarity._cell_dist_arrow("_v", cents)),
+        lambda: df.select(
+            similarity._probe_cells_arrow("_v", dict(enumerate(cents)), 2)
+        ),
+    ]
+    for build in kernels:
+        with pytest.raises(Exception, match=r"2\*\*53"):
+            build().collect()
+
+
 def test_cell_dist_and_probe_kernels_match_expression(spark):
     """Round-5 kernel twins: _cell_dist_arrow (struct d+i) and
     _probe_cells_arrow (tie-broken top-n_probe) equal the expression

@@ -26,7 +26,8 @@ quality; recall then climbs with n_probe toward 1.0 at n_probe=cells.
 
 All driver-side loops here iterate over the QUERY set (~50), never the
 corpus; each query runs the same pruned plans a user would
-(`similarity.py` — see PLANS.md for the shuffle/pruning audit).
+(`similarity.py`; `tests/test_plan_budgets.py` and the ivf_topk_indexed /
+ivf_pq_topk tests in `tests/test_datapipe.py` pin their shuffles and pruning).
 """
 
 from __future__ import annotations

@@ -18,8 +18,8 @@ always dominate one.
 
 The injections are a Q*(R+P)-row driver-side list broadcast-joined
 onto the corpus (tiny); bm25_topk itself runs its production plan
-(see PLANS.md). Prints one markdown table (for BASELINE.md) and one
-JSON line.
+(`tests/test_plan_budgets.py::test_plan_budget[textstats.bm25_topk]`).
+Prints one markdown table (for BASELINE.md) and one JSON line.
 """
 
 from __future__ import annotations

@@ -42,8 +42,9 @@ near-zero log-ratios.
 
 The augmentation is a pure column expression (no driver-side list —
 planted docs can number in the thousands at sf0.1); fit/score/select
-run their production plans (see PLANS.md). Prints one markdown table
-(for BASELINE.md) and one JSON line.
+run their production plans
+(`tests/test_plan_budgets.py::test_plan_budget[dsir.dsir_select]`).
+Prints one markdown table (for BASELINE.md) and one JSON line.
 """
 
 from __future__ import annotations
