@@ -57,18 +57,17 @@ def main(argv: list[str] | None = None) -> int:
 
     batch_run_id = args.run_id or "job"
     if not args.stream:
-        # foreign-run guard, same rule as streaming.run_stream (which
-        # guards itself): batch outputs are keyed by batch_id alone, so
-        # a different --run-id over a reused out dir would silently
-        # clobber the other run's committed sink partitions and lineage
-        runs = pipeline.lineage_runs(spark, args.out)
-        foreign = sorted(set(runs) - {batch_run_id})
-        if foreign:
-            ap.error(
-                f"--out {args.out!r} already holds lineage from run(s) "
-                f"{foreign}; an output dir belongs to ONE logical run — "
-                f"use a fresh --out or the original --run-id"
-            )
+        # same run-ownership rule as streaming.run_stream (which claims
+        # its own out dir); --config runs are batches too, so they skip
+        # a committed batch id like any other
+        try:
+            done = pipeline.claim_out_dir(spark, args.out, batch_run_id)
+        except ValueError as e:
+            ap.error(str(e))
+        if args.batch_id in done:
+            print(json.dumps({"mode": "batch", "batch_id": args.batch_id,
+                              "skipped": "already committed"}))
+            return 0
     if args.config:
         cfg = cfgmod.load_config(args.config)
         summary = cfgmod.run_from_config(
@@ -97,10 +96,6 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("one of --input / --generate is required")
         return 2
 
-    if args.batch_id in runs.get(batch_run_id, set()):
-        print(json.dumps({"mode": "batch", "batch_id": args.batch_id,
-                          "skipped": "already committed"}))
-        return 0
     summary = pipeline.run_batch(
         spark, tx, args.out, run_id=batch_run_id, batch_id=args.batch_id
     )

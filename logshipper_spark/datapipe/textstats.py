@@ -51,11 +51,6 @@ def stopword_hits_arr(toks_lower: Column, lang: str) -> Column:
     return F.size(F.filter(toks_lower, lambda t: F.array_contains(stop, t)))
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    """stopword_hits_arr over tokens(lower(text))."""
-    return stopword_hits_arr(tokens(F.lower(text)), lang)
-
-
 def quality_score_arr(text: Column, toks_lower: Column) -> Column:
     """quality_score with a shared lowercased token array (token COUNT
     is case-insensitive, so counts off ``toks_lower`` equal the

@@ -269,11 +269,26 @@ def completed_batches(
     return {b for batches in runs.values() for b in batches}
 
 
+def claim_out_dir(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
+    """Claim ``out_dir`` for one logical run: batch outputs are keyed by
+    batch_id alone, so a second run would OVERWRITE the first run's
+    ``batch_id=N`` partitions. Raises ``ValueError`` on another run's
+    lineage; otherwise returns ``run_id``'s committed batches."""
+    runs = lineage_runs(spark, out_dir)
+    foreign = sorted(set(runs) - {run_id})
+    if foreign:
+        raise ValueError(
+            f"out_dir {out_dir!r} already holds lineage from run(s) "
+            f"{foreign}; an output dir belongs to ONE logical stream or "
+            f"batch run — use a fresh out_dir, or resume the original "
+            f"run with its checkpoint/run_id"
+        )
+    return runs.get(run_id, set())
+
+
 def lineage_runs(spark: SparkSession, out_dir: str) -> dict[str, set[int]]:
     """Committed batches per run_id — one lineage scan serving both the
-    resume-skip set and the foreign-run guard (batch outputs are keyed
-    by batch_id alone, so two logical runs sharing an out_dir would
-    clobber each other's partitions; callers refuse that loudly)."""
+    resume-skip set and the foreign-run guard (``claim_out_dir``)."""
     path = os.path.join(out_dir, "lineage")
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())

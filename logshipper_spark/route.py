@@ -5,15 +5,8 @@ internal/app/app.go:299-312, internal/config/validate.go:25-34); a
 sink consumes everything its transform produces. Here routing is
 data-driven: each sink declares a SQL predicate over the normalized
 columns; a row fans out to **every** sink whose predicate matches.
-
-Two physical strategies:
-
-* ``route()`` — per-sink filtered DataFrames off one shared (cached)
-  parse result: N filtered writes, each with its own pushed-down
-  predicate. Right for writing real per-sink tables.
-* ``routed_rows()`` — single-pass fan-out: builds the array of
-  matching sinks per row and explodes it. One scan regardless of the
-  number of sinks; right for per-sink aggregate counting.
+``routed_rows()`` builds the array of matching sinks per row and
+explodes it: one scan regardless of the number of sinks.
 """
 
 from __future__ import annotations
@@ -30,11 +23,6 @@ def is_error_pattern(
     level = level if level is not None else F.col("level")
     status_code = status_code if status_code is not None else F.col("status_code")
     return (level == "error") | (status_code >= 500)
-
-
-def route(df: DataFrame, rules: list[tuple[str, str, int]]) -> dict[str, DataFrame]:
-    """Per-sink filtered views (fan-out, not switch)."""
-    return {sink: df.filter(F.expr(pred)) for sink, pred, _ in sorted(rules, key=lambda r: r[2])}
 
 
 def routed_rows(df: DataFrame, rules: list[tuple[str, str, int]]) -> DataFrame:

@@ -1,23 +1,24 @@
 """Structured Streaming wiring: the reference's long-running collector
 loop (reference: internal/pipeline/pipeline.go:38-175, bounded channels
-+ goroutines) re-expressed as a Structured Streaming query.
++ goroutines) re-expressed as Structured Streaming queries. Every query
+drains what is available when it starts, then stops (``_start``).
 
-Two modes:
+Two kinds of stream:
 
-* ``run_stream`` — `readStream` on the transcript table directory →
-  ``foreachBatch`` running the full batch pipeline (parse → enrich →
-  route fan-out → per-sink windowed aggregates) with exactly-once
-  restart semantics: Spark's checkpoint gives at-least-once batch
-  replay, and batch outputs are written under ``batch_id=N`` paths
-  (idempotent overwrite) with the lineage/counter rows committed last —
-  a replayed half-written batch simply re-commits the same result.
-  The reference has no restart story at all (process state is lost);
-  this is the north rule's addition.
+* ``foreachBatch`` with a commit: each micro-batch overwrites its own
+  ``batch_id=N`` outputs and commits LAST, so Spark's at-least-once
+  epoch replay yields exactly-once output. ``run_stream`` runs the full
+  batch pipeline and commits lineage/counter rows; the index streams
+  append a ``_commits`` marker (``_index_stream``);
+  ``streaming_asof_enrich`` pins the state epochs it read the same way.
+  The reference has no restart story at all (process state is lost).
 
-* ``streaming_sink_counts`` — the per-sink windowed aggregate as a
-  *native* streaming aggregation with an event-time watermark: late
-  turns beyond the watermark are dropped (documented delta vs the
-  reference, which only knows processing time — SURVEY.md §2.10).
+* native stateful append (``streaming_first_seen``,
+  ``streaming_exact_dedup``, ``streaming_sink_counts``,
+  ``streaming_conv_stats``): Spark keeps the dedup, window or session
+  state in the checkpoint; event-time watermarks drop late turns
+  (documented delta vs the reference, which only knows processing time
+  — SURVEY.md §2.10).
 
 Backpressure: ``maxFilesPerTrigger`` plays the reference's bounded
 channel capacity (pipeline.go:49-52).
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import gen, pipeline, route
+from .datapipe import compaction
 from .schemas import DEFAULT_INGEST_TS, TRANSCRIPT_SCHEMA
 
 
@@ -75,8 +77,6 @@ def _claim_stream_dir(
     pre-guard directory (markers but no ``_stream_id``) is adopted by
     the first claimer. The underscore prefix keeps the marker invisible
     to parquet directory listings."""
-    from .datapipe.compaction import _exists
-
     run_id = _stream_run_id(checkpoint_dir)
     # migration: before the RFC-3986 scheme fix, a RELATIVE checkpoint
     # path containing a colon (e.g. ``ckpt:v2/cp``) hashed VERBATIM;
@@ -87,7 +87,7 @@ def _claim_stream_dir(
     legacy_digest = hashlib.sha256(checkpoint_dir.encode()).hexdigest()
     legacy_run_id = f"stream-{legacy_digest[:12]}"
     marker = os.path.join(state_dir, "_stream_id")
-    if _exists(spark, marker):
+    if compaction._exists(spark, marker):
         owner = spark.read.schema("run_id string").parquet(marker).head()
         if owner is not None and owner["run_id"] == legacy_run_id:
             return legacy_run_id
@@ -118,6 +118,86 @@ def read_transcript_stream(
     return reader.parquet(input_dir)
 
 
+def _start(
+    frame: DataFrame,
+    checkpoint_dir: str,
+    foreach=None,
+    path: str | None = None,
+):
+    """Start ``frame`` as a query that drains what is available and
+    stops: ``foreachBatch(foreach)`` in update mode, or a parquet append
+    at ``path`` (the native stateful streams)."""
+    writer = frame.writeStream.option("checkpointLocation", checkpoint_dir)
+    if foreach is not None:
+        writer = writer.foreachBatch(foreach).outputMode("update")
+    else:
+        writer = writer.format("parquet").option("path", path).outputMode("append")
+    return writer.trigger(availableNow=True).start()
+
+
+def _index_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    index_dir: str,
+    checkpoint_dir: str,
+    chaos,
+    body,
+):
+    """The commit protocol of the index streams. ``body(batch_df,
+    batch_id, committed, comp_state, keep)`` does one epoch's work: it
+    overwrites the epoch's ``batch_id=N`` output and index partitions,
+    reads the index only at the ``committed`` batch ids, and persists
+    each frame it reuses through ``keep(df)``.
+
+    The commit marker appends LAST, after ``body`` returns, and a
+    replayed batch reads the index restricted to COMMITTED batch ids —
+    a crash between the index write and the marker replays cleanly
+    because the half-written partition is invisible to the dedup join
+    and gets overwritten. ``chaos`` (tests): called with the batch id
+    after commit but before Spark's checkpoint records the epoch — the
+    crash-in-the-commit-gap drill."""
+    # the index belongs to ONE logical stream: Spark restarts batch ids
+    # at 0 per checkpoint, so a new checkpoint over an accumulated index
+    # would silently skip its first epochs via the old markers
+    _claim_stream_dir(spark, index_dir, checkpoint_dir)
+    # one _commits + _compaction scan at stream start: this process is
+    # the only marker writer afterwards (run_stream's lineage pattern),
+    # so the locally-maintained set stays exact and each epoch pays
+    # zero extra scans/collects of tables that grow one row per batch
+    # forever. Stale compaction state is still a CORRECT view (the
+    # pre-compaction epoch + full tail); vacuum requires a quiesced
+    # stream anyway (vacuum_index docstring).
+    committed = compaction.committed_batches(spark, index_dir)
+    comp_state = compaction.compaction_state(spark, index_dir)
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id in committed:
+            return
+        # persisted frames release in the finally: a mid-batch failure
+        # otherwise leaks the cached blocks for the session's lifetime
+        # (the streaming query replays the batch with FRESH persists)
+        cached: list[DataFrame] = []
+
+        def keep(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
+
+        try:
+            body(batch_df, batch_id, committed, comp_state, keep)
+            # marker LAST — the restart point
+            compaction.append_commit_marker(spark, index_dir, batch_id)
+            committed.add(batch_id)
+        finally:
+            while cached:
+                cached.pop().unpersist()
+        if chaos is not None:
+            chaos(batch_id)
+
+    stream = spark.readStream.schema(schema).parquet(input_dir)
+    return _start(stream, checkpoint_dir, foreach=process_batch)
+
+
 def run_stream(
     spark: SparkSession,
     input_dir: str,
@@ -127,13 +207,10 @@ def run_stream(
     ingest_ts: str = DEFAULT_INGEST_TS,
     rules: list[tuple[str, str, int]] | None = None,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
     chaos=None,
 ):
-    """Start (or resume) the streaming pipeline. With
-    ``available_now=True`` the query drains all currently-available
-    input and stops — the batch-oriented test/benchmark mode; a
-    production run would use a continuous trigger instead.
+    """Start (or resume) the streaming pipeline; the query drains all
+    currently-available input and stops.
 
     Restart semantics: Spark's streaming checkpoint tracks which input
     files belong to which epoch; on restart, finished epochs are not
@@ -168,20 +245,7 @@ def run_stream(
     # that collect (and the roles broadcast) runs no Spark job.
     lookup_roles = gen.lookup_roles(spark)
     lookup_hosts = gen.lookup_hosts(spark)
-    runs = pipeline.lineage_runs(spark, out_dir)
-    foreign = sorted(set(runs) - {run_id})
-    if foreign:
-        # batch outputs are keyed by batch_id alone — a second logical
-        # stream over the same out_dir would OVERWRITE the first run's
-        # batch_id=N partitions (and with a shared run_id would
-        # silently SKIP its own first epochs). Refuse loudly.
-        raise ValueError(
-            f"out_dir {out_dir!r} already holds lineage from run(s) "
-            f"{foreign}; an output dir belongs to ONE logical stream — "
-            f"use a fresh out_dir, or resume the original stream with "
-            f"its checkpoint/run_id"
-        )
-    done = runs.get(run_id, set())
+    done = pipeline.claim_out_dir(spark, out_dir, run_id)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # epoch replay after a crash-between-commit: outputs are
@@ -205,14 +269,7 @@ def run_stream(
             chaos(batch_id)
 
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, foreach=process_batch)
 
 
 def streaming_first_seen(
@@ -222,7 +279,6 @@ def streaming_first_seen(
     checkpoint_dir: str,
     rules: list[tuple[str, str, int]] | None = None,
     ingest_ts: str = DEFAULT_INGEST_TS,
-    available_now: bool = True,
     ttl: str | None = None,
 ):
     """New-edge detection as a *native* stateful stream (reference:
@@ -263,15 +319,7 @@ def streaming_first_seen(
         )
     else:
         edges = edges.dropDuplicates(["src", "dst", "op"])
-    writer = (
-        edges.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(edges, checkpoint_dir, path=out_dir)
 
 
 def streaming_exact_dedup(
@@ -283,7 +331,6 @@ def streaming_exact_dedup(
     text_col: str = "text",
     ts_col: str = "ts",
     ttl: str = "1 hour",
-    available_now: bool = True,
 ):
     """Streaming exact dedup for training-data ingestion: documents
     arriving as parquet files are emitted once per distinct text within
@@ -323,31 +370,7 @@ def streaming_exact_dedup(
         .dropDuplicatesWithinWatermark(["_h0", "_h1"])
         .drop("_h0", "_h1")
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def near_dedup_committed(spark: SparkSession, index_dir: str) -> set[int]:
-    """Batch ids whose near-dedup commit marker landed — the index
-    partitions a replayed batch may trust (its OWN half-written
-    partition must never count, or every replayed doc would look like
-    a near-dup of itself). Only the path-missing case (no marker yet)
-    yields the empty set; a transient read error PROPAGATES and fails
-    the batch — failing open here would silently disable the dedup
-    filter and pollute the index with duplicates.
-
-    Delegates to ``datapipe.compaction.committed_batches`` — the marker
-    protocol is shared with the compaction layer."""
-    from .datapipe import compaction
-
-    return compaction.committed_batches(spark, index_dir)
+    return _start(deduped, checkpoint_dir, path=out_dir)
 
 
 def streaming_near_dedup(
@@ -363,7 +386,6 @@ def streaming_near_dedup(
     k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    available_now: bool = True,
     chaos=None,
 ):
     """Streaming NEAR-dup dedup for continuous-crawl ingestion: each
@@ -376,123 +398,76 @@ def streaming_near_dedup(
     appended to the index as ``batch_id=N`` partitions, so the index is
     exactly the kept corpus's near-dup state.
 
-    Exactly-once: every per-batch write is an idempotent overwrite of
-    its own ``batch_id=N`` directory, the commit marker appends LAST,
-    and a replayed batch reads the index restricted to COMMITTED batch
-    ids — a crash between the index write and the marker replays
-    cleanly because the half-written partition is invisible to the
-    dedup join and gets overwritten. ``chaos`` (tests): called with the
-    batch id after commit but before Spark's checkpoint records the
-    epoch — the crash-in-the-commit-gap drill.
+    Exactly-once: the ``_index_stream`` commit protocol — idempotent
+    per-batch ``batch_id=N`` overwrites, the commit marker appended
+    LAST, replays that read only COMMITTED index partitions. ``chaos``
+    (tests) fires after commit, before the checkpoint epoch.
 
     State posture at 100 TB: the index carries ~(num_hashes × 8 +
     bands × ~20) bytes per KEPT document — a small constant fraction of
     the corpus, growing only with what survives; per-batch work is the
     bounded band equi-join, never index × batch."""
-    import os
-
-    from .datapipe import compaction
     from .datapipe import dedup as ddp
 
-    # the index belongs to ONE logical stream: Spark restarts batch ids
-    # at 0 per checkpoint, so a new checkpoint over an accumulated index
-    # would silently skip its first epochs via the old markers
-    _claim_stream_dir(spark, index_dir, checkpoint_dir)
-    # one _commits + _compaction scan at stream start: this process is
-    # the only marker writer afterwards (run_stream's lineage pattern),
-    # so the locally-maintained set stays exact and each epoch pays
-    # zero extra scans/collects of tables that grow one row per batch
-    # forever. Stale compaction state is still a CORRECT view (the
-    # pre-compaction epoch + full tail); vacuum requires a quiesced
-    # stream anyway (vacuum_index docstring).
-    committed = near_dedup_committed(spark, index_dir)
-    comp_state = compaction.compaction_state(spark, index_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed:
-            return
-        # persisted frames release in the finally: a mid-batch failure
-        # otherwise leaks the cached blocks for the session's lifetime
-        # (the streaming query replays the batch with FRESH persists)
-        cached: list[DataFrame] = []
-        try:
-            # ONE signature computation per batch: the persisted frame
-            # serves the index join, the batch-internal pair search, and
-            # the index append
-            sigs = batch_df.select(
-                F.col(id_col),
-                ddp.minhash_signature(F.col(text_col), k, num_hashes).alias("sig"),
-            ).persist()
-            cached.append(sigs)
-            sigs.count()
-            # (a) cross-snapshot drops vs the committed live view (epoch
-            # snapshot + committed batch tail — compaction/vacuum
-            # transparent, datapipe.compaction)
-            survivors = batch_df
-            if committed:
-                idx_sigs, idx_bands = compaction.read_minhash_index(
-                    spark, index_dir, id_col=id_col,
-                    committed=committed, state=comp_state,
-                )
-                idx_sigs = idx_sigs.withColumnRenamed(id_col, "doc_id")
-                idx_bands = idx_bands.withColumnRenamed(id_col, "doc_id")
-                survivors = ddp.near_dedup_against(
-                    survivors,
-                    idx_sigs,
-                    idx_bands,
-                    text_col=text_col,
-                    id_col=id_col,
-                    k=k,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                    threshold=threshold,
-                    sigs_df=sigs,
-                )
-            # (b) batch-internal losers: any doc with a lower-id
-            # near-dup — pairs come from the ALREADY-persisted
-            # signatures, not a second shingle+hash pass over the batch
-            pairs = ddp.minhash_pairs_from_sigs(
-                sigs.select(F.col(id_col).alias("doc_id"), "sig"),
-                num_hashes,
-                bands,
-                threshold,
+    def body(batch_df, batch_id, committed, comp_state, keep) -> None:
+        # ONE signature computation per batch: the persisted frame
+        # serves the index join, the batch-internal pair search, and
+        # the index append
+        sigs = batch_df.select(
+            F.col(id_col),
+            ddp.minhash_signature(F.col(text_col), k, num_hashes).alias("sig"),
+        )
+        keep(sigs).count()
+        # (a) cross-snapshot drops vs the committed live view (epoch
+        # snapshot + committed batch tail — compaction/vacuum
+        # transparent, datapipe.compaction)
+        survivors = batch_df
+        if committed:
+            idx_sigs, idx_bands = compaction.read_minhash_index(
+                spark, index_dir, id_col=id_col,
+                committed=committed, state=comp_state,
             )
-            losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-            survivors = survivors.join(losers, id_col, "left_anti").persist()
-            cached.append(survivors)
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={batch_id}")
+            idx_sigs = idx_sigs.withColumnRenamed(id_col, "doc_id")
+            idx_bands = idx_bands.withColumnRenamed(id_col, "doc_id")
+            survivors = ddp.near_dedup_against(
+                survivors,
+                idx_sigs,
+                idx_bands,
+                text_col=text_col,
+                id_col=id_col,
+                k=k,
+                num_hashes=num_hashes,
+                bands=bands,
+                threshold=threshold,
+                sigs_df=sigs,
             )
-            kept_sigs = sigs.join(
-                survivors.select(id_col), id_col
-            ).persist()
-            cached.append(kept_sigs)
-            kept_sigs.write.mode("overwrite").option(
-                "compression", "zstd"
-            ).parquet(os.path.join(index_dir, "sigs", f"batch_id={batch_id}"))
-            ddp.banded_buckets(
-                kept_sigs.withColumnRenamed(id_col, "doc_id"), num_hashes, bands
-            ).withColumnRenamed("doc_id", id_col).write.mode("overwrite").option(
-                "compression", "zstd"
-            ).parquet(os.path.join(index_dir, "bands", f"batch_id={batch_id}"))
-            # marker LAST — the restart point
-            compaction.append_commit_marker(spark, index_dir, batch_id)
-            committed.add(batch_id)
-        finally:
-            while cached:
-                cached.pop().unpersist()
-        if chaos is not None:
-            chaos(batch_id)
+        # (b) batch-internal losers: any doc with a lower-id near-dup —
+        # pairs come from the ALREADY-persisted signatures, not a
+        # second shingle+hash pass over the batch
+        pairs = ddp.minhash_pairs_from_sigs(
+            sigs.select(F.col(id_col).alias("doc_id"), "sig"),
+            num_hashes,
+            bands,
+            threshold,
+        )
+        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+        survivors = keep(survivors.join(losers, id_col, "left_anti"))
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch_id={batch_id}")
+        )
+        kept_sigs = keep(sigs.join(survivors.select(id_col), id_col))
+        kept_sigs.write.mode("overwrite").option(
+            "compression", "zstd"
+        ).parquet(os.path.join(index_dir, "sigs", f"batch_id={batch_id}"))
+        ddp.banded_buckets(
+            kept_sigs.withColumnRenamed(id_col, "doc_id"), num_hashes, bands
+        ).withColumnRenamed("doc_id", id_col).write.mode("overwrite").option(
+            "compression", "zstd"
+        ).parquet(os.path.join(index_dir, "bands", f"batch_id={batch_id}"))
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _index_stream(
+        spark, input_dir, schema, index_dir, checkpoint_dir, chaos, body
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_semantic_dedup(
@@ -506,7 +481,6 @@ def streaming_semantic_dedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.95,
-    available_now: bool = True,
     chaos=None,
 ):
     """Streaming SEMANTIC dedup for continuous embedding ingestion —
@@ -525,9 +499,7 @@ def streaming_semantic_dedup(
     fixed for an index's lifetime — assignments across batches are
     only comparable under one centroid set.
 
-    Exactly-once: identical commit protocol to ``streaming_near_dedup``
-    — idempotent per-batch ``batch_id=N`` overwrites, the marker
-    appends LAST, replays read only COMMITTED partitions, so a crash in
+    Exactly-once: the ``_index_stream`` commit protocol, so a crash in
     the commit gap never lets a batch see its own half-written state.
     ``chaos`` fires after commit, before the checkpoint epoch.
 
@@ -535,90 +507,57 @@ def streaming_semantic_dedup(
     KEPT document — dim×8 bytes each, the minimum any exact-cosine
     carry state needs; per-batch work is the cell-bounded candidate
     join, never index × batch."""
-    import os
-
-    from .datapipe import compaction
     from .datapipe import semdedup as sdd
 
-    # one stream owns the index (see streaming_near_dedup)
-    _claim_stream_dir(spark, index_dir, checkpoint_dir)
-    # one commit/compaction scan at stream start, maintained locally —
-    # see streaming_near_dedup for the sole-writer argument
-    committed = near_dedup_committed(spark, index_dir)
-    comp_state = compaction.compaction_state(spark, index_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed:
-            return
-        cached: list[DataFrame] = []
-        try:
-            # ONE cell assignment per batch (the near-dup stream's
-            # one-signature rule): the LOCALLY-persisted frame serves
-            # the index probe, the batch-internal pair search, and the
-            # index append — never the module cache, whose global
-            # release would yank frames out from under concurrent
-            # queries
-            cells = sdd.assign_trained_cells(
-                batch_df, centroids, vec_col
-            ).persist()
-            cached.append(cells)
-            cells.count()
-            survivors = batch_df
-            if committed:
-                # committed live view (epoch snapshot + batch tail,
-                # both cell-partitioned — probe filters still prune
-                # directories)
-                idx = compaction.read_semantic_index(
-                    spark, index_dir, id_col=id_col, vec_col=vec_col,
-                    committed=committed, state=comp_state,
-                ).select(
-                    F.col(id_col).alias("vec_id"),
-                    F.col(vec_col).alias("embedding"),
-                    "cell",
-                )
-                survivors = sdd.semantic_dedup_against(
-                    survivors,
-                    threshold=threshold,
-                    vec_col=vec_col,
-                    id_col=id_col,
-                    index_df=idx,
-                    centroids=centroids,
-                    cells_df=cells,
-                )
-            # batch-internal losers: lower-id keeper rule, same as the
-            # near-dup stream (pairs emit id_a < id_b)
-            pairs = sdd.semantic_pairs(
-                batch_df, centroids, threshold, vec_col, id_col, cells_df=cells
+    def body(batch_df, batch_id, committed, comp_state, keep) -> None:
+        # ONE cell assignment per batch (the near-dup stream's
+        # one-signature rule): the LOCALLY-persisted frame serves the
+        # index probe, the batch-internal pair search, and the index
+        # append — never the module cache, whose global release would
+        # yank frames out from under concurrent queries
+        cells = sdd.assign_trained_cells(batch_df, centroids, vec_col)
+        keep(cells).count()
+        survivors = batch_df
+        if committed:
+            # committed live view (epoch snapshot + batch tail,
+            # both cell-partitioned — probe filters still prune
+            # directories)
+            idx = compaction.read_semantic_index(
+                spark, index_dir, id_col=id_col, vec_col=vec_col,
+                committed=committed, state=comp_state,
+            ).select(
+                F.col(id_col).alias("vec_id"),
+                F.col(vec_col).alias("embedding"),
+                "cell",
             )
-            losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-            survivors = survivors.join(losers, id_col, "left_anti").persist()
-            cached.append(survivors)
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={batch_id}")
+            survivors = sdd.semantic_dedup_against(
+                survivors,
+                threshold=threshold,
+                vec_col=vec_col,
+                id_col=id_col,
+                index_df=idx,
+                centroids=centroids,
+                cells_df=cells,
             )
-            cells.select(id_col, vec_col, "cell").join(
-                survivors.select(id_col), id_col
-            ).write.mode("overwrite").option("compression", "zstd").partitionBy(
-                "cell"
-            ).parquet(os.path.join(index_dir, "vectors", f"batch_id={batch_id}"))
-            # marker LAST — the restart point
-            compaction.append_commit_marker(spark, index_dir, batch_id)
-            committed.add(batch_id)
-        finally:
-            while cached:
-                cached.pop().unpersist()
-        if chaos is not None:
-            chaos(batch_id)
+        # batch-internal losers: lower-id keeper rule, same as the
+        # near-dup stream (pairs emit id_a < id_b)
+        pairs = sdd.semantic_pairs(
+            batch_df, centroids, threshold, vec_col, id_col, cells_df=cells
+        )
+        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+        survivors = keep(survivors.join(losers, id_col, "left_anti"))
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch_id={batch_id}")
+        )
+        cells.select(id_col, vec_col, "cell").join(
+            survivors.select(id_col), id_col
+        ).write.mode("overwrite").option("compression", "zstd").partitionBy(
+            "cell"
+        ).parquet(os.path.join(index_dir, "vectors", f"batch_id={batch_id}"))
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _index_stream(
+        spark, input_dir, schema, index_dir, checkpoint_dir, chaos, body
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_substr_screen(
@@ -633,7 +572,6 @@ def streaming_substr_screen(
     max_contamination: float = 0.8,
     w: int = 8,
     window: int = 4,
-    available_now: bool = True,
     chaos=None,
 ):
     """Streaming substring-level boilerplate screening: each
@@ -651,10 +589,9 @@ def streaming_substr_screen(
     substr_contamination, same commit protocol as
     streaming_near_dedup).
 
-    Exactly-once: idempotent overwrite of per-batch directories, commit
-    marker appended LAST, replayed batches read only COMMITTED index
-    partitions — a crash in the gap replays cleanly because the
-    half-written partition is invisible to the contamination join.
+    Exactly-once: the ``_index_stream`` commit protocol — a crash in
+    the gap replays cleanly because the half-written partition is
+    invisible to the contamination join.
 
     State posture at 100 TB: the index carries 8 bytes per distinct
     kept fingerprint (~2/(W+1) per kept token); per-batch work is one
@@ -671,99 +608,67 @@ def streaming_substr_screen(
     in both forms, so the divergence is bounded to single-micro-batch
     sibling sets and biases toward DROPPING near-boilerplate, never
     keeping it."""
-    import os
-
-    from .datapipe import compaction
     from .datapipe import substr as sub
 
-    # one stream owns the index (see streaming_near_dedup)
-    _claim_stream_dir(spark, index_dir, checkpoint_dir)
-    # one commit/compaction scan at stream start, maintained locally —
-    # see streaming_near_dedup for the sole-writer argument
-    committed = near_dedup_committed(spark, index_dir)
-    comp_state = compaction.compaction_state(spark, index_dir)
+    def body(batch_df, batch_id, committed, comp_state, keep) -> None:
+        # ONE fingerprint pass per batch: serves the contamination
+        # join, the keep filter, and the index append
+        fp = sub.fingerprint_table(batch_df, text_col, id_col, w, window)
+        keep(fp).count()
+        if committed:
+            # committed live view (compaction/vacuum transparent)
+            idx = compaction.read_fingerprint_index(
+                spark, index_dir, committed=committed, state=comp_state
+            )
+        else:
+            idx = spark.createDataFrame([], "gram_hash long")
+        # contamination vs the index AND the batch itself (the
+        # siblings' rule (b)): a fingerprint counts as seen for doc a
+        # when the index holds it OR a LOWER-id doc in this batch does —
+        # without the batch-internal lane, boilerplate duplicates
+        # arriving in ONE micro-batch all pass and the kept corpus
+        # depends on trigger boundaries. Same n_seen/n_fingerprints
+        # (+1e-9, 4 dp) convention as substr_contamination;
+        # fingerprint-less docs never drop.
+        min_holder = fp.groupBy("gram_hash").agg(
+            F.min("doc_id").alias("_minh")
+        )
+        in_idx = idx.select("gram_hash").distinct().withColumn(
+            "_ins", F.lit(1)
+        )
+        seen = (
+            (F.col("_minh") < F.col("doc_id"))
+            | F.col("_ins").isNotNull()
+        ).cast("long")
+        scored = (
+            fp.join(min_holder, "gram_hash")
+            .join(in_idx, "gram_hash", "left")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("_nfp"),
+                F.sum(seen).alias("_nseen"),
+            )
+        )
+        drop_ids = scored.filter(
+            F.round(F.col("_nseen") / F.col("_nfp") + F.lit(1e-9), 4)
+            >= max_contamination
+        ).select(F.col("doc_id").alias(id_col))
+        survivors = keep(batch_df.join(drop_ids, id_col, "left_anti"))
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch_id={batch_id}")
+        )
+        kept_fp = fp.join(
+            survivors.select(F.col(id_col).alias("doc_id")), "doc_id"
+        )
+        kept_fp.select("gram_hash").distinct().write.mode(
+            "overwrite"
+        ).option("compression", "zstd").parquet(
+            os.path.join(index_dir, "grams", f"batch_id={batch_id}")
+        )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed:
-            return
-        cached: list[DataFrame] = []
-        try:
-            # ONE fingerprint pass per batch: serves the contamination
-            # join, the keep filter, and the index append
-            fp = sub.fingerprint_table(
-                batch_df, text_col, id_col, w, window
-            ).persist()
-            cached.append(fp)
-            fp.count()
-            if committed:
-                # committed live view (compaction/vacuum transparent)
-                idx = compaction.read_fingerprint_index(
-                    spark, index_dir, committed=committed, state=comp_state
-                )
-            else:
-                idx = spark.createDataFrame([], "gram_hash long")
-            # contamination vs the index AND the batch itself (the
-            # siblings' rule (b)): a fingerprint counts as seen for
-            # doc a when the index holds it OR a LOWER-id doc in this
-            # batch does — without the batch-internal lane, boilerplate
-            # duplicates arriving in ONE micro-batch all pass and the
-            # kept corpus depends on trigger boundaries. Same
-            # n_seen/n_fingerprints (+1e-9, 4 dp) convention as
-            # substr_contamination; fingerprint-less docs never drop.
-            min_holder = fp.groupBy("gram_hash").agg(
-                F.min("doc_id").alias("_minh")
-            )
-            in_idx = idx.select("gram_hash").distinct().withColumn(
-                "_ins", F.lit(1)
-            )
-            seen = (
-                (F.col("_minh") < F.col("doc_id"))
-                | F.col("_ins").isNotNull()
-            ).cast("long")
-            scored = (
-                fp.join(min_holder, "gram_hash")
-                .join(in_idx, "gram_hash", "left")
-                .groupBy("doc_id")
-                .agg(
-                    F.count(F.lit(1)).alias("_nfp"),
-                    F.sum(seen).alias("_nseen"),
-                )
-            )
-            drop_ids = scored.filter(
-                F.round(F.col("_nseen") / F.col("_nfp") + F.lit(1e-9), 4)
-                >= max_contamination
-            ).select(F.col("doc_id").alias(id_col))
-            survivors = batch_df.join(drop_ids, id_col, "left_anti").persist()
-            cached.append(survivors)
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={batch_id}")
-            )
-            kept_fp = fp.join(
-                survivors.select(F.col(id_col).alias("doc_id")), "doc_id"
-            )
-            kept_fp.select("gram_hash").distinct().write.mode(
-                "overwrite"
-            ).option("compression", "zstd").parquet(
-                os.path.join(index_dir, "grams", f"batch_id={batch_id}")
-            )
-            # marker LAST — the restart point
-            compaction.append_commit_marker(spark, index_dir, batch_id)
-            committed.add(batch_id)
-        finally:
-            while cached:
-                cached.pop().unpersist()
-        if chaos is not None:
-            chaos(batch_id)
-
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _index_stream(
+        spark, input_dir, schema, index_dir, checkpoint_dir, chaos, body
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_sink_counts(
@@ -775,7 +680,6 @@ def streaming_sink_counts(
     window_duration: str = "1 minute",
     rules: list[tuple[str, str, int]] | None = None,
     ingest_ts: str = DEFAULT_INGEST_TS,
-    available_now: bool = True,
 ):
     """Native streaming per-sink windowed aggregate with a watermark.
 
@@ -798,15 +702,7 @@ def streaming_sink_counts(
         window_duration=window_duration,
         null_bucket=False,
     )
-    writer = (
-        counts.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(counts, checkpoint_dir, path=out_dir)
 
 
 def streaming_conv_stats(
@@ -816,8 +712,6 @@ def streaming_conv_stats(
     checkpoint_dir: str,
     watermark: str = "10 minutes",
     session_gap: str = "5 minutes",
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ):
     """Watermarked per-conversation SESSION rollup on the live
     transcript stream — the conversation-granularity analog of
@@ -840,7 +734,7 @@ def streaming_conv_stats(
     """
     from . import transcript
 
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
+    stream = read_transcript_stream(spark, input_dir)
     stats = (
         stream.withWatermark("ts", watermark)
         .groupBy(
@@ -854,15 +748,7 @@ def streaming_conv_stats(
         F.col("w.end").alias("session_end"),
         *[c for c in stats.columns if c != "w"],
     )
-    writer = (
-        stats.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stats, checkpoint_dir, path=out_dir)
 
 
 def asof_state_append(
@@ -877,12 +763,10 @@ def asof_state_append(
     to every reader and a rerun re-commits the same bytes — the same
     marker protocol as the streaming dedup indexes
     (datapipe.compaction.committed_batches)."""
-    from .datapipe.compaction import append_commit_marker
-
     rows.write.mode("overwrite").option("compression", "zstd").parquet(
         os.path.join(state_dir, f"batch_id={batch_id}")
     )
-    append_commit_marker(spark, state_dir, batch_id)
+    compaction.append_commit_marker(spark, state_dir, batch_id)
 
 
 def streaming_asof_enrich(
@@ -899,7 +783,6 @@ def streaming_asof_enrich(
     payloads: list[str] | None = None,
     tolerance_s: float | None = None,
     tiebreak: str | None = None,
-    available_now: bool = True,
     chaos=None,
 ):
     """Stream-table AS-OF enrichment — the streaming twin of
@@ -931,7 +814,6 @@ def streaming_asof_enrich(
     explicit partition paths so only pinned epochs are ever listed.
     """
     from . import temporal
-    from .datapipe.compaction import append_commit_marker, committed_batches
 
     state_fields = spark.createDataFrame([], state_schema).columns
     pins_dir = os.path.join(out_dir, "_epoch_pins")
@@ -943,7 +825,7 @@ def streaming_asof_enrich(
     # process is the sole pins writer (run_stream's lineage pattern);
     # the per-batch STATE-dir scan below stays, state has an external
     # writer (asof_state_append callers)
-    pinned_batches = committed_batches(spark, pins_dir)
+    pinned_batches = compaction.committed_batches(spark, pins_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         pin_path = os.path.join(pins_dir, f"batch_id={batch_id}")
@@ -955,12 +837,12 @@ def streaming_asof_enrich(
                 .collect()
             }
         else:
-            pinned = committed_batches(spark, state_dir)
+            pinned = compaction.committed_batches(spark, state_dir)
             spark.createDataFrame(
                 [(b,) for b in sorted(pinned)] or [], "state_batch_id long"
             ).coalesce(1).write.mode("overwrite").parquet(pin_path)
             # pin marker LAST — a crash mid-pin-write is invisible
-            append_commit_marker(spark, pins_dir, batch_id)
+            compaction.append_commit_marker(spark, pins_dir, batch_id)
             pinned_batches.add(batch_id)
         if chaos is not None:
             chaos(batch_id, "pinned")
@@ -990,11 +872,4 @@ def streaming_asof_enrich(
             chaos(batch_id, "written")
 
     stream = spark.readStream.schema(schema).parquet(input_dir)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, foreach=process_batch)

@@ -109,8 +109,3 @@ def remap(
     if case:
         out = out.withColumn(message_col, apply_case(F.col(message_col), case))
     return out
-
-
-def risk_score(anomalies: Column, error_rate: Column, avg_latency_ms: Column) -> Column:
-    """Derived risk metric (reference: internal/tui/screen1.go:105-108)."""
-    return anomalies * 2 + error_rate * 10 + avg_latency_ms / 100

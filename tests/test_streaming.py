@@ -8,9 +8,12 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from logshipper_spark import gen, pipeline, route, streaming
+from logshipper_spark.datapipe import compaction
 
 
 def _write_input(spark, path, n_turns, n_files):
@@ -229,7 +232,7 @@ def test_streaming_near_dedup(spark, tmp_path):
         r["doc_id"] for r in spark.read.schema(schema).parquet(out_dir).collect()
     )
     assert kept == [1, 3]  # 2 is the batch-internal higher-id loser
-    assert streaming.near_dedup_committed(spark, idx) == {0}
+    assert compaction.committed_batches(spark, idx) == {0}
 
     # epoch 2 after restart: exact copy of an indexed doc drops, a
     # one-token edit of an indexed doc drops (NEAR dup), fresh survives
@@ -283,7 +286,7 @@ def test_streaming_near_dedup_crash_in_commit_gap(spark, tmp_path):
         q.awaitTermination(180)
     except Exception:
         pass  # the injected crash surfaces through the stream
-    assert streaming.near_dedup_committed(spark, idx) == {0}
+    assert compaction.committed_batches(spark, idx) == {0}
 
     # restart without chaos: epoch replays, batch skips (marker), and
     # the output still holds the survivor exactly once
@@ -455,7 +458,7 @@ def test_streaming_substr_screen(spark, tmp_path):
         r["doc_id"] for r in spark.read.schema(schema).parquet(out_dir).collect()
     )
     assert kept == [1, 2]  # empty index: everything passes epoch 1
-    assert streaming.near_dedup_committed(spark, idx) == {0}
+    assert compaction.committed_batches(spark, idx) == {0}
 
     # epoch 2: a near-copy of the kept passage (mostly contaminated)
     # drops; a page quoting only a short prefix of it survives; fresh
@@ -488,7 +491,7 @@ def test_streaming_substr_screen(spark, tmp_path):
         r["doc_id"] for r in spark.read.schema(schema).parquet(out_dir).collect()
     )
     assert kept3 == kept2
-    assert streaming.near_dedup_committed(spark, idx) == {0, 1}
+    assert compaction.committed_batches(spark, idx) == {0, 1}
     # index state: survivors' fingerprints only (dropped doc 10 absent)
     n_grams = (
         spark.read.schema("gram_hash long").parquet(idx + "/grams").count()
@@ -522,7 +525,7 @@ def test_streaming_substr_screen_crash_in_commit_gap(spark, tmp_path):
         q.awaitTermination(180)
     except Exception:
         pass  # the injected crash surfaces through the stream
-    assert streaming.near_dedup_committed(spark, idx) == {0}
+    assert compaction.committed_batches(spark, idx) == {0}
 
     q2 = streaming.streaming_substr_screen(
         spark, input_dir, out_dir, ckpt, idx, schema=schema, w=4, window=3
@@ -566,7 +569,7 @@ def test_streaming_semantic_dedup(spark, tmp_path):
         r["vec_id"] for r in spark.read.schema(schema).parquet(out_dir).collect()
     )
     assert kept == [1, 3]  # 2 is the batch-internal higher-id loser
-    assert streaming.near_dedup_committed(spark, idx) == {0}
+    assert compaction.committed_batches(spark, idx) == {0}
 
     # epoch 2 after restart: a near-copy of an indexed vector drops,
     # a genuinely new direction survives
@@ -617,7 +620,7 @@ def test_streaming_semantic_dedup_crash_in_commit_gap(spark, tmp_path):
         q.awaitTermination(180)
     except Exception:
         pass  # the injected crash surfaces through the stream
-    assert streaming.near_dedup_committed(spark, idx) == {0}
+    assert compaction.committed_batches(spark, idx) == {0}
 
     q2 = streaming.streaming_semantic_dedup(
         spark, input_dir, out_dir, ckpt, idx, schema=schema,
@@ -740,38 +743,95 @@ def test_streaming_asof_enrich_pins_state_epoch(spark, tmp_path):
     assert got == {1: 1, 2: 2}
 
 
-def test_index_stream_foreign_checkpoint_refused(spark, tmp_path):
+# the three index streams, each with a one-row input it keeps:
+# (start, schema, row, extra arguments)
+_INDEX_STREAMS = {
+    "near": (
+        streaming.streaming_near_dedup,
+        "doc_id long, text string",
+        (1, "alpha beta gamma delta epsilon zeta eta theta"),
+        {},
+    ),
+    "semantic": (
+        streaming.streaming_semantic_dedup,
+        "vec_id long, embedding array<double>",
+        (1, [1.0, 0.0]),
+        {"centroids": [[1.0, 0.0]], "threshold": 0.99},
+    ),
+    "substr": (
+        streaming.streaming_substr_screen,
+        "doc_id long, text string",
+        (1, "alpha beta gamma delta epsilon zeta eta theta"),
+        {"w": 4, "window": 3},
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_INDEX_STREAMS))
+def test_index_stream_foreign_checkpoint_refused(spark, tmp_path, kind):
     """An accumulated index belongs to ONE logical stream: a second
     stream (different checkpoint) over the same index_dir must be
     refused loudly — Spark restarts batch ids at 0 per checkpoint, so
     the new stream would silently skip its first epochs via the old
     run's batch_id-keyed commit markers."""
-    import pytest
-
+    start, schema, row, kw = _INDEX_STREAMS[kind]
     input_dir = str(tmp_path / "fg_in")
     out_dir = str(tmp_path / "fg_out")
     ckpt_a = str(tmp_path / "fg_ck_a")
     idx = str(tmp_path / "fg_idx")
-    schema = "doc_id long, text string"
-    spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")], schema
-    ).coalesce(1).write.mode("append").parquet(input_dir)
-    q = streaming.streaming_near_dedup(
-        spark, input_dir, out_dir, ckpt_a, idx, schema=schema
-    )
+    spark.createDataFrame([row], schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(input_dir)
+    q = start(spark, input_dir, out_dir, ckpt_a, idx, schema=schema, **kw)
     q.awaitTermination(180)
-    assert streaming.near_dedup_committed(spark, idx) == {0}
+    assert compaction.committed_batches(spark, idx) == {0}
 
     # same checkpoint resumes fine
-    q2 = streaming.streaming_near_dedup(
-        spark, input_dir, out_dir, ckpt_a, idx, schema=schema
-    )
+    q2 = start(spark, input_dir, out_dir, ckpt_a, idx, schema=schema, **kw)
     q2.awaitTermination(180)
 
     # a DIFFERENT checkpoint over the same index is refused before any
     # batch runs
     with pytest.raises(ValueError, match="ONE logical stream"):
-        streaming.streaming_near_dedup(
+        start(
             spark, input_dir, str(tmp_path / "fg_out2"),
-            str(tmp_path / "fg_ck_b"), idx, schema=schema,
+            str(tmp_path / "fg_ck_b"), idx, schema=schema, **kw,
         )
+
+
+@pytest.mark.parametrize("kind", sorted(_INDEX_STREAMS))
+def test_index_stream_releases_kept_frames(spark, tmp_path, kind):
+    """Every frame an index stream persists for its epoch is released,
+    whether the epoch crashes in the commit gap or drains cleanly —
+    else each epoch leaks cached blocks for the session's lifetime.
+    The clean drain's epoch reads a non-empty index."""
+    start, schema, row, kw = _INDEX_STREAMS[kind]
+    jsc = spark.sparkContext._jsc
+    input_dir = str(tmp_path / "lk_in")
+    out_dir = str(tmp_path / "lk_out")
+    ckpt = str(tmp_path / "lk_ck")
+    idx = str(tmp_path / "lk_idx")
+
+    def boom(batch_id: int) -> None:
+        raise RuntimeError(f"chaos: crash after commit of batch {batch_id}")
+
+    spark.createDataFrame([row], schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(input_dir)
+    before = jsc.getPersistentRDDs().size()
+    q = start(
+        spark, input_dir, out_dir, ckpt, idx, schema=schema, chaos=boom, **kw
+    )
+    with pytest.raises(StreamingQueryException, match="chaos"):
+        q.awaitTermination(180)
+    assert jsc.getPersistentRDDs().size() == before
+
+    spark.createDataFrame([(2, row[1])], schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(input_dir)
+    before = jsc.getPersistentRDDs().size()
+    q2 = start(spark, input_dir, out_dir, ckpt, idx, schema=schema, **kw)
+    q2.awaitTermination(180)
+    assert q2.exception() is None
+    assert compaction.committed_batches(spark, idx) == {0, 1}
+    assert jsc.getPersistentRDDs().size() == before
