@@ -52,6 +52,7 @@ from logshipper_spark.datapipe import (
     tokenize,
 )
 from logshipper_spark.schemas import DEFAULT_INGEST_TS
+from logshipper_spark.session import release_held
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -1231,7 +1232,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     model, oov = lm.fit_unigram_lm(docs)
     lm.write_unigram_lm(model, UNIGRAM_LM_PATH)
-    lm.release_cached_counts()  # scoring reads the parquet back, not the fit
+    release_held()  # scoring reads the parquet back, not the fit
     back = spark.read.schema("token string, cnt long, nlp_micro long").parquet(
         UNIGRAM_LM_PATH
     )
@@ -1255,7 +1256,7 @@ def q_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     bi, tok, uni_oov, fb_oov = lm.fit_bigram_lm(docs, lam=0.7)
     lm.write_bigram_lm(bi, tok, BIGRAM_LM_PATH)
-    lm.release_cached_counts()
+    release_held()
     bi_back = spark.read.schema(
         "gram string, cnt long, c_prev long, nlp_micro long"
     ).parquet(f"{BIGRAM_LM_PATH}/bigram")
@@ -1287,7 +1288,7 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = docs.filter(F.col("source").isin("src0", "src1"))
     model, oov = dsir.fit_dsir(target, docs, num_buckets=DSIR_BUCKETS, seed=DSIR_SEED)
     dsir.write_dsir_model(model, DSIR_MODEL_PATH)
-    dsir.release_cached_models()  # the weights below read the parquet back
+    release_held()  # the weights below read the parquet back
     docs.select(
         "doc_id", dsir.tokens(F.lower(F.col("text"))).alias("_toks")
     ).select(

@@ -124,10 +124,9 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from logshipper_spark.datapipe import curate, dedup, lm, packing
-    from logshipper_spark.datapipe import substr as substr_mod
     from logshipper_spark.datapipe.compaction import _exists
     from logshipper_spark.datapipe.filters import c4_line_clean, pii_scrub
-    from logshipper_spark.session import get_spark
+    from logshipper_spark.session import get_spark, release_held
 
     spark = get_spark(app_name="logshipper-curation")
     docs = spark.read.parquet(args.docs)
@@ -221,7 +220,7 @@ def main(argv: list[str] | None = None) -> int:
         # cache — downstream stages reuse the persisted rows, not the
         # anti-join lineage
         summary["after_minhash_index"] = docs.count()
-        dedup.release_cached_signatures()
+        release_held()
 
     # 2. unigram-LM quality band (fit on the surviving snapshot)
     if args.lm_band:
@@ -244,8 +243,7 @@ def main(argv: list[str] | None = None) -> int:
         substr_dedup=args.substr_dedup,
     )
     keep.write.mode("overwrite").parquet(os.path.join(args.out, "keep_list"))
-    dedup.release_cached_signatures()  # minhash sig cache, post-action
-    curate.release_cached_frames()  # curate's shared keep-list/src
+    release_held()  # post-action: curate's keep-list/src, sigs, LM counts
     # pin the schema: an all-dropped snapshot writes an EMPTY parquet
     # dir, and schema inference on one throws (CLAUDE.md gotcha)
     kept = spark.read.schema(keep.schema).parquet(
@@ -305,7 +303,7 @@ def main(argv: list[str] | None = None) -> int:
             survivors = survivors.join(drop_ids, "doc_id", "left_anti").persist()
             pinned.append(survivors)
             summary["after_semdedup"] = survivors.count()
-            semdedup.release_cached_cells()  # post-action, like sigs
+            release_held()  # semdedup's cells, post-action
             emb_s.unpersist()
         if args.prune_permille is not None:
             emb_s = _surviving_embeddings().persist()
@@ -347,7 +345,7 @@ def main(argv: list[str] | None = None) -> int:
         survivors = survivors.join(keep_ids, "doc_id").persist()
         pinned.append(survivors)
         summary["after_dsir"] = survivors.count()
-        dsir_mod.release_cached_models()
+        release_held()
 
     # 4. size-balanced sharded corpus write (normalized text)
     if args.shard_bytes:
@@ -380,15 +378,14 @@ def main(argv: list[str] | None = None) -> int:
         pairs = dedup.minhash_lsh_pairs(docs, threshold=args.minhash_threshold)
         comps = dedup.near_dup_components(pairs)
         comps.write.mode("overwrite").parquet(os.path.join(args.out, "components"))
-        dedup.release_cached_signatures()
+        release_held()
         summary["near_dup_docs_in_components"] = spark.read.schema(
             comps.schema
         ).parquet(os.path.join(args.out, "components")).count()
 
     for frame in pinned:
         frame.unpersist()
-    lm.release_cached_counts()
-    substr_mod.release_cached_fingerprints()
+    release_held()  # whatever a stage above still holds
 
     with open(os.path.join(args.out, "summary.json"), "w") as f:
         json.dump(summary, f)

@@ -140,8 +140,8 @@ def main(argv: list[str] | None = None) -> int:
 
     from logshipper_spark import transcript
     from logshipper_spark.datapipe import curate as curate_mod
-    from logshipper_spark.datapipe import dedup, packing, sampling, tokenize
-    from logshipper_spark.session import get_spark
+    from logshipper_spark.datapipe import packing, sampling, tokenize
+    from logshipper_spark.session import get_spark, release_held
 
     spark = get_spark(app_name="logshipper-transcript-dataprep")
     # post-startup clock: scaling captures (tools/scaling.py) compare
@@ -249,8 +249,7 @@ def main(argv: list[str] | None = None) -> int:
         repetition=args.repetition,
     )
     keep = write(keep, "keep_list")
-    curate_mod.release_cached_frames()
-    dedup.release_cached_signatures()
+    release_held()
     summary["kept_docs"] = keep.count()
     mark("curate")
     survivors = keep.select("doc_id").join(rendered, "doc_id")

@@ -20,22 +20,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import hold
+
 DEFAULT_WINDOW = 100
 DEFAULT_THRESHOLD = 3.0
 DEFAULT_COOLDOWN_S = 30.0
-
-# rolling_zscore_blocked persists its prefix-sum frame (feeds both
-# sides of the rank-distance join); lazy builders cannot unpersist
-# their own intermediates — eager call sites release after the action.
-_ROLLUP_CACHE: list[DataFrame] = []
-
-
-def release_cached_rollups() -> None:
-    """Unpersist prefix frames cached by ``rolling_zscore_blocked``
-    (the module-global list — single-query-at-a-time call sites only;
-    concurrent callers pass ``cache_registry`` and drain their own)."""
-    while _ROLLUP_CACHE:
-        _ROLLUP_CACHE.pop().unpersist()
 
 
 def rolling_zscore(
@@ -85,7 +74,6 @@ def rolling_zscore_blocked(
     min_samples: int | None = None,
     threshold: float = DEFAULT_THRESHOLD,
     block_size: int = 4096,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Bounded two-phase form of ``rolling_zscore`` — the 100 TB path
     for a HOT key: the single-window form sorts a key's entire history
@@ -256,15 +244,9 @@ def rolling_zscore_blocked(
         )
     )
     # pre feeds up to three consumers (resolved rows, boundary rows,
-    # and the boundary lookup side) — persist it so the prefix
+    # and the boundary lookup side) — hold it so the prefix
     # computation doesn't run repeatedly (self-join-recompute trap).
-    # Ownership: callers running CONCURRENT queries in one session must
-    # pass their own cache_registry and unpersist it after their
-    # action — release_cached_rollups() drains the module-global list,
-    # which would yank a frame out from under another in-flight query
-    # (the hazard streaming.py's local persists document).
-    pre = pre.persist()
-    (_ROLLUP_CACHE if cache_registry is None else cache_registry).append(pre)
+    pre = hold(pre)
     # cross-block fetch ONLY for boundary rows — the first ≤ N rows of
     # each block (their r−N row lives in an earlier block). That set is
     # ~N per (key, block), so it BROADCASTS into a hash join against

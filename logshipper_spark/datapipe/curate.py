@@ -20,26 +20,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import hold, release_held
 from .dedup import dedup_key, minhash_lsh_pairs
 from .filters import c4_line_clean, html_extract, pii_scrub, repetition_stats
 from .substr import merge_spans, remove_dup_spans, substr_dup_spans
 from .textstats import quality_score_arr, tokens
 
-# curate persists frames consumed TWICE: the exact-dedup keep-list
-# feeds both the minhash signature build and the loser anti-join, and
-# the scrubbed/cleaned src feeds both substring-span detection and span
+# curate holds frames consumed TWICE: the exact-dedup keep-list feeds
+# both the minhash signature build and the loser anti-join, and the
+# scrubbed/cleaned src feeds both substring-span detection and span
 # removal — unpersisted, the upstream regex/quality/groupBy chains run
-# twice per action (the round-2 minhash self-join trap). A lazy builder
-# cannot unpersist its own intermediates; eager call sites release via
-# ``release_cached_frames()`` after their action (the
-# dedup.release_cached_signatures discipline).
-_CURATE_CACHE: list[DataFrame] = []
+# twice per action (the round-2 minhash self-join trap).
 
-
-def release_cached_frames() -> None:
-    """Unpersist shared frames cached by ``curate``."""
-    while _CURATE_CACHE:
-        _CURATE_CACHE.pop().unpersist()
+# perfbench/workloads.py imports this name; it is its only reason
+release_cached_frames = release_held
 
 
 def curate(
@@ -115,9 +109,8 @@ def curate(
         )
     if substr_dedup:
         # src is consumed by BOTH span detection and span removal —
-        # persist so the scrub/line-clean regex chains run once
-        src = src.select(F.col(id_col), F.col(text_col)).persist()
-        _CURATE_CACHE.append(src)
+        # hold so the scrub/line-clean regex chains run once
+        src = hold(src.select(F.col(id_col), F.col(text_col)))
         spans = substr_dup_spans(
             src,
             text_col,
@@ -169,10 +162,9 @@ def curate(
 
     if near_dup:
         # kept is consumed by BOTH the signature build and the anti-
-        # join's left side — persist so the quality projection and the
+        # join's left side — hold so the quality projection and the
         # 128-bit dedup groupBy run once
-        kept = kept.persist()
-        _CURATE_CACHE.append(kept)
+        kept = hold(kept)
         pairs = minhash_lsh_pairs(
             kept.select("doc_id", F.col("_text").alias("text")),
             k=minhash_k,

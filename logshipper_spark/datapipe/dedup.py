@@ -15,21 +15,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import hold, release_held
 from .similarity import floor_round
 from .textstats import tokens
 
-# signature frames cached by minhash_lsh_pairs (lazy builders cannot
-# unpersist their own intermediates — see release_cached_signatures)
-_SIG_CACHE: list[DataFrame] = []
-
-
-def release_cached_signatures() -> None:
-    """Unpersist every signature frame cached by ``minhash_lsh_pairs``.
-    Call after the terminal action of an eager pipeline (curation job,
-    bench) so long-lived sessions issuing many dedup calls don't
-    accumulate unbounded executor storage."""
-    while _SIG_CACHE:
-        _SIG_CACHE.pop().unpersist()
+# perfbench/workloads.py imports this name; it is its only reason
+release_cached_signatures = release_held
 
 
 def dedup_key(text: Column) -> Column:
@@ -203,11 +194,10 @@ def near_dedup_against(
             F.col(id_col).alias("doc_id"), F.col("sig")
         )
     else:
-        sigs = df.select(
+        sigs = hold(df.select(
             F.col(id_col).alias("doc_id"),
             minhash_signature(F.col(text_col), k, num_hashes).alias("sig"),
-        ).cache()
-        _SIG_CACHE.append(sigs)
+        ))
     new_b = banded_buckets(sigs, num_hashes, bands).select(
         F.col("doc_id").alias("_nid"), "band", "bucket"
     )
@@ -399,16 +389,11 @@ def minhash_lsh_pairs(
     # cache the signatures: the LSH self-join references them from both
     # sides, and without the cache Spark recomputes the whole
     # shingle+hash subtree twice (the dominant cost of this operator).
-    # A lazy builder cannot unpersist its own intermediate, so the
-    # cached frame is registered in _SIG_CACHE; eager call sites
-    # (jobs/run_curation.py, bench) call release_cached_signatures()
-    # after their terminal action. A 100 TB run would persist
-    # signatures to a table instead.
-    sigs = df.select(
+    # A 100 TB run would persist signatures to a table instead.
+    sigs = hold(df.select(
         F.col(id_col).alias("doc_id"),
         minhash_signature(F.col(text_col), k, num_hashes).alias("sig"),
-    ).cache()
-    _SIG_CACHE.append(sigs)
+    ))
     return minhash_pairs_from_sigs(sigs, num_hashes, bands, threshold)
 
 

@@ -51,23 +51,12 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import hold
 from .filters import word_ngrams
 from .textstats import tokens
 
 MICRO = 1_000_000
 NUM_BUCKETS = 65_536
-
-# fit_dsir persists its joined bucket-count table (≤ 2*num_buckets
-# rows) so the totals action and the returned model share one corpus
-# scan; lazy builders cannot unpersist their own intermediates, so
-# eager call sites release after materializing the model.
-_MODEL_CACHE: list[DataFrame] = []
-
-
-def release_cached_models() -> None:
-    """Unpersist count frames cached by ``fit_dsir``."""
-    while _MODEL_CACHE:
-        _MODEL_CACHE.pop().unpersist()
 
 
 # 2^40 hash buckets for the Gumbel uniform: (h + 0.5) / 2^40 lies in
@@ -153,15 +142,14 @@ def fit_dsir(
     Two bounded-cardinality count shuffles + one join over ≤
     2*num_buckets rows; the transcendental runs once per observed
     bucket and is materialized (module docstring). Each corpus is
-    scanned exactly ONCE: the joined count table is persisted (≤
+    scanned exactly ONCE: the joined count table is held (≤
     2*num_buckets tiny rows) before the totals action, so the
     denominators and the returned model share one materialization —
-    eager call sites release it with ``release_cached_models()`` after
-    the model is written/collected (the lm.py cache-ownership
-    discipline)."""
+    eager call sites release it with ``session.release_held()`` after
+    the model is written/collected."""
     tc = bucket_counts(target_df, text_col, num_buckets, seed)
     rc = bucket_counts(raw_df, text_col, num_buckets, seed)
-    base = (
+    base = hold(
         tc.select("bucket", F.col("cnt").alias("cnt_target"))
         .join(
             rc.select("bucket", F.col("cnt").alias("cnt_raw")),
@@ -173,9 +161,7 @@ def fit_dsir(
             F.coalesce("cnt_target", F.lit(0)).cast("long").alias("cnt_target"),
             F.coalesce("cnt_raw", F.lit(0)).cast("long").alias("cnt_raw"),
         )
-        .persist()
     )
-    _MODEL_CACHE.append(base)
     tot = base.agg(
         F.coalesce(F.sum("cnt_target"), F.lit(0)).alias("t"),
         F.coalesce(F.sum("cnt_raw"), F.lit(0)).alias("r"),

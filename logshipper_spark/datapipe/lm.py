@@ -40,23 +40,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import hold
 from .textstats import tokens
 
 MICRO = 1_000_000
-
-# count frames cached by fit_unigram_lm (a lazy builder cannot
-# unpersist its own intermediate — same pattern as dedup._SIG_CACHE)
-_COUNT_CACHE: list[DataFrame] = []
-
-
-def release_cached_counts() -> None:
-    """Unpersist every unigram-count frame cached by
-    ``fit_unigram_lm``. Call after the terminal action of an eager
-    pipeline (curation job, bench) — or skip the in-memory path
-    entirely by persisting the model with ``write_unigram_lm`` and
-    scoring from the read-back (what the contract query does)."""
-    while _COUNT_CACHE:
-        _COUNT_CACHE.pop().unpersist()
 
 
 def unigram_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -75,12 +62,13 @@ def _cached_unigram_counts_and_denom(
 ) -> tuple[DataFrame, int]:
     """Shared by fit_unigram_lm and fit_bigram_lm — the two fits MUST
     stay numerically identical (uni_oov/fb_oov consistency across the
-    unigram and bigram scorers): cache the unigram counts (the T/V
-    aggregate materializes them anyway; registered in _COUNT_CACHE —
-    see release_cached_counts) and return (counts, T+V) with the
+    unigram and bigram scorers): hold the unigram counts (the T/V
+    aggregate materializes them anyway; ``session.release_held()``
+    after the caller's action — or skip the in-memory path by writing
+    the model with ``write_unigram_lm`` and scoring from the read-back,
+    as the contract query does) and return (counts, T+V) with the
     empty-corpus denominator guard."""
-    counts = unigram_counts(df, text_col).cache()
-    _COUNT_CACHE.append(counts)
+    counts = hold(unigram_counts(df, text_col))
     tot = counts.agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).alias("t"), F.count("*").alias("v")
     ).head()
@@ -265,8 +253,8 @@ def fit_bigram_lm(
     if not 0.0 < lam < 1.0:
         raise ValueError(f"lam must be in (0, 1), got {lam}")
     counts, denom = _cached_unigram_counts_and_denom(df, text_col)
-    pairs = bigram_counts(df, text_col).cache()
-    _COUNT_CACHE.append(pairs)
+    # held: the context totals and the model rows both read the pairs
+    pairs = hold(bigram_counts(df, text_col))
     ctx = (
         pairs.select(
             F.element_at(F.split("gram", " "), 1).alias("prev"), "cnt"

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import release_held
 from . import dedup, filters, lm, sampling, substr, textstats
 
 
@@ -141,7 +142,7 @@ def corpus_report(
         "hi": hi,
         "in_band_rate": round(_i(lmrow["in_band"]) / n_docs, 6),
     }
-    lm.release_cached_counts()
+    release_held()
 
     # sampled near-dup rate (oracled machinery: minhash_lsh)
     if near_dup_sample > 0:
@@ -163,7 +164,7 @@ def corpus_report(
                 "docs_in_near_dup_pairs": in_pairs,
                 "near_dup_doc_rate_in_sample": round(in_pairs / n_sample, 6),
             }
-            dedup.release_cached_signatures()
+            release_held()
         sample.unpersist()
 
     # sampled substring/boilerplate duplication (oracled machinery:
@@ -219,7 +220,7 @@ def corpus_report(
                     else None
                 ),
             }
-            substr.release_cached_fingerprints()
+            release_held()
         ssample.unpersist()
 
     docs.unpersist()

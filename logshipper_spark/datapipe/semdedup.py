@@ -29,20 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# semantic_pairs persists the per-row (vec, norm, cell) frame shared by
-# both sides of its self-join — without it the nearest-centroid argmin
-# (num_cells x dim multiply-adds per row, the dominant map cost) and
-# the source scan run TWICE per action (the round-2 minhash self-join
-# lesson). Lazy builders cannot unpersist their own intermediates;
-# eager call sites release after their action.
-_CELL_CACHE: list[DataFrame] = []
-
-
-def release_cached_cells() -> None:
-    """Unpersist cell-assignment frames cached by ``semantic_pairs``."""
-    while _CELL_CACHE:
-        _CELL_CACHE.pop().unpersist()
-
+from ..session import hold
 from .dedup import near_dup_components
 from .similarity import _nearest_centroid_col, floor_round
 
@@ -105,11 +92,15 @@ def semantic_pairs(
     # same lesson as embedding_near_dup_pairs)
     nrm = _norm(F.col(vec_col))
     if cells_df is None:
-        cells = assign_trained_cells(df, centroids, vec_col).select(
+        # held: the per-row (vec, norm, cell) frame feeds both sides of
+        # the self-join — without it the nearest-centroid argmin
+        # (num_cells x dim multiply-adds per row, the dominant map
+        # cost) and the source scan run TWICE per action (the round-2
+        # minhash self-join lesson)
+        cells = hold(assign_trained_cells(df, centroids, vec_col).select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
             nrm.alias("nrm"), "cell",
-        ).persist()
-        _CELL_CACHE.append(cells)
+        ))
     else:
         cells = cells_df.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
@@ -246,13 +237,14 @@ def semantic_dedup_against(
         centroids = [cents[i] for i in range(len(cents))]
     nrm = _norm(F.col(vec_col))
     if cells_df is None:
-        batch = assign_trained_cells(df, centroids, vec_col).select(
+        # held: the probe-cell collect below and the candidate join
+        # both read the assigned batch
+        batch = hold(assign_trained_cells(df, centroids, vec_col).select(
             F.col(id_col).alias("_bid"),
             F.col(vec_col).alias("_bv"),
             nrm.alias("_bn"),
             "cell",
-        ).persist()
-        _CELL_CACHE.append(batch)
+        ))
     else:
         batch = cells_df.select(
             F.col(id_col).alias("_bid"),

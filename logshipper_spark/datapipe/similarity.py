@@ -17,18 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# ivf_knn_join persists its exploded query-probe frame: the literal
-# probe-set collect must evaluate the query subtree anyway, and the
-# join reuses the persisted result instead of re-running a possibly
-# expensive (or non-deterministic) derived query chain. Eager call
-# sites release after their action (dedup._SIG_CACHE convention).
-_PROBE_CACHE: list[DataFrame] = []
-
-
-def release_cached_probes() -> None:
-    """Unpersist query-probe frames cached by ``ivf_knn_join``."""
-    while _PROBE_CACHE:
-        _PROBE_CACHE.pop().unpersist()
+from ..session import hold
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -252,17 +241,16 @@ def ivf_knn_join(
         1,
         max(1, n_probe),
     )
-    qx = q.select(
+    qx = hold(q.select(
         F.col(id_col).alias(query_id_col),
         F.col(vec_col).alias("_qv"),
         _norm(F.col(vec_col)).alias("_qn"),
         F.explode(probe_arr).alias("cell"),
-    ).persist()  # the probe-set collect below evaluates the query
-    # subtree; without the persist the join re-evaluates it a second
-    # time (a derived query chain would pay its full cost twice), and a
+    ))  # the probe-set collect below evaluates the query subtree;
+    # without the hold the join re-evaluates it a second time (a
+    # derived query chain would pay its full cost twice), and a
     # non-deterministic query frame could even probe cells diverging
-    # from the join side. Released by release_cached_probes().
-    _PROBE_CACHE.append(qx)
+    # from the join side.
     probed = sorted(
         r["cell"] for r in qx.select("cell").distinct().collect()
     )  # ≤ num_cells values — bounded by construction, not by data volume
@@ -1492,8 +1480,8 @@ def ivf_pq_knn_join(
     ]
     if rerank_df is not None:
         keep.append(F.col(vec_col).alias("_qv"))
-    qx = q1.select(*keep, F.explode(probe_arr).alias("cell")).persist()
-    _PROBE_CACHE.append(qx)  # released by release_cached_probes()
+    # held: the probe-set collect and the join both read it (ivf_knn_join)
+    qx = hold(q1.select(*keep, F.explode(probe_arr).alias("cell")))
     probed = sorted(r["cell"] for r in qx.select("cell").distinct().collect())
     codes = spark.read.parquet(path).where(
         F.col("cell").isin(probed) if probed else F.lit(False)

@@ -39,23 +39,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import hold
 from .filters import word_ngrams
 from .textstats import tokens
-
-# fingerprint frames cached by substr_dup_spans/_pairs (lazy builders
-# cannot unpersist their own intermediates — same contract as
-# dedup.release_cached_signatures)
-_FP_CACHE: list[DataFrame] = []
-
-
-def release_cached_fingerprints() -> None:
-    """Unpersist every fingerprint frame cached by
-    ``substr_dup_spans``/``substr_dup_pairs``. Call after the terminal
-    action of an eager pipeline (job, bench) so long-lived sessions
-    issuing many substring-dedup calls don't accumulate unbounded
-    executor storage."""
-    while _FP_CACHE:
-        _FP_CACHE.pop().unpersist()
 
 
 def gram_hashes_from_tokens(toks: Column, w: int = 8) -> Column:
@@ -216,12 +202,9 @@ def substr_dup_spans(
     self-join): Catalyst recomputes unshared subtrees per branch, which
     would re-scan and re-hash the whole corpus up to 4x (verified in
     the physical plan: 4 FileScans without the cache). Since the
-    winnowed table is only ~2/(W+1) of token positions it is cached
-    instead — corpus hashed exactly once — and registered for
-    ``release_cached_fingerprints`` (lazy builders can't unpersist
-    their own intermediates)."""
-    fp = fingerprint_table(df, text_col, id_col, w, window).persist()
-    _FP_CACHE.append(fp)
+    winnowed table is only ~2/(W+1) of token positions it is held
+    instead (``session.hold``) — corpus hashed exactly once."""
+    fp = hold(fingerprint_table(df, text_col, id_col, w, window))
     docs_per_gram = fp.groupBy("gram_hash").agg(
         F.count_distinct("doc_id").alias("n_docs")
     )

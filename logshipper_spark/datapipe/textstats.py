@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import hold
+
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"],
@@ -308,10 +310,8 @@ def tfidf_topk(
     n = df.count() if n_docs is None else n_docs
     # tf feeds BOTH the document-frequency aggregate and the join-back:
     # unpersisted, the corpus-wide tokenize/sort/fold projection runs
-    # twice (the round-2 minhash trap — same fix as bm25_topk below);
-    # eager call sites release via release_cached_postings()
-    tf = term_counts(df, text_col, id_col).persist()
-    _POSTING_CACHE.append(tf)
+    # twice (the round-2 minhash trap — same fix as bm25_topk below)
+    tf = hold(term_counts(df, text_col, id_col))
     dfreq = tf.groupBy("token").agg(F.count("*").alias("_df"))
     idf = F.log((F.lit(float(n)) + 1.0) / (F.col("_df") + 1.0)) + 1.0
     scored = tf.join(dfreq, "token").withColumn(
@@ -325,21 +325,6 @@ def tfidf_topk(
         .filter(F.col("_rk") <= k)
         .select("doc_id", "token", "tf", "score")
     )
-
-
-# bm25_topk / tfidf_topk persist their posting frames (shared by a
-# frequency aggregate and a join-back — without it the corpus-wide
-# tokenize/sort/fold projection runs twice, the round-2 minhash trap).
-# A lazy builder cannot unpersist its own intermediate, so eager call
-# sites release after their action (dedup.release_cached_signatures
-# precedent).
-_POSTING_CACHE: list[DataFrame] = []
-
-
-def release_cached_postings() -> None:
-    """Unpersist posting frames cached by ``bm25_topk``/``tfidf_topk``."""
-    while _POSTING_CACHE:
-        _POSTING_CACHE.pop().unpersist()
 
 
 def prefix_queries(
@@ -398,10 +383,10 @@ def bm25_topk(
     (no corpus doc-length join); the distinct query-token set
     BROADCASTS into that emission so the corpus is scanned ONCE and
     only query-term postings survive — the filtered posting frame is
-    persisted (call ``release_cached_postings()`` after the action)
-    and feeds both the df aggregate (df over filtered postings equals
-    true df for those tokens) and the candidate join, so neither
-    aggregates the full vocabulary nor re-tokenizes the corpus. The
+    held (``session.release_held()`` after the action) and feeds both
+    the df aggregate (df over filtered postings equals true df for
+    those tokens) and the candidate join, so neither aggregates the
+    full vocabulary nor re-tokenizes the corpus. The
     only corpus-keyed shuffle is the map-side-combined (query, doc)
     score aggregate, bounded by sum-of-df over query terms. The final
     top-k is a salted two-phase window (phase 1 ranks within (query,
@@ -431,9 +416,7 @@ def bm25_topk(
             F.array_distinct(tokens(F.lower(F.col(query_col))))
         ).alias("token"),
     )
-    post = tf.join(F.broadcast(qt.select("token").distinct()), "token")
-    post = post.persist()
-    _POSTING_CACHE.append(post)
+    post = hold(tf.join(F.broadcast(qt.select("token").distinct()), "token"))
     dfreq = post.groupBy("token").agg(F.count("*").alias("df"))
     if max_df_frac is not None:
         dfreq = dfreq.filter(F.col("df") <= F.lit(max_df_frac * nd))
@@ -630,23 +613,18 @@ def pmi_pairs(
     # pair_rows join, and uni feeds the t_tok aggregate plus the na/nb
     # joins — uncached, each consumer re-runs the full corpus
     # co-occurrence explode (the documented self-join recompute trap).
-    # The in-op driver aggregations below materialize both caches;
-    # eager call sites release via release_cached_postings().
-    all_pairs = (
+    # The in-op driver aggregations below materialize both held frames.
+    all_pairs = hold(
         df.select(F.explode(cooccurrence_pairs(toks, window)).alias("p"))
         .groupBy(F.col("p.w1").alias("token_a"), F.col("p.w2").alias("token_b"))
         .agg(F.count("*").cast("long").alias("pair_count"))
-        .persist()
     )
-    _POSTING_CACHE.append(all_pairs)
     pair_rows = all_pairs.filter(F.col("pair_count") >= min_pair_count)
-    uni = (
+    uni = hold(
         df.select(F.explode(toks).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("_n"))
-        .persist()
     )
-    _POSTING_CACHE.append(uni)
     totals = uni.agg(F.sum("_n").alias("t")).head()
     t_tok = float(totals["t"] or 0)
     # P is the TOTAL pair mass (pre-cutoff): the min_pair_count filter

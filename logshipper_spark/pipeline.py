@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from . import aggregate as agg
 from . import enrich, gen, parse, route
+from .datapipe.compaction import _exists
 from .schemas import (
     DEFAULT_INGEST_TS,
     FORMAT_ECS,
@@ -290,9 +291,7 @@ def lineage_runs(spark: SparkSession, out_dir: str) -> dict[str, set[int]]:
     """Committed batches per run_id — one lineage scan serving both the
     resume-skip set and the foreign-run guard (``claim_out_dir``)."""
     path = os.path.join(out_dir, "lineage")
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
+    if not _exists(spark, path):
         return {}
     # partial pinned schema: an existing-but-empty dir reads as empty
     # instead of throwing on inference; batch_id is the hive partition

@@ -1,4 +1,5 @@
-"""SparkSession construction with the engine's standard configuration."""
+"""SparkSession construction with the engine's standard configuration,
+and the one registry of frames lazy operators hold for reuse."""
 
 from __future__ import annotations
 
@@ -53,6 +54,31 @@ def local_frame(
         [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(struct)
     )
     return spark.createDataFrame(table, struct)
+
+
+# Frames a lazy operator persists because its plan reads them more than
+# once (both self-join sides, an in-op collect plus the join-back). The
+# operator returns a lazy frame, so it cannot unpersist its own
+# intermediate; it holds it here instead, and the eager caller calls
+# release_held() once its action has run. One registry for every
+# operator, so no caller has to know which operators held what. It
+# drains every caller's frames: code that needs its own lifetime beside
+# a concurrent query persists locally (streaming._index_stream's keep).
+_HELD: list[DataFrame] = []
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """Persist ``df`` until the next ``release_held()``; returns it."""
+    df = df.persist()
+    _HELD.append(df)
+    return df
+
+
+def release_held() -> None:
+    """Unpersist every frame held since the last release. Call after
+    the action that consumed the operators' output."""
+    while _HELD:
+        _HELD.pop().unpersist()
 
 
 def get_spark(

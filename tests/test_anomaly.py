@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logshipper_spark.anomaly import detect_alerts, rolling_zscore
+from logshipper_spark.session import release_held
 
 
 def _df(spark, values, key="e:latency", start=None, step_s=1):
@@ -215,8 +216,7 @@ def test_rolling_zscore_blocked_parity_hot_key(spark):
 
 
 def _assert_blocked_parity(got, want):
-    from logshipper_spark.anomaly import release_cached_rollups
-    release_cached_rollups()
+    release_held()
     assert set(got) == set(want)
     for key, g in got.items():
         w = want[key]
@@ -235,11 +235,7 @@ def test_rolling_zscore_blocked_null_keys_and_values_parity(spark):
     internal joins are null-safe — an equi-join would silently drop
     them), n_samples/mean/stddev count only non-null values, and no
     row ever disappears."""
-    from logshipper_spark.anomaly import (
-        release_cached_rollups,
-        rolling_zscore,
-        rolling_zscore_blocked,
-    )
+    from logshipper_spark.anomaly import rolling_zscore, rolling_zscore_blocked
 
     rows = []
     for i in range(300):  # NULL key group spanning several 64-id blocks
@@ -255,7 +251,7 @@ def test_rolling_zscore_blocked_null_keys_and_values_parity(spark):
     }
     fast = rolling_zscore_blocked(df, order_col="event_id", block_size=64, **kw)
     got = {(r["k"], r["event_id"]): r for r in fast.collect()}
-    release_cached_rollups()
+    release_held()
     assert set(got) == set(want)  # nothing dropped, nothing duplicated
     for key, g in got.items():
         w = want[key]
@@ -282,11 +278,7 @@ def test_rolling_zscore_blocked_large_mean_tight_spread_stddev(spark):
     stddev_pop (and of the true value)."""
     import statistics
 
-    from logshipper_spark.anomaly import (
-        release_cached_rollups,
-        rolling_zscore,
-        rolling_zscore_blocked,
-    )
+    from logshipper_spark.anomaly import rolling_zscore, rolling_zscore_blocked
 
     vals = [30_000_000 + (i * 37) % 5 for i in range(400)]
     df = spark.createDataFrame(
@@ -300,7 +292,7 @@ def test_rolling_zscore_blocked_large_mean_tight_spread_stddev(spark):
     }
     fast = rolling_zscore_blocked(df, order_col="event_id", block_size=64, **kw)
     got = {r["event_id"]: r for r in fast.collect()}
-    release_cached_rollups()
+    release_held()
     for i, g in got.items():
         w = want[i]
         assert g["mean"] == w["mean"], i

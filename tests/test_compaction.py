@@ -17,6 +17,7 @@ from logshipper_spark.datapipe import compaction
 from logshipper_spark.datapipe import dedup as ddp
 from logshipper_spark.datapipe import semdedup as sdd
 from logshipper_spark.datapipe import substr as sub
+from logshipper_spark.session import release_held
 
 
 def _long_text(prefix: str, n: int = 12) -> str:
@@ -111,7 +112,7 @@ def test_minhash_compaction_preserves_live_view(spark, tmp_path):
     assert {i for i, _ in _sig_set(sigs4)} == {1, 2, 3, 4}
     vac2 = compaction.vacuum_index(spark, idx, compaction.MINHASH_TABLES)
     assert vac2["deleted"] == 4  # batch_id=2 x 2 tables + epoch=1 x 2
-    ddp.release_cached_signatures()
+    release_held()
 
 
 def test_compaction_crash_before_marker_leaves_view_untouched(
@@ -147,7 +148,7 @@ def test_compaction_crash_before_marker_leaves_view_untouched(
     assert res == {"epoch": 1, "covered": 0, "compacted": True}
     sigs2, _ = compaction.read_minhash_index(spark, idx)
     assert {i for i, _ in _sig_set(sigs2)} == {1}
-    ddp.release_cached_signatures()
+    release_held()
 
 
 def test_semantic_compaction_keeps_cells_and_probe_results(spark, tmp_path):
@@ -204,7 +205,7 @@ def test_semantic_compaction_keeps_cells_and_probe_results(spark, tmp_path):
     view1 = compaction.read_semantic_index(spark, idx)
     assert {(r["vec_id"], r["cell"]) for r in view1.collect()} == before
     assert kept_ids(view1) == [11]
-    sdd.release_cached_cells()
+    release_held()
 
 
 def test_fingerprint_compaction_dedups_cross_batch_repeats(spark, tmp_path):
@@ -281,7 +282,7 @@ def test_streaming_near_dedup_across_compaction_and_vacuum(spark, tmp_path):
     # the view now spans the epoch + the new batch partition
     sigs, _ = compaction.read_minhash_index(spark, idx)
     assert sorted(r["doc_id"] for r in sigs.collect()) == [1, 11]
-    ddp.release_cached_signatures()
+    release_held()
 
 
 def test_streaming_substr_screen_across_compaction(spark, tmp_path):

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logshipper_spark.datapipe import dedup, multimodal, similarity, textstats
+from logshipper_spark.session import release_held
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -302,7 +303,7 @@ def test_ivf_knn_join_self_is_top1(spark, embs, tmp_path):
         spark, path, emb.filter("vec_id < 8"), k=3, num_cells=16, dim=dim
     )
     rows = out.collect()
-    similarity.release_cached_probes()
+    release_held()
     by_q = {}
     for r in rows:
         by_q.setdefault(r["query_id"], []).append((r["cosine"], r["vec_id"]))
@@ -634,7 +635,7 @@ def test_knn_join_hot_cell_salt_parity(spark, tmp_path):
         spark, idx, queries, k=5, num_cells=8, n_probe=2, dim=8))
     salted = rows_of(similarity.ivf_knn_join(
         spark, idx, queries, k=5, num_cells=8, n_probe=2, dim=8, salt=4))
-    similarity.release_cached_probes()
+    release_held()
     assert plain == salted and len(plain) == queries.count() * 5
 
     # same drill through the IVF-PQ composed join
@@ -652,7 +653,7 @@ def test_knn_join_hot_cell_salt_parity(spark, tmp_path):
         spark, pq_idx, queries, k=5, n_probe=2))
     p2 = pq_rows(similarity.ivf_pq_knn_join(
         spark, pq_idx, queries, k=5, n_probe=2, salt=4))
-    similarity.release_cached_probes()
+    release_held()
     assert p1 == p2 and len(p1) == queries.count() * 5
 
 
@@ -818,7 +819,7 @@ def test_ivf_pq_knn_join_self_top1(spark, embs, tmp_path):
     )
     rows = out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
-    similarity.release_cached_probes()
+    release_held()
     by_q = {}
     for r in rows:
         by_q.setdefault(r["query_id"], []).append((r["cosine_r"], r["vec_id"]))
@@ -1314,7 +1315,7 @@ def test_hard_negatives(spark, tmp_path):
         num_cells=2, n_probe=2, dim=4, exclude_self=False,
     ).orderBy("neg_rank").collect()
     assert raw[0]["vec_id"] == 0 and raw[0]["cosine"] == 1.0
-    similarity.release_cached_probes()
+    release_held()
 
 
 def test_sft_examples_and_pack_masked(spark):
@@ -1690,7 +1691,7 @@ def test_bm25_matches_python_reference(spark):
         got.setdefault(r.query_id, []).append(
             (r.doc_id, r.rank, r.score, r.matched_terms)
         )
-    textstats.release_cached_postings()
+    release_held()
     for qid in got:
         got[qid].sort(key=lambda t: t[1])
     want = _bm25_reference(corpus, queries, k=3)
@@ -1712,7 +1713,7 @@ def test_bm25_salted_topk_equals_single_window(spark, docs):
     # share templated prefixes and BM25's length normalization rightly
     # prefers shorter docs carrying the same terms.)
     rows = a.collect()
-    textstats.release_cached_postings()
+    release_held()
     assert rows and all(r.matched_terms >= 1 for r in rows)
     per_q = {}
     for r in rows:
@@ -1761,7 +1762,7 @@ def test_bm25_property_random_corpora(spark):
             got.setdefault(r.query_id, []).append(
                 (r.doc_id, r.rank, r.score, r.matched_terms)
             )
-        textstats.release_cached_postings()
+        release_held()
         for qid in got:
             got[qid].sort(key=lambda t: t[1])
         want = _bm25_reference(corpus, queries, k=k, max_df_frac=frac)
@@ -1873,9 +1874,7 @@ def test_curate_substr_dedup_collapses_boilerplate_sharers(spark):
     assert 2 not in rows
     assert rows[1].exact_dup_count >= 2
     assert 4 in rows
-    from logshipper_spark.datapipe import substr as substr_mod
-
-    substr_mod.release_cached_fingerprints()
+    release_held()
 
 
 # ── cross-document line dedup (CCNet-style boilerplate pass) ──
@@ -2144,7 +2143,7 @@ def test_bigram_lm_hand_corpus(spark):
     # "z a" unseen, token a seen)
     exp = tm["b"][0] + fb_oov + tm["a"][1]
     assert (got["n_tokens"], got["nlp_sum_micro"]) == (3, exp)
-    lm.release_cached_counts()
+    release_held()
 
 
 # ── BPE merge training (bpe.py) ──
@@ -2653,7 +2652,7 @@ def test_semantic_dedup_against_empty_index_dir(spark, tmp_path):
     )
     kept = semdedup.semantic_dedup_against(batch, idx)
     assert {r["vec_id"] for r in kept.collect()} == {1, 2}
-    semdedup.release_cached_cells()
+    release_held()
 
 
 def test_trending_terms(spark):

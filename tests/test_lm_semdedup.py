@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logshipper_spark.datapipe import dedup, lm, packing, semdedup
+from logshipper_spark.session import release_held
 
 
 # ── unigram LM scoring ──
@@ -197,7 +198,7 @@ def test_semantic_pairs_property(spark):
                 df, cents, threshold=threshold
             ).collect()
         }
-        semdedup.release_cached_cells()
+        release_held()
         import math
 
         cells = [cell(v, cents) for v in vecs]
@@ -311,7 +312,7 @@ def test_near_dedup_against_index_roundtrip(spark, tmp_path):
         for r in dedup.near_dedup_against(batch, sigs2, bands2).collect()
     }
     assert kept2 == {101, 102}
-    dedup.release_cached_signatures()
+    release_held()
 
 
 def test_near_dedup_against_catches_near_copy(spark, tmp_path):
@@ -331,7 +332,7 @@ def test_near_dedup_against_catches_near_copy(spark, tmp_path):
     assert (
         dedup.near_dedup_against(batch, sigs, bands, threshold=1.0).count() == 1
     )
-    dedup.release_cached_signatures()
+    release_held()
 
 
 def test_near_dedup_against_custom_id_col_and_sigs_df(spark, tmp_path):
@@ -368,7 +369,7 @@ def test_banded_buckets_matches_lsh_pairs_path(spark):
         for r in dedup.minhash_lsh_pairs(docs, threshold=0.99).collect()
     }
     assert (0, 100) in pairs
-    dedup.release_cached_signatures()
+    release_held()
 
 
 # ── incremental semantic dedup (write_semantic_index / _against) ──
@@ -403,7 +404,7 @@ def test_semantic_dedup_against_index_roundtrip(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     out = semdedup.semantic_dedup_against(batch, path, threshold=0.99)
-    semdedup.release_cached_cells()
+    release_held()
     assert {r["vec_id"] for r in out.collect()} == {101, 102}
     # append the surviving snapshot: 101/102 now indexed, so their
     # near-copies drop on the next batch
@@ -413,7 +414,7 @@ def test_semantic_dedup_against_index_roundtrip(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     out2 = semdedup.semantic_dedup_against(batch2, path, threshold=0.99)
-    semdedup.release_cached_cells()
+    release_held()
     assert {r["vec_id"] for r in out2.collect()} == set()
 
 
@@ -432,7 +433,7 @@ def test_semantic_dedup_against_prunes_probe_cells(spark, tmp_path):
     )  # occupies cell 0 only
     out = semdedup.semantic_dedup_against(batch, path, threshold=0.999999)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    semdedup.release_cached_cells()
+    release_held()
     # the literal probe filter must reach the index scan's partition
     # pruning (single probed cell collapses isin to an equality)
     import re

@@ -19,6 +19,7 @@ from logshipper_spark import aggregate, anomaly, gen, pipeline, route, skew
 from logshipper_spark import temporal, transcript
 from logshipper_spark.datapipe import decontam, dsir, filters, lm, packing
 from logshipper_spark.datapipe import similarity, textstats, tokenize
+from logshipper_spark.session import release_held
 
 from .test_datapipe import SF_DIR
 
@@ -81,12 +82,9 @@ def ivf_dir(emb, tmp_path_factory):
 
 
 @pytest.fixture(autouse=True)
-def _release_operator_caches():
+def _release_held_frames():
     yield
-    similarity.release_cached_probes()
-    lm.release_cached_counts()
-    textstats.release_cached_postings()
-    dsir.release_cached_models()
+    release_held()
 
 
 def _dim(emb) -> int:

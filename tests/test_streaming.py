@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from logshipper_spark import gen, pipeline, route, streaming
 from logshipper_spark.datapipe import compaction
+from logshipper_spark.session import release_held
 
 
 def _write_input(spark, path, n_turns, n_files):
@@ -211,8 +212,6 @@ def test_streaming_near_dedup(spark, tmp_path):
     batch-internal lower-id losers drop, survivors' signatures become
     index state, and a later epoch's near-copy of ANY kept document
     drops — across a restart (new query, same checkpoint + index)."""
-    from logshipper_spark.datapipe import dedup as ddp
-
     input_dir = str(tmp_path / "nd_in")
     out_dir = str(tmp_path / "nd_out")
     ckpt = str(tmp_path / "nd_ck")
@@ -258,7 +257,7 @@ def test_streaming_near_dedup(spark, tmp_path):
         .collect()
     )
     assert sig_ids == [1, 3, 12]
-    ddp.release_cached_signatures()
+    release_held()
 
 
 def test_streaming_near_dedup_crash_in_commit_gap(spark, tmp_path):
@@ -544,8 +543,6 @@ def test_streaming_semantic_dedup(spark, tmp_path):
     survive (the documented cell-blindness trade)."""
     import math
 
-    from logshipper_spark.datapipe import semdedup as sdd
-
     def unit(deg):
         r = math.radians(deg)
         return [math.cos(r), math.sin(r)]
@@ -591,15 +588,13 @@ def test_streaming_semantic_dedup(spark, tmp_path):
         for r in spark.read.schema(schema).parquet(idx + "/vectors").collect()
     )
     assert vec_ids == [1, 3, 11]
-    sdd.release_cached_cells()
+    release_held()
 
 
 def test_streaming_semantic_dedup_crash_in_commit_gap(spark, tmp_path):
     """Crash AFTER commit, BEFORE the checkpoint epoch: the replay must
     skip via the marker — the replayed batch must NOT see its own index
     partition and drop itself as a semantic dup of itself."""
-    from logshipper_spark.datapipe import semdedup as sdd
-
     input_dir = str(tmp_path / "sg_in")
     out_dir = str(tmp_path / "sg_out")
     ckpt = str(tmp_path / "sg_ck")
@@ -629,7 +624,7 @@ def test_streaming_semantic_dedup_crash_in_commit_gap(spark, tmp_path):
     q2.awaitTermination(180)
     got = spark.read.schema(schema).parquet(out_dir).collect()
     assert [r["vec_id"] for r in got] == [1]
-    sdd.release_cached_cells()
+    release_held()
 
 
 def test_streaming_conv_stats_sessions(spark, tmp_path):

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from logshipper_spark import session
 from logshipper_spark.datapipe import substr
 
 SHARED = "the quick brown fox jumps over the lazy dog again and again forever"
@@ -131,14 +132,14 @@ def test_fingerprint_cache_shared_across_branches(spark):
     # cached fingerprint table (corpus hashed once), and the release
     # hook must drain the cache
     df = _corpus(spark)
-    substr.release_cached_fingerprints()
+    session.release_held()
     pairs = substr.substr_dup_pairs(df, w=4, window=3)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") >= 3
     assert pairs.count() == 1
-    assert len(substr._FP_CACHE) >= 1
-    substr.release_cached_fingerprints()
-    assert not substr._FP_CACHE
+    assert len(session._HELD) >= 1
+    session.release_held()
+    assert not session._HELD
 
 
 def test_min_shared_threshold(spark):

@@ -45,7 +45,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from logshipper_spark.datapipe import textstats
-    from logshipper_spark.session import get_spark
+    from logshipper_spark.session import get_spark, release_held
 
     spark = get_spark(app_name="bm25-eval")
     docs = spark.read.parquet(
@@ -80,7 +80,7 @@ def main() -> int:
     ranked: dict[int, list[int]] = {}
     for r in out.collect():
         ranked.setdefault(r.query_id, []).append((r.rank, r.doc_id))
-    textstats.release_cached_postings()
+    release_held()
 
     cutoffs = sorted({1, 3, 5, args.k})
     recall = {k: 0.0 for k in cutoffs}

@@ -17,8 +17,7 @@ import pandas as pd
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod  # noqa: E402
-from logshipper_spark.datapipe import textstats  # noqa: E402
-from logshipper_spark.session import get_spark  # noqa: E402
+from logshipper_spark.session import get_spark, release_held  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -66,9 +65,9 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             continue
         finally:
-            # the tfidf / bm25 / pmi builders persist their postings for
-            # the action; a sweep must not carry them into later queries
-            textstats.release_cached_postings()
+            # operators hold reused frames for the action; a sweep must
+            # not carry them into later queries
+            release_held()
         if name not in oracles:
             print(f"rows  {name}: {len(sdf)} rows ({time.time()-t0:.1f}s, rows-only)")
             continue

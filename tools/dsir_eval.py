@@ -79,7 +79,7 @@ def main() -> int:
 
     from logshipper_spark.datapipe import dsir
     from logshipper_spark.datapipe.textstats import tokens
-    from logshipper_spark.session import get_spark
+    from logshipper_spark.session import get_spark, release_held
 
     spark = get_spark(app_name="dsir-eval")
     v, stride = args.vocab, args.stride
@@ -196,8 +196,7 @@ def main() -> int:
         (F.col("is_planted") == 0) & (F.col("logw_micro") >= planted_min)
     ).count()
     joined.unpersist()
-    dedup.release_cached_signatures()
-    dsir.release_cached_models()
+    release_held()
 
     print("| metric | value |")
     print("|---|---|")

@@ -6,8 +6,10 @@ stand-in for the north rule's two-cluster-size criterion.
 Generates ``n_turns`` transcript turns once, then runs the job in a
 fresh JVM per leg at N and 4N cores, interleaved ABAB (a noise burst
 degrades one leg of each level, never every run of one level), and
-prints one JSON line: best throughput per level and the efficiency
-``tp(4N) / tp(N) / 4``. Don't run other Spark jobs concurrently.
+prints one JSON line: best and median throughput per level, the
+efficiency ``tp(4N) / tp(N) / 4`` from the bests (``value``) and the
+same ratio from the medians (``median_value``). Don't run other Spark
+jobs concurrently.
 
 * ``chain`` — the batch parse → enrich chain
   (``normalize_and_enrich(skip_turn_rank=True)``), timed in-JVM after
@@ -27,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -100,12 +103,15 @@ def main(job: str, n_turns: int, n: int) -> int:
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
     tp_n, tp_4n = max(per_level[n]), max(per_level[4 * n])
+    med_n, med_4n = (statistics.median(per_level[c]) for c in (n, 4 * n))
     print(json.dumps({
         "metric": f"{job}_scaling_efficiency_Nx4",
         "value": round(tp_4n / tp_n / 4.0, 3),
         "unit": "ratio",
         "n_turns": n_turns,
+        "median_value": round(med_4n / med_n / 4.0, 3),
         "throughput_turns_per_sec": {f"{n}_cores": tp_n, f"{4 * n}_cores": tp_4n},
+        "median_turns_per_sec": {f"{n}_cores": med_n, f"{4 * n}_cores": med_4n},
         "per_leg_turns_per_sec": {
             f"{n}_cores": per_level[n], f"{4 * n}_cores": per_level[4 * n],
         },

@@ -46,7 +46,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from logshipper_spark.datapipe import substr
-    from logshipper_spark.session import get_spark
+    from logshipper_spark.session import get_spark, release_held
 
     spark = get_spark(app_name="logshipper-substr-eval")
     docs = spark.read.parquet(f"{args.sf_dir}/documents.parquet").select(
@@ -111,7 +111,7 @@ def main() -> int:
         .filter(F.col("doc_id") >= 10_000_000)
         .collect()
     }
-    substr.release_cached_fingerprints()
+    release_held()
     covered_by_doc: dict[int, int] = {}
     for doc_id, s, e in merged:
         covered_by_doc[doc_id] = covered_by_doc.get(doc_id, 0) + (e - s + 1)
