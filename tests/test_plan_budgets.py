@@ -17,8 +17,9 @@ from pyspark.sql import functions as F
 
 from logshipper_spark import aggregate, anomaly, gen, pipeline, route, skew
 from logshipper_spark import temporal, transcript
-from logshipper_spark.datapipe import decontam, dsir, filters, lm, packing
-from logshipper_spark.datapipe import similarity, textstats, tokenize
+from logshipper_spark.datapipe import decontam, dedup, dsir, filters, lm
+from logshipper_spark.datapipe import packing, sampling, similarity
+from logshipper_spark.datapipe import textstats, tokenize
 from logshipper_spark.session import release_held
 
 from .test_datapipe import SF_DIR
@@ -65,6 +66,12 @@ def _cached_read(spark, table):
 @pytest.fixture(scope="module")
 def docs(spark):
     return _cached_read(spark, "documents")
+
+
+@pytest.fixture(scope="module")
+def events(spark):
+    # not cached: test_parquet_scan_pushdown reads the same file
+    return spark.read.parquet(f"{SF_DIR}/events.parquet")
 
 
 @pytest.fixture(scope="module")
@@ -149,6 +156,13 @@ def _dsir_select(fx):
     return dsir.dsir_select(dsir.dsir_weights(docs, model, oov), k=50)
 
 
+def _representatives(fx):
+    docs = fx("docs")
+    labels = docs.select("doc_id", (F.col("doc_id") % 50).alias("component"))
+    return dedup.representatives(
+        labels, docs.select("doc_id", F.col("n_chars").alias("score")))
+
+
 # (case id, frame builder over the fixture getter, budget)
 BUDGETS = [
     # the whole parse → enrich chain is narrow except the single
@@ -221,6 +235,25 @@ BUDGETS = [
     # exchanges and the full-outer SortMergeJoin each) under both of
     # its consumers: 8 of the 11 exchanges and all 4 sort-merge joins
     ("dsir.dsir_select", _dsir_select, (11, 0, 3, 4)),
+    # the hot-key decompositions' callers (skew.block_prefix_sums and
+    # skew.salted_topk)
+    ("anomaly.edge_metric_feed", lambda fx: anomaly.edge_metric_feed(
+        fx("enr"), order_cols=ORDER), (4, 0, 2, 1)),
+    ("anomaly.rolling_zscore_blocked", lambda fx:
+     anomaly.rolling_zscore_blocked(fx("events"), ["event_type"],
+                                    block_size=256), (9, 0, 4, 0)),
+    ("sampling.token_budget_head", lambda fx: sampling.token_budget_head(
+        fx("docs"), budget=2000), (3, 0, 1, 0)),
+    ("sampling.quantile_bins", lambda fx: sampling.quantile_bins(
+        fx("docs"), k=4, score_col="n_chars", group_col="source"),
+     (7, 0, 3, 0)),
+    ("packing.shard_plan", lambda fx: packing.shard_plan(
+        fx("docs"), target_bytes=4000), (2, 0, 1, 0)),
+    ("sampling.topk_per_group", lambda fx: sampling.topk_per_group(
+        fx("docs"), ["source"], k=5), (2, 0, 0, 0)),
+    ("textstats.trending_terms", lambda fx: textstats.trending_terms(
+        fx("tr")), (3, 0, 0, 0)),
+    ("dedup.representatives", _representatives, (3, 0, 2, 1)),
 ]
 
 
