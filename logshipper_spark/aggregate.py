@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .skew import null_safe_window
+
 P99_WINDOW = 100  # ring-buffer size (reference: types.go:61)
 
 
@@ -93,7 +95,8 @@ def edge_agg(
     # Tungsten sort (per-task work bounded by the edge's per-block
     # rate), and a groupBy on the SAME keys reuses the exchange to fold
     # the base aggregates plus a conditional collect of only the
-    # block's top-100 rows.
+    # block's top-100 rows. Not skew.salted_topk: the ring is a
+    # top-100 MERGE folded into the edge aggregate, not a ranked output.
     blk = F.floor(
         F.unix_micros(F.col(order_cols[0]).cast("timestamp"))
         / F.lit(ring_block_s * 1_000_000)
@@ -371,11 +374,9 @@ def time_buckets(
     calls/min approximation, screen2.go:211-217).
 
     NULL timestamps land in a NULL ``window_start`` group (SQL GROUP
-    BY semantics) — the coalesce-to-sentinel sits INSIDE window()
-    because Spark's TimeWindowing rule silently drops NULL inputs."""
-    sentinel = F.to_timestamp(F.lit("0001-01-01 00:00:00"))
+    BY semantics — ``skew.null_safe_window``)."""
     keys = [
-        F.window(F.coalesce(F.col(ts_col), sentinel), duration).alias("w"),
+        null_safe_window(F.col(ts_col), duration).alias("w"),
         F.col(ts_col).isNull().alias("_ts_null"),
     ] + [F.col(k) for k in (extra_keys or [])]
     return (

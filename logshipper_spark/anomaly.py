@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .session import hold
+from .skew import block_prefix_sums, null_safe_block, null_safe_window
 
 DEFAULT_WINDOW = 100
 DEFAULT_THRESHOLD = 3.0
@@ -82,9 +83,8 @@ def rolling_zscore_blocked(
     sliding aggregate decomposes over prefix sums: windowed
     sum = cum(r) − cum(r−N), so
 
-    - phase 1 computes per-(key, block) local running (count, sum,
-      sum-of-squares) + a tiny per-block offset table — the exact
-      ``turn_rank_salted`` pattern, no task scans more than one block;
+    - phase 1 computes the running (count, sum, sum-of-squares) with
+      ``skew.block_prefix_sums`` — no task scans more than one block;
     - phase 2 fetches the prefix at rank r−N with a co-partitioned
       1:1 equi-join on (key, rank−N) — a hash join on bounded keys,
       never a per-key sort.
@@ -115,10 +115,9 @@ def rolling_zscore_blocked(
       window) and this form is parity-tested to 1e-8;
     - NULL values and NULL keys ride through like the single-window
       form: n_samples/mean/stddev count only non-null values (a
-      separate non-null prefix lane), and both internal joins run on a
-      struct-wrapped key (struct equality is null-safe AND shares the
-      windows' hash partitioning) so NULL-key rows are scored, never
-      dropped. A NULL
+      separate non-null prefix lane), and both internal joins run on
+      the helper's null-safe struct key, so NULL-key rows are scored,
+      never dropped. A NULL
       ``order_col`` violates the uniqueness contract (those rows
       collapse into one block with undefined relative order) but still
       flows through.
@@ -133,115 +132,33 @@ def rolling_zscore_blocked(
     """
     if min_samples is None:
         min_samples = window_size // 2
-    v = F.col(value_col).cast("long")
-    # _jk wraps the key columns in ONE struct: struct equality is
-    # null-safe (NULL fields compare equal), so a NULL-key group joins
-    # its own offset/boundary rows through plain equi-joins — and the
-    # windows, groupBy, and joins all hash-partition on the same
-    # column, so the exchange is planned once and reused (an
-    # eqNullSafe join condition would force an extra full-data
-    # exchange: its required distribution differs from the windows')
-    from .skew import group_key_struct, null_safe_block
-
-    # null-safe group key + never-null block id (skew.py invariant):
-    # NULL-key and NULL-order rows must flow through the offset
-    # equi-join, not vanish
-    d = (
-        df.withColumn("_jk", group_key_struct(*key_cols))
-        .withColumn("_v", v)
-        .withColumn("_blk", null_safe_block(F.col(order_col), block_size))
+    # running-sum lanes (skew.block_prefix_sums): row count (rank /
+    # lag distance), NON-NULL value count (the n_samples/mean
+    # denominator — F.count/F.avg/stddev_pop skip NULLs in the
+    # single-window form), value sum and sum of squares (a NULL value
+    # counts as 0, so the cum arithmetic never NULL-poisons).
+    d = df.withColumn("_v", F.col(value_col).cast("long"))
+    v = F.col("_v")
+    pre = block_prefix_sums(
+        d,
+        key_cols,
+        [order_col],
+        null_safe_block(F.col(order_col), block_size),
+        {"_r": F.lit(1), "_nn": v.isNotNull().cast("long"), "_cum": v,
+         "_cumq": v * v},
     )
-    w_loc = (
-        Window.partitionBy("_jk", "_blk")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # running-sum lanes: row count (rank / lag distance), NON-NULL
-    # value count (the n_samples/mean denominator — F.count/F.avg/
-    # stddev_pop skip NULLs in the single-window form), value sum and
-    # sum of squares (F.sum skips NULLs; coalesce the all-NULL-prefix
-    # case to 0 so the cum arithmetic never NULL-poisons).
-    local = (
-        d.withColumn("_c_loc", F.count(F.lit(1)).over(w_loc))
-        .withColumn("_n_loc", F.count("_v").over(w_loc))
-        .withColumn(
-            "_s_loc", F.coalesce(F.sum("_v").over(w_loc), F.lit(0))
-        )
-        .withColumn(
-            "_q_loc",
-            F.coalesce(
-                F.sum(F.col("_v") * F.col("_v")).over(w_loc), F.lit(0)
-            ),
-        )
-    )
-    # in-block lag at distance N: same partitioning+order as w_loc, so
-    # it rides the SAME sort (one WindowExec chain, no extra exchange).
-    # Non-null iff the r−N row lives in this block — then its prefix is
-    # this block's offset + its local running sums, and the expensive
-    # cross-block fetch is skipped entirely.
-    w_ord = Window.partitionBy("_jk", "_blk").orderBy(order_col)
-    local = (
-        local.withColumn("_c_lag", F.lag("_c_loc", window_size).over(w_ord))
-        .withColumn("_n_lag", F.lag("_n_loc", window_size).over(w_ord))
-        .withColumn("_s_lag", F.lag("_s_loc", window_size).over(w_ord))
-        .withColumn("_q_lag", F.lag("_q_loc", window_size).over(w_ord))
-    )
-    totals = d.groupBy("_jk", "_blk").agg(
-        F.count("*").alias("_c_tot"),
-        F.count("_v").alias("_n_tot"),
-        F.coalesce(F.sum("_v"), F.lit(0)).alias("_s_tot"),
-        F.coalesce(F.sum(F.col("_v") * F.col("_v")), F.lit(0)).alias(
-            "_q_tot"
-        ),
-    )
-    w_off = (
-        Window.partitionBy("_jk")
-        .orderBy("_blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "_jk",
-        "_blk",
-        F.coalesce(F.sum("_c_tot").over(w_off), F.lit(0)).alias("_c_off"),
-        F.coalesce(F.sum("_n_tot").over(w_off), F.lit(0)).alias("_n_off"),
-        F.coalesce(F.sum("_s_tot").over(w_off), F.lit(0)).alias("_s_off"),
-        F.coalesce(F.sum("_q_tot").over(w_off), F.lit(0)).alias("_q_off"),
-    )
+    # in-block lag at distance N: same partitioning+order as the local
+    # running sums, so no extra exchange. Non-null iff the r−N row
+    # lives in this block — then its prefix is the lagged running sum
+    # (the block's offset is shared), and the expensive cross-block
+    # fetch is skipped entirely.
+    w_ord = Window.partitionBy("_gk", "_blk").orderBy(order_col)
     pre = (
-        local.join(offsets, ["_jk", "_blk"])
-        .withColumn("_r", F.col("_c_off") + F.col("_c_loc"))
-        .withColumn("_nn", F.col("_n_off") + F.col("_n_loc"))
-        .withColumn("_cum", F.col("_s_off") + F.col("_s_loc"))
-        .withColumn("_cumq", F.col("_q_off") + F.col("_q_loc"))
-        # prefix at r−N resolved in-block where the lag hit (offsets
-        # are the SAME block's, so offset + lagged local sums is exact)
-        .withColumn(
-            "_nn_l",
-            F.when(
-                F.col("_c_lag").isNotNull(),
-                F.col("_n_off") + F.col("_n_lag"),
-            ),
-        )
-        .withColumn(
-            "_cum_l",
-            F.when(
-                F.col("_c_lag").isNotNull(),
-                F.col("_s_off") + F.col("_s_lag"),
-            ),
-        )
-        .withColumn(
-            "_cumq_l",
-            F.when(
-                F.col("_c_lag").isNotNull(),
-                F.col("_q_off") + F.col("_q_lag"),
-            ),
-        )
-        .withColumn("_resolved", F.col("_c_lag").isNotNull())
-        .drop(
-            "_blk", "_c_loc", "_n_loc", "_s_loc", "_q_loc", "_c_off",
-            "_n_off", "_s_off", "_q_off", "_c_lag", "_n_lag", "_s_lag",
-            "_q_lag",
-        )
+        pre.withColumn("_nn_l", F.lag("_nn", window_size).over(w_ord))
+        .withColumn("_cum_l", F.lag("_cum", window_size).over(w_ord))
+        .withColumn("_cumq_l", F.lag("_cumq", window_size).over(w_ord))
+        .withColumn("_resolved", F.col("_nn_l").isNotNull())
+        .drop("_blk")
     )
     # pre feeds up to three consumers (resolved rows, boundary rows,
     # and the boundary lookup side) — hold it so the prefix
@@ -259,7 +176,7 @@ def rolling_zscore_blocked(
         ~F.col("_resolved") & (F.col("_r") > window_size)
     ).drop("_nn_l", "_cum_l", "_cumq_l")
     lagref = pre.select(
-        "_jk",
+        "_gk",
         F.col("_r").alias("_rprev"),
         F.col("_nn").alias("_nn_l"),
         F.col("_cum").alias("_cum_l"),
@@ -271,7 +188,7 @@ def rolling_zscore_blocked(
     # instead of OOM-broadcasting half the corpus
     bd = (
         boundary.withColumn("_rprev", F.col("_r") - F.lit(window_size))
-        .join(lagref, ["_jk", "_rprev"], "left")
+        .join(lagref, ["_gk", "_rprev"], "left")
         .drop("_rprev")
     )
     j = resolved.unionByName(bd)
@@ -296,7 +213,7 @@ def rolling_zscore_blocked(
         .withColumn("n_samples", nn)
         .withColumn("zscore", z)
         .drop(
-            "_jk", "_v", "_r", "_nn", "_cum", "_cumq", "_resolved",
+            "_gk", "_v", "_r", "_nn", "_cum", "_cumq", "_resolved",
             "_nn_l", "_cum_l", "_cumq_l",
         )
     )
@@ -407,16 +324,15 @@ def edge_metric_feed(
     stable turn ordering, mirroring the order-dependent rate the Go
     code computes from its running aggregate; SURVEY.md §7.3.4).
 
-    ``two_phase`` (default) computes the running sums BOUNDED: rows are
-    blocked by ``block_duration`` time buckets of ``ts_col`` (monotone
-    in the primary ordering column, so block order == row order), the
-    running error/call counts accumulate locally per (edge, block), and
-    each block's starting offsets come from a window over the tiny
-    per-block totals table — the exact ``turn_rank_salted`` pattern
-    (skew.py:33). No task ever sorts or scans a hot edge's full
-    history, only one block of it; running sums are associative so the
-    result is identical to the single-window form (``two_phase=False``,
-    kept for plan comparison) for any block choice.
+    ``two_phase`` (default) computes the running error/call counts
+    BOUNDED with ``skew.block_prefix_sums``: rows are blocked by
+    ``block_duration`` time buckets of ``ts_col`` (monotone in the
+    primary ordering column, so block order == row order; a NULL ts
+    falls in the earliest block, like the window form's
+    ASC-nulls-first). No task ever sorts or scans a hot edge's full
+    history, only one block of it, and the result is identical to the
+    single-window form (``two_phase=False``, kept for plan comparison)
+    for any block choice.
 
     Output: key columns + (ts, metric, value) with metric ∈
     {'latency', 'error_rate'} — feed straight into rolling_zscore /
@@ -431,54 +347,13 @@ def edge_metric_feed(
     # window expressions can't live inside a generator's projection —
     # materialize the running rate as a column first, then explode
     if two_phase:
-        from .skew import group_key_struct
-
-        # null-safe edge key + never-null block id (skew.py invariant).
-        # The coalesce must sit INSIDE window(): Spark's TimeWindowing
-        # rule injects an `input IS NOT NULL` filter, so a NULL ts fed
-        # directly to window() silently drops the row; the sentinel
-        # timestamp (Spark's minimum year) sorts before all real data,
-        # matching the window form's ASC-nulls-first ordering
-        blk = F.window(
-            F.coalesce(
-                F.col(ts_col), F.to_timestamp(F.lit("0001-01-01 00:00:00"))
-            ),
-            block_duration,
-        )["start"]
-        with_blk = df.withColumn("_ek", group_key_struct(*key_cols)).withColumn(
-            "_blk", blk
-        )
-        w_loc = (
-            Window.partitionBy("_ek", "_blk")
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        local = with_blk.withColumn("_err_loc", F.sum(is_err).over(w_loc)).withColumn(
-            "_cnt_loc", F.count(F.lit(1)).over(w_loc)
-        )
-        totals = with_blk.groupBy("_ek", "_blk").agg(
-            F.sum(is_err).alias("_err_tot"), F.count("*").alias("_cnt_tot")
-        )
-        w_off = (
-            Window.partitionBy("_ek")
-            .orderBy("_blk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = totals.select(
-            "_ek",
-            "_blk",
-            F.coalesce(F.sum("_err_tot").over(w_off), F.lit(0)).alias("_err_off"),
-            F.coalesce(F.sum("_cnt_tot").over(w_off), F.lit(0)).alias("_cnt_off"),
-        )
-        with_rate = (
-            local.join(offsets, ["_ek", "_blk"])
-            .withColumn(
-                "_rate",
-                (F.col("_err_off") + F.col("_err_loc"))
-                / (F.col("_cnt_off") + F.col("_cnt_loc")),
-            )
-            .drop("_ek", "_blk", "_err_loc", "_cnt_loc", "_err_off", "_cnt_off")
-        )
+        with_rate = block_prefix_sums(
+            df,
+            key_cols,
+            order_cols,
+            null_safe_window(F.col(ts_col), block_duration)["start"],
+            {"_err": is_err, "_cnt": F.lit(1)},
+        ).withColumn("_rate", F.col("_err") / F.col("_cnt"))
     else:
         w = (
             Window.partitionBy(*key_cols)

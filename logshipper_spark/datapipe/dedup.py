@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import hold, release_held
+from ..skew import salted_topk
 from .similarity import floor_round
 from .textstats import tokens
 
@@ -832,7 +833,7 @@ def representatives(
 
     Scale: a viral template's component can hold millions of members,
     so the per-component argmax is the salted two-phase top-1
-    (``sampling.topk_per_group`` / ``dsir_select`` pattern): phase 1
+    (``skew.salted_topk`` with k = 1): phase 1
     takes each (component, salt)-bucket's best row, phase 2 ranks the
     <= salt_buckets survivors per component — no task ever sorts a
     whole hot component. The winner table (one compact row per
@@ -844,21 +845,14 @@ def representatives(
     sid = F.col(id_col)
     d = labels.join(scores.select(id_col, score_col), id_col, "left")
     order = [F.desc_nulls_last(score_col), sid.asc()]
-    salted = d.withColumn(
-        "_salt", F.pmod(F.xxhash64(sid, F.lit(seed + 1)), F.lit(salt_buckets))
-    )
-    local_w = Window.partitionBy("component", "_salt").orderBy(*order)
-    survivors = (
-        salted.withColumn("_lr", F.row_number().over(local_w))
-        .filter(F.col("_lr") == 1)
-        .drop("_lr", "_salt")
-    )
-    global_w = Window.partitionBy("component").orderBy(*order)
-    winners = (
-        survivors.withColumn("_gr", F.row_number().over(global_w))
-        .filter(F.col("_gr") == 1)
-        .select(F.col("component"), sid.alias("_win_id"))
-    )
+    winners = salted_topk(
+        d,
+        ["component"],
+        order,
+        1,
+        F.pmod(F.xxhash64(sid, F.lit(seed + 1)), F.lit(salt_buckets)),
+        "_gr",
+    ).select(F.col("component"), sid.alias("_win_id"))
     return d.join(winners, "component").select(
         sid,
         "component",

@@ -39,19 +39,20 @@ Scale posture (100 TB):
 - the model is exactly ≤ num_buckets rows — always broadcast; scoring
   is one explode + one broadcast join + one map-side-combined groupBy
   on the document id. The raw corpus never shuffles its text.
-- selection is a salted two-phase top-k (sampling.topk_per_group
-  pattern): no task ever sorts more than one salt bucket, and the
-  global phase sees ≤ salt_buckets * k rows.
+- selection is a salted two-phase top-k (skew.salted_topk): no task
+  ever sorts more than one salt bucket, and the global phase sees
+  ≤ salt_buckets * k rows.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import hold
+from ..skew import salted_topk
 from .filters import word_ngrams
 from .textstats import tokens
 
@@ -283,7 +284,7 @@ def dsir_select(
     reuse a materialized noise column (the contract path); otherwise
     the noise derives in-plan from ``gumbel_log2_micro(id, seed)``.
 
-    Two-phase salted top-k (sampling.topk_per_group pattern): phase 1
+    Two-phase salted top-k (``skew.salted_topk``, one global group): phase 1
     ranks within a hash-derived salt bucket and keeps each bucket's
     local top-k (any global top-k row is necessarily in its bucket's
     local top-k), phase 2 ranks the ≤ salt_buckets*k survivors. The
@@ -300,22 +301,14 @@ def dsir_select(
         "key_micro", (F.col("logw_micro") + g).cast("long")
     )
     order = [F.col("key_micro").desc(), F.col(id_col).asc()]
-    salted = d.withColumn(
-        "_salt",
+    chosen = salted_topk(
+        d,
+        [],
+        order,
+        k,
         F.pmod(F.xxhash64(F.col(id_col), F.lit(seed + 1)), F.lit(salt_buckets)),
-    )
-    local_w = Window.partitionBy("_salt").orderBy(*order)
-    survivors = (
-        salted.withColumn("_lr", F.row_number().over(local_w))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    global_w = Window.partitionBy().orderBy(*order)
-    chosen = (
-        survivors.withColumn("_gr", F.row_number().over(global_w))
-        .filter(F.col("_gr") <= k)
-        .select(F.col(id_col).alias("_sel_id"))
-    )
+        "_gr",
+    ).select(F.col(id_col).alias("_sel_id"))
     return d.join(
         F.broadcast(chosen), d[id_col] == F.col("_sel_id"), "left"
     ).select(

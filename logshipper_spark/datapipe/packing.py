@@ -10,7 +10,8 @@ expressible exactly as a running sum + an interval/chunk overlap
 explode, so it stays fully relational.
 
 Scale posture: the running token sum uses the block-offset two-phase
-decomposition (sampling.block_running_sum — no task scans a group's
+decomposition (sampling.block_running_sum over
+skew.block_prefix_sums — no task scans a group's
 full history even when one source holds half the corpus). The overlap
 explode is map-only and emits ceil(n_tokens/budget)+1 rows per
 document at most, so output size is O(total_tokens / budget + docs).
@@ -211,7 +212,8 @@ def shard_plan(
     Deterministic and partition-independent: the layout depends only on
     the ordering key (non-numeric keys lay out in ``(xxhash64(key),
     key)`` order — see ``pack_chunks``). The running sum is the block-offset two-phase
-    decomposition (sampling.block_running_sum) — one corpus-sized group
+    decomposition (sampling.block_running_sum over
+    skew.block_prefix_sums) — one corpus-sized group
     never funnels through one task; the subsequent physical write is
     ``.repartition(shard)`` + partitionBy, one shuffle sized by the
     data. Per-group sharding (``group_col``) keys shard streams by

@@ -12,8 +12,8 @@ Scale posture per op:
   salted local window bounds every task at its salt-bucket's rows,
   then the global window sees at most salt_buckets*k rows per group,
   so a group holding half the corpus never sorts in one task.
-- token_budget_head: running token sum per group with the same
-  block-offset decomposition as skew.turn_rank_salted — per-task work
+- token_budget_head: running token sum per group with the
+  block-offset decomposition (skew.block_prefix_sums) — per-task work
   is bounded by block_size regardless of group size.
 """
 
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..skew import block_prefix_sums, null_safe_block, salted_topk
 from . import textstats
 
 BUCKETS = 1_000_000
@@ -195,23 +196,17 @@ def topk_per_group(
     survivors per group. Any global top-k row is necessarily in its
     bucket's local top-k, so the result is EXACTLY the single-window
     answer (the contract oracle re-derives it that way) while no task
-    ever sorts more than one salt-bucket of a hot group."""
+    ever sorts more than one salt-bucket of a hot group
+    (``skew.salted_topk``)."""
     key = F.col(key_col)
-    d = df.withColumn("_rk", rank_key(key, seed)).withColumn(
-        "_salt", F.pmod(F.xxhash64(key, F.lit(seed + 1)), F.lit(salt_buckets))
-    )
-    local_w = Window.partitionBy(*group_cols, "_salt").orderBy("_rk")
-    survivors = (
-        d.withColumn("_lr", F.row_number().over(local_w))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    global_w = Window.partitionBy(*group_cols).orderBy("_rk")
-    return (
-        survivors.withColumn("_gr", F.row_number().over(global_w))
-        .filter(F.col("_gr") <= k)
-        .drop("_gr", "_rk")
-    )
+    return salted_topk(
+        df.withColumn("_rk", rank_key(key, seed)),
+        group_cols,
+        [F.col("_rk")],
+        k,
+        F.pmod(F.xxhash64(key, F.lit(seed + 1)), F.lit(salt_buckets)),
+        "_gr",
+    ).drop("_gr", "_rk")
 
 
 def numeric_order(
@@ -254,62 +249,28 @@ def block_running_sum(
     together with `tiebreaks`, extra ordering lanes for when the
     blockable numeric key alone has ties, see ``numeric_order``),
     added as `out_col` — exactly `SUM(val) OVER (PARTITION BY group
-    ORDER BY ord ROWS UNBOUNDED PRECEDING)` but computed with the
-    block-offset pattern (skew.py:33): blocks are ranges of the
-    ordering key, so a local rowsBetween cumsum per (group, block)
-    plus a per-block offset table (~rows/block_size rows) reproduces
-    the unbounded window without any task scanning a group's full
-    history. Tied `order_col` values always share a block (ids derive
-    from `order_col` alone), so tiebreak lanes never cross blocks and
-    the two-phase order stays total.
+    ORDER BY ord ROWS UNBOUNDED PRECEDING)` but computed with
+    ``skew.block_prefix_sums`` over blocks of `order_col` — no task
+    scans a group's full history. Tied `order_col` values always share
+    a block (ids derive from `order_col` alone), so tiebreak lanes never
+    cross blocks and the two-phase order stays total.
 
-    Single-window parity holds for the edge shapes too: the offset
-    join runs on a struct-wrapped group key (struct equality is
-    null-safe, so a NULL group keeps its rows instead of vanishing
-    through the equi-join — and the struct shares the windows' hash
-    partitioning, so no extra exchange), and a non-null-count lane
-    reproduces SUM's NULL semantics exactly (NULL until the group's
-    first non-null value, then the running sum of non-nulls — a bare
-    offset+local sum would NULL-poison every row of a block whose own
-    prefix is all-NULL even when earlier blocks carried values)."""
-    from ..skew import group_key_struct, null_safe_block
-
-    d = df.withColumn("_gk", group_key_struct(group_col)).withColumn(
-        "_blk", null_safe_block(F.col(order_col), block_size)
-    )
-    local_w = (
-        Window.partitionBy("_gk", "_blk")
-        .orderBy(order_col, *(tiebreaks or []))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    with_local = d.withColumn(
-        "_run", F.coalesce(F.sum(val_col).over(local_w), F.lit(0))
-    ).withColumn("_nnr", F.count(val_col).over(local_w))
-    sums = d.groupBy("_gk", "_blk").agg(
-        F.coalesce(F.sum(val_col), F.lit(0)).alias("_s"),
-        F.count(val_col).alias("_n"),
-    )
-    off_w = (
-        Window.partitionBy("_gk")
-        .orderBy("_blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sums.select(
-        "_gk",
-        "_blk",
-        F.coalesce(F.sum("_s").over(off_w), F.lit(0)).alias("_off"),
-        F.coalesce(F.sum("_n").over(off_w), F.lit(0)).alias("_noff"),
-    )
+    A non-null-count lane reproduces SUM's NULL semantics exactly (NULL
+    until the group's first non-null value, then the running sum of
+    non-nulls — a bare offset+local sum would NULL-poison every row of a
+    block whose own prefix is all-NULL even when earlier blocks carried
+    values)."""
+    v = F.col(val_col)
     return (
-        with_local.join(offsets, ["_gk", "_blk"])
-        .withColumn(
-            out_col,
-            F.when(
-                F.col("_noff") + F.col("_nnr") > 0,
-                F.col("_off") + F.col("_run"),
-            ),
+        block_prefix_sums(
+            df,
+            [group_col],
+            [order_col, *(tiebreaks or [])],
+            null_safe_block(F.col(order_col), block_size),
+            {"_run": v, "_nnr": v.isNotNull().cast("long")},
         )
-        .drop("_gk", "_blk", "_run", "_nnr", "_off", "_noff")
+        .withColumn(out_col, F.when(F.col("_nnr") > 0, F.col("_run")))
+        .drop("_gk", "_blk", "_run", "_nnr")
     )
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import hold
+from ..skew import salted_join
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -219,7 +220,7 @@ def ivf_knn_join(
     ``tests/test_plan_budgets.py::test_ivf_knn_join_splits_hot_cell``); (b)
     ``salt=s`` — explicit two-sided salting: index rows carry
     ``pmod(xxhash64(id), s)``, each query-probe row fans out to all
-    ``s`` salt lanes, and the join key becomes ``(cell, _salt)`` — a
+    ``s`` salt lanes, and the join key becomes (cell, lane) — a
     hot cell spreads across ``s`` tasks deterministically (results
     identical: every (candidate, probe) pair still meets exactly
     once). Salting multiplies the query side ×``s``, so prefer (a)
@@ -267,24 +268,13 @@ def ivf_knn_join(
             F.col("cell").cast("int").alias("cell"),
         )
     )
-    join_keys = ["cell"]
-    if salt and salt > 1:
-        # two-sided salt: index rows hold ONE salt lane, probe rows fan
-        # out to ALL lanes — the salt explode happens AFTER the persist
-        # so the probe-set collect isn't multiplied
-        idx = idx.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int")
-        )
-        qx = qx.withColumn(
-            "_salt",
-            F.explode(F.sequence(F.lit(0), F.lit(salt - 1))),
-        )
-        join_keys = ["cell", "_salt"]
     n2 = F.col("_in") * F.col("_qn")
     cos = F.when(
         n2 > 0, _dot(F.col(vec_col), F.col("_qv")) / n2
     ).otherwise(F.lit(0.0))
-    scored = idx.join(qx, join_keys).select(
+    # two-sided salt (skew.salted_join): the probe fan-out happens
+    # AFTER the hold, so the probe-set collect isn't multiplied
+    scored = salted_join(idx, qx, ["cell"], id_col, salt).select(
         query_id_col,
         F.col(id_col),
         floor_round(cos, 6).alias("cosine"),
@@ -1486,22 +1476,11 @@ def ivf_pq_knn_join(
     codes = spark.read.parquet(path).where(
         F.col("cell").isin(probed) if probed else F.lit(False)
     )
-    join_keys = ["cell"]
-    if salt and salt > 1:
-        # two-sided hot-cell salt (see ivf_knn_join): code rows carry
-        # one hash lane, probe rows fan out to all lanes post-persist
-        codes = codes.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int")
-        )
-        qx = qx.withColumn(
-            "_salt",
-            F.explode(F.sequence(F.lit(0), F.lit(salt - 1))),
-        )
-        join_keys = ["cell", "_salt"]
     adc: Column = F.lit(0).cast("long")
     for s in range(m):
         adc = adc + F.element_at(F.col(f"_lut{s}"), F.col("codes")[s] + 1)
-    joined = codes.join(qx, join_keys).select(
+    # two-sided hot-cell salt, fanned out after the hold (see ivf_knn_join)
+    joined = salted_join(codes, qx, ["cell"], id_col, salt).select(
         query_id_col,
         F.col(id_col),
         adc.alias("adc_micros"),

@@ -8,6 +8,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import hold
+from ..skew import null_safe_window, salted_topk
 
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic
 STOPWORDS = {
@@ -389,7 +390,7 @@ def bm25_topk(
     full vocabulary nor re-tokenizes the corpus. The
     only corpus-keyed shuffle is the map-side-combined (query, doc)
     score aggregate, bounded by sum-of-df over query terms. The final
-    top-k is a salted two-phase window (phase 1 ranks within (query,
+    top-k is ``skew.salted_topk`` (phase 1 ranks within (query,
     doc-hash salt) and keeps k, phase 2 ranks the ≤ salt_buckets*k
     survivors), so a stop-word query never funnels its full candidate
     set through one task. ``max_df_frac`` drops query terms with df >
@@ -398,8 +399,6 @@ def bm25_topk(
 
     ``stats=(n_docs, total_tokens)`` skips the one tiny accounting
     action when the caller already knows them (corpus_stats pass)."""
-    from pyspark.sql import Window
-
     if stats is None:
         row = docs.select(
             F.count("*").alias("n"),
@@ -441,32 +440,19 @@ def bm25_topk(
             F.count("*").cast("long").alias("matched_terms"),
         )
     )
-    salted = scored.withColumn(
-        "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-    )
-    local_w = Window.partitionBy("query_id", "_salt").orderBy(
-        F.desc("_sm"), F.asc("doc_id")
-    )
-    survivors = (
-        salted.withColumn("_lr", F.row_number().over(local_w))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    global_w = Window.partitionBy("query_id").orderBy(
-        F.desc("_sm"), F.asc("doc_id")
-    )
-    return (
-        survivors.withColumn(
-            "rank", F.row_number().over(global_w).cast("long")
-        )
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "doc_id",
-            "rank",
-            (F.col("_sm") / F.lit(1e6)).alias("score"),
-            "matched_terms",
-        )
+    return salted_topk(
+        scored,
+        ["query_id"],
+        [F.desc("_sm"), F.asc("doc_id")],
+        k,
+        F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
+        "rank",
+    ).select(
+        "query_id",
+        "doc_id",
+        F.col("rank").cast("long").alias("rank"),
+        (F.col("_sm") / F.lit(1e6)).alias("score"),
+        "matched_terms",
     )
 
 
@@ -486,22 +472,13 @@ def trending_terms(
 
     Plan shape: tokenize (map-only) → ONE map-side-combined count
     shuffle on (bucket, token) — Zipf skew arrives pre-combined per map
-    task — → salted two-phase top-k on the (count, token) order (phase
-    1 ranks within (bucket, token-hash salt) and keeps local top-k;
-    any global top-k term is necessarily in its salt's local top-k, so
-    phase 2 ranks ≤ salt_buckets·k survivors per bucket): a bucket's
-    full vocabulary never sorts in one task. NULL-``ts_col`` rows land
-    in a NULL ``window_start`` group (coalesce-to-sentinel INSIDE
-    window() — Spark's TimeWindowing rule silently drops NULL inputs,
-    the CLAUDE.md round-3 gotcha)."""
-    from pyspark.sql import Window
-
-    sentinel = F.to_timestamp(F.lit("0001-01-01 00:00:00"))
+    task — → ``skew.salted_topk`` on the (count, token) order, salted
+    by token hash: a bucket's full vocabulary never sorts in one task.
+    NULL-``ts_col`` rows land in a NULL ``window_start`` group
+    (``skew.null_safe_window``)."""
     counts = (
         df.select(
-            F.window(
-                F.coalesce(F.col(ts_col), sentinel), duration
-            ).alias("_w"),
+            null_safe_window(F.col(ts_col), duration).alias("_w"),
             F.col(ts_col).isNull().alias("_ts_null"),
             F.explode(tokens(F.lower(F.col(text_col)))).alias("token"),
         )
@@ -509,31 +486,18 @@ def trending_terms(
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= min_count)
     )
-    salted = counts.withColumn(
-        "_salt", F.pmod(F.xxhash64("token"), F.lit(salt_buckets))
-    )
-    local_w = Window.partitionBy("_w", "_ts_null", "_salt").orderBy(
-        F.col("n").desc(), F.col("token")
-    )
-    survivors = (
-        salted.withColumn("_lr", F.row_number().over(local_w))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    global_w = Window.partitionBy("_w", "_ts_null").orderBy(
-        F.col("n").desc(), F.col("token")
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(global_w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.when(~F.col("_ts_null"), F.col("_w.start")).alias(
-                "window_start"
-            ),
-            "token",
-            "n",
-            "rank",
-        )
+    return salted_topk(
+        counts,
+        ["_w", "_ts_null"],
+        [F.col("n").desc(), F.col("token")],
+        k,
+        F.pmod(F.xxhash64("token"), F.lit(salt_buckets)),
+        "rank",
+    ).select(
+        F.when(~F.col("_ts_null"), F.col("_w.start")).alias("window_start"),
+        "token",
+        "n",
+        "rank",
     )
 
 

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .skew import null_safe_window
+
 
 def is_error_pattern(
     level: Column | None = None, status_code: Column | None = None
@@ -59,11 +61,7 @@ def sink_counts(
     """
     is_error = is_error_pattern()
     if null_bucket:
-        # sentinel INSIDE window() (TimeWindowing NULL-drop gotcha);
-        # the extra _ts_null key never splits a real group — all rows
-        # of a non-sentinel bucket have _ts_null = false
-        sentinel = F.to_timestamp(F.lit("0001-01-01 00:00:00"))
-        w = F.window(F.coalesce(F.col(ts_col), sentinel), window_duration)
+        w = null_safe_window(F.col(ts_col), window_duration)
         keys = [
             F.col("sink"),
             F.col("conv_id"),

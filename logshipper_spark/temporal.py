@@ -22,8 +22,8 @@ Spark-first designs, no UDFs anywhere:
   never mix with an earlier row's fields.
 
 * ``asof_join_blocked`` — the same semantics with bounded per-task
-  state for hot keys (the skew.py block-offset pattern, CLAUDE.md
-  invariants): rows bucket into time blocks, phase 1 computes the
+  state for hot keys (the blocking and NULL-safe key of
+  skew.block_prefix_sums): rows bucket into time blocks, phase 1 computes the
   in-block running last, phase 2 derives each block's carry-in from a
   tiny per-(key, block) summary table, phase 3 coalesces. No task ever
   sorts a hot key's full history.
@@ -198,10 +198,12 @@ def asof_join_blocked(
     per non-empty block, tiny); phase 3 coalesces in-block last with
     the carry. No task sorts more than one block of one key.
 
-    skew.py invariants: the summary join is on the (struct key, block)
-    pair — struct equality is null-safe, so NULL keys behave exactly
-    like the single-window form — and NULL probe timestamps land in
-    NULL_BLOCK (sorts before every real block, matches nothing).
+    The summary join is on the (struct key, block) pair, as in
+    ``skew.block_prefix_sums`` — struct equality is null-safe, so NULL
+    keys behave exactly like the single-window form — and NULL probe
+    timestamps land in NULL_BLOCK (sorts before every real block,
+    matches nothing). The carry-in is a last-value carry, not a sum, so
+    it keeps its own code rather than that helper.
     """
     payloads = payloads if payloads is not None else [
         c for c in build.columns if c not in set(keys) | {build_ts}

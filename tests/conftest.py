@@ -12,5 +12,10 @@ def spark():
     s.stop()
 
 
+def plan_string(df) -> str:
+    """``df``'s executed physical plan as Spark prints it."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def rows_as_dicts(df):
     return [r.asDict(recursive=True) for r in df.collect()]

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from logshipper_spark.datapipe import dedup, multimodal, similarity, textstats
 from logshipper_spark.session import release_held
 
+from .conftest import plan_string
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -281,7 +283,7 @@ def test_ivf_indexed_partition_pruning(spark, embs, tmp_path):
         r.asDict() for r in onthefly.collect()
     ]
     probes = similarity.probe_cells(qv, num_cells=16, n_probe=4)
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(indexed)
     assert "PartitionFilters" in plan and "cell" in plan
     # only probed cell directories are read
     import re as _re
@@ -788,7 +790,7 @@ def test_ivf_pq_composed_pruning(spark, tmp_path):
     brute = similarity.cosine_topk(df, q, k=5).collect()
     assert [r["vec_id"] for r in got] == [r["vec_id"] for r in brute]
     assert all(r["vec_id"] % 3 == 0 for r in got)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(out)
     assert "PartitionFilters" in plan and "cell" in plan
     assert "ReadSchema: struct<vec_id:bigint,codes:array<int>>" in plan
     # determinism across evaluations
@@ -818,7 +820,7 @@ def test_ivf_pq_knn_join_self_top1(spark, embs, tmp_path):
         spark, path, q, k=3, n_probe=3, rerank_df=emb, rerank=8
     )
     rows = out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(out)
     release_held()
     by_q = {}
     for r in rows:

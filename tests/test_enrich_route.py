@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from logshipper_spark import gen, route
 from logshipper_spark.enrich import enrich_roles, resolve_expr, resolve_one, resolve_services
 
+from .conftest import plan_string
+
 LOOKUP = [
     ("10.0.0.5", "payment-db", False, 0),
     ("db.internal", "db-service", False, 1),
@@ -134,7 +136,7 @@ def test_enrich_roles_broadcast(spark):
     assert out[("user", "")]["team"] == "end-user"
     assert out[("mystery", "")]["team"] == ""  # unmatched → empty, row kept
     # plan must use a broadcast join (no shuffle of the fact side)
-    plan = enrich_roles(df, lookup)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(enrich_roles(df, lookup))
     assert "BroadcastHashJoin" in plan
 
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from logshipper_spark.graphalg import cycle_key, find_cycles, find_new_cycles
 
+from .conftest import plan_string
+
 
 def test_two_node_cycle():
     adj = {"a": ["b"], "b": ["a"]}
@@ -182,7 +184,7 @@ def test_with_cycle_key_matches_expr_and_stays_in_codegen(spark):
         "ELSE array('s' || CAST(i % 2 AS STRING)) END"
     )
     staged = with_cycle_key(df.select("i"), heavy, "k")
-    plan = staged._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(staged)
     # '*(n)' prefixes in the compact plan mark WholeStageCodegen spans;
     # the Project carrying the key must be inside one
     assert plan.lstrip().startswith("*("), plan.splitlines()[0]

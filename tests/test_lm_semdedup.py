@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from logshipper_spark.datapipe import dedup, lm, packing, semdedup
 from logshipper_spark.session import release_held
 
+from .conftest import plan_string
+
 
 # ── unigram LM scoring ──
 
@@ -432,7 +434,7 @@ def test_semantic_dedup_against_prunes_probe_cells(spark, tmp_path):
         [(10, [1.0, 0.02])], "vec_id long, embedding array<double>"
     )  # occupies cell 0 only
     out = semdedup.semantic_dedup_against(batch, path, threshold=0.999999)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(out)
     release_held()
     # the literal probe filter must reach the index scan's partition
     # pruning (single probed cell collapses isin to an equality)

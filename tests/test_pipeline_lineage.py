@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from logshipper_spark import gen, pipeline, route
 
 from . import oracle
+from .conftest import plan_string
 
 # two rules share sink_mixed; status_code >= 500 is NULL wherever the
 # transform below drops a zero status (a source without the field)
@@ -213,16 +214,12 @@ def test_run_batch_job_budget(spark, tmp_path):
     assert 0 < jobs <= JOB_BUDGET
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_small_driver_frames_stay_in_the_jvm(spark):
     lineage = pipeline.lineage_frame(
         spark, "r", 10, {"sink_a": 4}, [("events_received_total", 10)]
     )
     for df in (gen.lookup_roles(spark), gen.lookup_hosts(spark), lineage):
-        plan = _plan(df)
+        plan = plan_string(df)
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     assert [tuple(r)[:7] for r in lineage.collect()] == [
         ("r", "parse", -1, 10, 10, None, None),

@@ -22,6 +22,7 @@ from logshipper_spark.datapipe import packing, sampling, similarity
 from logshipper_spark.datapipe import textstats, tokenize
 from logshipper_spark.session import release_held
 
+from .conftest import plan_string
 from .test_datapipe import SF_DIR
 
 ORDER = ["ts", "conv_id", "turn_idx"]
@@ -29,16 +30,12 @@ _COUNTED = (r"Exchange hashpartitioning", r"Exchange rangepartitioning",
             r"BroadcastHashJoin", r"SortMergeJoin")
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def plan_counts(df) -> tuple[int, int, int, int]:
     """``(hash exchanges, range exchanges, BroadcastHashJoin,
     SortMergeJoin)`` in ``df``'s executed plan. A cached subtree is
     printed under each of its consumers, so its operators count once
     per consumer although they execute once."""
-    s = _plan(df)
+    s = plan_string(df)
     return tuple(len(re.findall(p, s)) for p in _COUNTED)
 
 
@@ -266,7 +263,7 @@ def test_plan_budget(request, build, budget):
 
 def test_parquet_scan_pushdown(spark):
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    plan = _plan(ev.filter("event_type = 'error' AND value > 50")
+    plan = plan_string(ev.filter("event_type = 'error' AND value > 50")
                  .select("event_id", "value"))
     assert ("PushedFilters: [IsNotNull(event_type), IsNotNull(value), "
             "EqualTo(event_type,error), GreaterThan(value,50.0)]") in plan
@@ -280,7 +277,7 @@ def test_ivf_knn_join_prunes_to_literal_cells(spark, emb, ivf_dir):
     pruning."""
     knn = similarity.ivf_knn_join(
         spark, ivf_dir, emb.filter("vec_id < 8"), k=5, dim=_dim(emb))
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", _plan(knn))
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan_string(knn))
     assert m and re.match(r"cell#\d+ (IN \(|INSET )\d", m.group(1))
 
 
@@ -313,7 +310,7 @@ def test_ivf_knn_join_splits_hot_cell(spark, tmp_path):
             spark, str(tmp_path), corpus.filter("vec_id % 400 = 0"), k=5,
             num_cells=8, n_probe=2, dim=16)
         sknn.collect()
-        plan = _plan(sknn)
+        plan = plan_string(sknn)
     finally:
         for k, v in saved.items():
             if v is None:

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from logshipper_spark import session
 from logshipper_spark.datapipe import substr
 
+from .conftest import plan_string
+
 SHARED = "the quick brown fox jumps over the lazy dog again and again forever"
 
 
@@ -134,7 +136,7 @@ def test_fingerprint_cache_shared_across_branches(spark):
     df = _corpus(spark)
     session.release_held()
     pairs = substr.substr_dup_pairs(df, w=4, window=3)
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(pairs)
     assert plan.count("InMemoryTableScan") >= 3
     assert pairs.count() == 1
     assert len(session._HELD) >= 1

@@ -6,10 +6,7 @@ from pyspark.sql import functions as F
 
 from logshipper_spark import gen, tables
 
-
-def _scan_partition_count(df) -> tuple[int, str]:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan
+from .conftest import plan_string
 
 
 def test_partition_pruning(spark, tmp_path):
@@ -20,13 +17,13 @@ def test_partition_pruning(spark, tmp_path):
 
     # time-range pruning: one day's partitions only
     day = full.filter(F.col("ts_day") == "2024-03-01")
-    plan = day._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(day)
     assert "PartitionFilters" in plan and "ts_day" in plan
 
     # conversation point lookup prunes to one bucket
     cid = full.select("conv_id").first()["conv_id"]
     one = full.filter(tables.conv_bucket_of(cid, 8)).filter(F.col("conv_id") == cid)
-    plan1 = one._jdf.queryExecution().executedPlan().toString()
+    plan1 = plan_string(one)
     assert "conv_bucket" in plan1.split("PartitionFilters")[1].split("]")[0]
 
     # pruned read returns exactly the conversation's rows

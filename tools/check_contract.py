@@ -8,13 +8,16 @@ order-insensitive value hash. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so a second checkout checks its own code
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from logshipper_spark.session import get_spark, release_held  # noqa: E402
