@@ -284,8 +284,8 @@ def dsir_select(
     reuse a materialized noise column (the contract path); otherwise
     the noise derives in-plan from ``gumbel_log2_micro(id, seed)``.
 
-    Two-phase salted top-k (``skew.salted_topk``, one global group): phase 1
-    ranks within a hash-derived salt bucket and keeps each bucket's
+    Two-phase salted top-k (``skew.salted_topk``, one global group):
+    phase 1 ranks within a hash-derived salt bucket and keeps each bucket's
     local top-k (any global top-k row is necessarily in its bucket's
     local top-k), phase 2 ranks the ≤ salt_buckets*k survivors. The
     k selected ids then broadcast back onto the full frame — never

@@ -23,10 +23,10 @@ Spark-first designs, no UDFs anywhere:
 
 * ``asof_join_blocked`` — the same semantics with bounded per-task
   state for hot keys (the blocking and NULL-safe key of
-  skew.block_prefix_sums): rows bucket into time blocks, phase 1 computes the
-  in-block running last, phase 2 derives each block's carry-in from a
-  tiny per-(key, block) summary table, phase 3 coalesces. No task ever
-  sorts a hot key's full history.
+  skew.block_prefix_sums): rows bucket into time blocks, phase 1
+  computes the in-block running last, phase 2 derives each block's
+  carry-in from a tiny per-(key, block) summary table, phase 3
+  coalesces. No task ever sorts a hot key's full history.
 
 * ``range_join`` — broadcast form for small interval tables (the
   common case: incident/deploy windows are tiny next to the fact

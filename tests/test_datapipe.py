@@ -979,6 +979,12 @@ def test_topk_per_group_matches_single_window(spark):
     for r in got:
         per[r["source"]] = per.get(r["source"], 0) + 1
     assert all(v == 5 for v in per.values())
+    # one salt bucket per group: the phase-1 cut alone decides, so it
+    # must keep exactly k rows (with 8 buckets a top k rarely shares one)
+    one = sampling.topk_per_group(df, ["source"], k=5, salt_buckets=1)
+    assert sorted((r["source"], r["doc_id"]) for r in one.collect()) == sorted(
+        (r["source"], r["doc_id"]) for r in want
+    )
     # group smaller than k → whole group kept
     small = df.filter("doc_id < 3")
     assert sampling.topk_per_group(small, ["source"], k=5).count() == 3
