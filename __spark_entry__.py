@@ -3095,10 +3095,10 @@ def _sql_floor_round(x: str, dp: int = 6) -> str:
 
 
 def _sql_sq_l2_micros(a_elem: str, b_elem: str, n: int) -> str:
-    """DuckDB twin of ``similarity._sq_l2_micros``: INTEGER-EXACT
+    """DuckDB twin of ``similarity._micro_sq_l2``: INTEGER-EXACT
     squared L2 — per-term ``floor(COALESCE((a-b)²,0)·1e6 + 0.5)`` cast
     BIGINT, list_sum'd. The ops are the same IEEE doubles + exact
-    floor the Spark expression computes, so every cross-engine
+    floor the Spark-side Arrow kernels compute, so every cross-engine
     distance comparison agrees by construction (the round-4 PQ-gate
     fix: F.round-vs-DuckDB-round could flip a .5-boundary tie).
     ``a_elem``/``b_elem`` are element expressions containing ``[i]``
@@ -3113,7 +3113,7 @@ def _sql_sq_l2_micros(a_elem: str, b_elem: str, n: int) -> str:
 def _pq_adc_ctes(base: str) -> tuple[str, str]:
     """Shared PQ-oracle CTE block: per-subspace nearest-code assignment
     (integer-micro squared L2, code tie-break — the
-    nearest_centroid_struct / _sq_l2_micros convention) over rows of ``base``
+    similarity._pq_codes_arrow / _micro_sq_l2 convention) over rows of ``base``
     (``vec_id, v``), plus per-element integer-micros partial dots with
     the query (``floor(q_i·c_i·1e6 + 0.5)`` summed as BIGINT — exactly
     the driver's lookup-table arithmetic in similarity._adc_scored).

@@ -17,8 +17,9 @@ with the published pruning recipe.
 Determinism / oracle posture: centroids come from the deterministic
 ``similarity.kmeans_fit`` (maximin seeding, no rand()) and are
 driver-literals at scoring time; the per-vector distance is integer
-micros from ``nearest_centroid_struct`` (the ``_sq_l2_micros``
-cross-engine convention) and the grid rescale is integer DIV, so ranks
+micros from ``nearest_centroid_struct_col`` (the
+``similarity._micro_sq_l2`` cross-engine convention) and the grid
+rescale is integer DIV, so ranks
 and keep decisions are integer-exact and partition-independent. The
 contract oracle re-derives assignment, distance, rank, and the keep
 rule from the materialized centroid bytes.
@@ -57,20 +58,16 @@ def prototype_scores(
 ) -> DataFrame:
     """Per-vector prototypicality: ``(id, cell, dist_micro)`` where
     cell is the nearest trained centroid and dist_micro the squared L2
-    distance to it. ``nearest_centroid_struct`` now yields the
-    distance directly as INTEGER MICROS (long — the ``_sq_l2_micros``
+    distance to it. ``nearest_centroid_struct_col`` yields the
+    distance directly as INTEGER MICROS (long — the ``_micro_sq_l2``
     convention), so the grid rescale is pure integer arithmetic:
     ``(d_micros·grid + 500000) DIV 1000000`` (round-half-up, exact in
     any engine — no float round anywhere, the round-4 tie-trap class
     is structurally gone). With the default ``grid`` = 1e6 this is the
     micro distance itself. Map-only."""
-    # stage the struct once: at/above the Arrow threshold this is one
-    # kernel call; below it, the expression HOF tree is NOT
-    # common-subexpression-eliminated across output columns —
-    # referencing it from both cell and dist_micro in one projection
-    # plans it twice per row (verified: 2x the aggregate() nodes in the
-    # executed plan), while CollapseProject keeps this non-cheap
-    # multi-referenced alias staged, so two selects = one evaluation
+    # stage the struct once: both cell and dist_micro read it, and
+    # CollapseProject keeps a non-cheap multi-referenced alias staged,
+    # so two selects = one kernel call per row
     staged = df.select(
         F.col(id_col),
         nearest_centroid_struct_col(vec_col, centroids).alias("_best"),

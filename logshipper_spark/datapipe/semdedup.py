@@ -11,7 +11,7 @@ bucket it.
 The LogShipper reference has no embedding layer — this is the standard
 public technique, composed entirely from operators this repo already
 oracle-checks: trained centroids (similarity.kmeans_fit), literal-
-centroid cell assignment (similarity._nearest_centroid — the
+centroid cell assignment (similarity._nearest_centroid_col — the
 ann_ivf_trained oracle re-derives it in SQL), and min-label connected
 components (dedup.near_dup_components).
 
@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..session import hold
 from .dedup import near_dup_components
-from .similarity import _nearest_centroid_col, floor_round
+from .similarity import _nearest_centroid_col, _write_centroids, floor_round
 
 
 def _norm(v) -> Column:
@@ -180,12 +180,7 @@ def write_semantic_index(
     ).write.mode(mode).option("compression", codec).partitionBy(
         "cell"
     ).parquet(path + "/vectors")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").option("compression", codec).parquet(
-        path + "/centroids"
-    )
+    _write_centroids(spark, path + "/centroids", centroids, "overwrite", codec)
 
 
 def semantic_dedup_against(

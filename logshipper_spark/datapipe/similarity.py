@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import hold
+from ..session import hold, local_frame
 from ..skew import salted_join
 
 
@@ -454,102 +454,11 @@ def _vec_key(v: Column) -> Column:
     return F.xxhash64(F.concat_ws(",", v.cast("array<string>")))
 
 
-def _sq_l2_micros(v: Column, lit: Column) -> Column:
-    """INTEGER-EXACT squared L2 to a literal vector: each term is
-    ``floor((a-b)²·1e6 + 0.5)`` — three IEEE-754 double ops plus an
-    exact floor, bit-identical in Spark, DuckDB, Python, and numpy —
-    summed as longs (order-independent). This replaced the old
-    ``F.round(Σ, 6)`` double compare after the round-4 driver gate
-    flipped a (dist, code) tie on it: Spark rounds via exact BigDecimal
-    HALF_UP while DuckDB rounds in scaled double arithmetic, so a sum
-    landing near a .5 micro boundary could order differently
-    cross-engine. Per-term integer quantization makes hash parity
-    structural rather than probabilistic (the _adc_scored discipline).
-    A NULL term contributes 0 (per-term coalesce)."""
-    return F.aggregate(
-        F.zip_with(
-            v,
-            lit,
-            lambda a, b: F.floor(
-                F.coalesce((a - b) * (a - b), F.lit(0.0))
-                * F.lit(1_000_000.0)
-                + F.lit(0.5)
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
-    )
-
-
-def nearest_centroid_struct(v: Column, centroids: list[list[float]]) -> Column:
-    """``struct(d, i)`` of the nearest driver-literal centroid by
-    squared L2 in INTEGER MICROS (``_sq_l2_micros`` — per-term
-    ``floor(term·1e6+0.5)`` summed as longs, so an independent
-    re-derivation, the DuckDB oracle, agrees on every comparison by
-    construction), index tie-break. One multiply-add pass per centroid
-    per row. ``d`` is the micro-distance (long) to the WINNING
-    centroid — the prototypicality score pruning ranks on
-    (datapipe.pruning).
-
-    A NULL vector ELEMENT contributes 0 to every distance (per-term
-    coalesce) — matching kmeans_fit's Lloyd-sum convention exactly, so
-    assignment and centroid update agree on such rows instead of a
-    NULL distance silently degenerating every assignment to cell 0."""
-    ds = []
-    for i, c in enumerate(centroids):
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        d = _sq_l2_micros(v, lit)
-        ds.append(F.struct(d.alias("d"), F.lit(i).alias("i")))
-    return F.array_min(F.array(*ds))
-
-
-def _nearest_centroid(v: Column, centroids: list[list[float]]) -> Column:
-    """Argmin cell index of ``nearest_centroid_struct``."""
-    return nearest_centroid_struct(v, centroids)["i"].cast("int")
-
-
-def _nearest_centroid_col(vec_col: str, centroids: list[list[float]]) -> Column:
-    """``_nearest_centroid`` with the kernel/expression switch: at or
-    above ``_ARROW_ASSIGN_MIN_CELLS`` centroids the assignment runs in
-    the Arrow kernel (``_pq_codes_arrow`` with the centroid set as a
-    single full-width 'codebook' — identical integer-micro arithmetic,
-    no Janino cost), else the expression form. Index writers and cell
-    assigners that take a COLUMN NAME use this; pruning keeps the
-    struct form because it also needs the winning distance."""
-    if len(centroids) >= _ARROW_ASSIGN_MIN_CELLS:
-        return F.element_at(_pq_codes_arrow(vec_col, [centroids]), 1)
-    return _nearest_centroid(F.col(vec_col), centroids)
-
-
-# At or above this many centroids, nearest-centroid assignment uses
-# the Arrow-batched numpy kernel instead of the expression cascade —
-# same arithmetic (per-term floor((a-b)²·1e6+0.5), NULL→0, exact
-# integer-valued sums, first-index argmin), verified equal by
-# test_kmeans_arrow_assign_parity / test_pq_codes_arrow. The
-# expression form pays seconds of Janino compilation PER PROJECTION
-# (each Lloyd iteration recompiles its num_cells × dim fold cascade
-# because the centroid literals changed) and interprets past the
-# 64 KB method cliff; measured at sf0.1/64-dim the kernel wins even
-# at 8 cells (2.6 s vs 4.7 s kmeans_fit; pq_fit 1.9 s vs 5.4 s), so
-# the threshold sits low — the expression path remains for
-# tiny/degenerate centroid sets and as the parity reference. Oracle
-# re-derivability is unaffected: both paths produce identical codes
-# (integer-micro parity is structural), and the SQL oracles re-derive
-# from the persisted centroid/codebook bytes either way.
-_ARROW_ASSIGN_MIN_CELLS = 8
-
-# The per-QUERY probe-cell cascade in ivf_pq_knn_join keeps the
-# expression form longer: with one fold per cell over a small cached
-# cascade, the Arrow worker round trip costs more than the compute at
-# serving-typical small batches (measured +0.6 s at 16 cells /
-# 32 queries), and the Janino/64 KB wall only threatens at cell counts
-# far above contract scale. Parity between the two forms is pinned by
-# test_cell_dist_and_probe_kernels_match_expression.
-_ARROW_PROBE_MIN_CELLS = 64
-
-
-def _dense_rows(vs: pd.Series, dim: int) -> np.ndarray:
-    """``(rows, dim)`` matrix of an Arrow vector batch; missing/NULL → NaN."""
+def _dense_rows(vs, dim: int) -> np.ndarray:
+    """``(rows, dim)`` matrix of a vector batch (an Arrow series or a
+    driver-side list); missing/NULL elements and NULL vectors → NaN,
+    which ``_micro_sq_l2`` counts as a 0 term — so a short vector
+    compares exactly like Python's ``zip`` truncation."""
     arr = np.full((len(vs), dim), np.nan)
     for i, vec in enumerate(vs):
         if vec is None:
@@ -560,11 +469,34 @@ def _dense_rows(vs: pd.Series, dim: int) -> np.ndarray:
 
 
 def _micro_sq_l2(arr: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """``(rows, centroids)`` kernel twin of ``_sq_l2_micros``: per-term
-    ``floor((a-b)²·1e6+0.5)``, NaN terms 0, summed left to right in
-    float64 — exact, with no int64 astype per term, only below 2^53.
-    The terms are non-negative, so the final max bounds every partial
-    sum (unit-scale vectors × dim ≤ 1e3 stay near 1e10)."""
+    """The ONE squared-L2 implementation of the program, ``(rows,
+    centroids)``: INTEGER-EXACT micros — each term is
+    ``floor((a-b)²·1e6 + 0.5)``, three IEEE-754 double ops plus an
+    exact floor, bit-identical in Spark, DuckDB, Python and numpy, and
+    the sum of integer-valued terms is order-independent. This replaced
+    the old ``F.round(Σ, 6)`` double compare after the round-4 driver
+    gate flipped a (dist, code) tie on it: Spark rounds via exact
+    BigDecimal HALF_UP while DuckDB rounds in scaled double arithmetic,
+    so a sum landing near a .5 micro boundary could order differently
+    cross-engine. The DuckDB oracle twin is
+    ``__spark_entry__._sql_sq_l2_micros``. NaN terms (``_dense_rows``'
+    missing/NULL elements) contribute 0.
+
+    Terms are summed left to right in float64 — exact, with no int64
+    astype per term, only below 2^53. The terms are non-negative, so
+    the final max bounds every partial sum (unit-scale vectors × dim ≤
+    1e3 stay near 1e10); past it the call raises.
+
+    Every Spark-side assignment runs it inside an Arrow kernel
+    (``_pq_codes_arrow``, ``nearest_centroid_struct_col``,
+    ``_probe_cells_arrow``), never as an expression cascade: one
+    ``zip_with`` fold per centroid costs seconds of Janino compilation
+    per projection (each Lloyd iteration recompiles, the centroid
+    literals changed) and interprets past the 64 KB method cliff —
+    measured at sf0.1/64-dim, the kernel won even at 8 cells (kmeans_fit
+    2.6 s vs 4.7 s, pq_fit 1.9 s vs 5.4 s). At a handful of cells the
+    Arrow worker round trip costs more than the compute (+0.6 s at 16
+    probe cells / 32 queries), the price of one form."""
     acc = np.zeros((arr.shape[0], C.shape[0]))
     for j in range(C.shape[1]):
         d = arr[:, j][:, None] - C[None, :, j]
@@ -582,91 +514,125 @@ def _micro_sq_l2(arr: np.ndarray, C: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _lloyd_assign(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """``(cell, _v)`` Lloyd assignment of ``base._v`` to the nearest
-    driver-literal centroid — expression form for small centroid sets,
-    Arrow kernel beyond ``_ARROW_ASSIGN_MIN_CELLS`` (bit-identical; see
-    note above)."""
-    if len(centroids) < _ARROW_ASSIGN_MIN_CELLS:
-        return base.select(
-            _nearest_centroid(F.col("_v"), centroids).alias("cell"), "_v"
-        )
+def _pq_codes_arrow(
+    vec_col: str, codebooks: list[list[list[float]]]
+) -> Column:
+    """All ``m`` subspace code assignments in ONE Arrow kernel —
+    ``array<int>`` of per-subspace nearest-code indexes by
+    ``_micro_sq_l2``, first-index argmin (the SQL oracles' ``ORDER BY
+    dist, code``). A missing/NULL element contributes 0; a NULL vector
+    gets code 0 in every subspace."""
+    dim = sum(len(b[0]) for b in codebooks)
+    bounds = subspace_bounds(dim, len(codebooks))
+    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
+
+    @F.pandas_udf("array<int>")
+    def codes_of(vs: pd.Series) -> pd.Series:
+        arr = _dense_rows(vs, dim)
+        out = np.empty((len(vs), len(bounds)), dtype=np.int32)
+        for s, (st, w) in enumerate(bounds):
+            acc = _micro_sq_l2(arr[:, st - 1 : st - 1 + w], mats[s])
+            out[:, s] = np.argmin(acc, axis=1)
+        return pd.Series(list(out))
+
+    return codes_of(vec_col)
+
+
+def _nearest_centroid_col(vec_col: str, centroids: list[list[float]]) -> Column:
+    """Nearest-centroid index (``int``) of ``vec_col``: the code kernel
+    with the centroid set as a single full-width codebook. Index
+    writers, cell assigners and Lloyd use this; pruning takes
+    ``nearest_centroid_struct_col`` because it also needs the winning
+    distance."""
+    return F.element_at(_pq_codes_arrow(vec_col, [centroids]), 1)
+
+
+def nearest_centroid_struct_col(
+    vec_col: str, centroids: list[list[float]]
+) -> Column:
+    """``struct<d: long, i: int>`` of the nearest driver-literal
+    centroid in ONE Arrow kernel: ``i`` by ``_micro_sq_l2`` with
+    first-index tie-break, ``d`` the micro-distance to the WINNING
+    centroid — the prototypicality score pruning ranks on
+    (datapipe.pruning). A NULL vector ELEMENT contributes 0 to every
+    distance — kmeans_fit's Lloyd-sum convention, so assignment and
+    centroid update agree on such rows. A wholly-NULL vector gets cell
+    0 with a NULL distance."""
     C = np.asarray(centroids, dtype=np.float64)
     dim = C.shape[1]
 
-    @F.pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
+    @F.pandas_udf("struct<d: long, i: int>")
+    def cell_dist_of(vs: pd.Series) -> pd.DataFrame:
+        null_row = np.array([vec is None for vec in vs], dtype=bool)
         acc = _micro_sq_l2(_dense_rows(vs, dim), C)
-        return pd.Series(np.argmin(acc, axis=1).astype("int32"))
+        best = np.argmin(acc, axis=1)
+        dvals = pd.array(
+            acc[np.arange(len(vs)), best].astype(np.int64), dtype="Int64"
+        )
+        dvals[null_row] = pd.NA
+        return pd.DataFrame({"d": dvals, "i": best.astype(np.int32)})
 
-    return base.select(cell_of("_v").alias("cell"), "_v")
+    return cell_dist_of(vec_col)
 
 
-def _maximin_seeds_scalar(
-    pts: list[list[float]], num_cells: int
-) -> list[list[float]]:
-    """Scalar reference for ``_maximin_seeds`` — kept as the fallback
-    for ragged samples (zip truncates to the shorter vector, which a
-    rectangular numpy matrix can't express) and as the equality target
-    for the vectorized path's unit test. Distances are integer micros
-    (the ``_sq_l2_micros`` convention) so scalar/numpy parity is
-    structural, not corpus-empirical."""
-    import math
+def _probe_rows(vs, cent: dict[int, list[float]], n_probe: int) -> np.ndarray:
+    """``(rows, n_probe)`` ids of each vector's nearest cells by
+    (``_micro_sq_l2`` distance, cell id) — the ONE probe convention
+    every probe path and every contract oracle (``QUALIFY ... ORDER BY
+    dist, cell``) re-derives. The cells are laid out in ascending id
+    order and the sort is stable, so equal distances keep the smaller
+    cell id first."""
+    cells = np.asarray(sorted(cent), dtype=np.int32)
+    C = np.asarray([cent[c] for c in cells], dtype=np.float64)
+    acc = _micro_sq_l2(_dense_rows(vs, C.shape[1]), C)
+    return cells[np.argsort(acc, axis=1, kind="stable")[:, : max(1, n_probe)]]
 
-    centroids = [list(pts[0])]
-    dmin = [float("inf")] * len(pts)
-    while len(centroids) < num_cells:
-        c = centroids[-1]
-        for i, p in enumerate(pts):
-            d = sum(
-                int(math.floor((a - b) * (a - b) * 1_000_000.0 + 0.5))
-                for a, b in zip(p, c)
-            )
-            if d < dmin[i]:
-                dmin[i] = d
-        # max() returns the FIRST maximal element and pts are hash-
-        # ordered, so ties resolve to the smallest hash. dmin 0 =
-        # every distinct sample vector already chosen (tiny corpus):
-        # the pick duplicates a centroid, whose cell just stays empty.
-        centroids.append(list(pts[max(range(len(pts)), key=dmin.__getitem__)]))
-    return centroids
+
+def _probe_cells_arrow(
+    vec_col: str, cent: dict[int, list[float]], n_probe: int
+) -> Column:
+    """Per-row top-``n_probe`` probe cells as ``array<int>`` in ONE
+    Arrow kernel over ``_probe_rows``."""
+
+    @F.pandas_udf("array<int>")
+    def probes_of(vs: pd.Series) -> pd.Series:
+        return pd.Series(list(_probe_rows(vs, cent, n_probe)))
+
+    return probes_of(vec_col)
+
+
+def _nearest_probe_cells(
+    cent: dict[int, list[float]], query: list[float], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` trained cells nearest one query, driver-side
+    (the centroid table is num_cells rows) — ``_probe_rows`` on a
+    one-row batch."""
+    return [int(c) for c in _probe_rows([query], cent, n_probe)[0]]
 
 
 def _maximin_seeds(pts: list[list[float]], num_cells: int) -> list[list[float]]:
-    """Farthest-point (maximin) seeding over a hash-ordered sample,
-    numpy-vectorized: first seed = ``pts[0]`` (smallest hash), each
-    next seed = the sample point maximizing its integer-micro squared
-    L2 distance (the ``_sq_l2_micros`` convention — per-term
-    ``floor(term·1e6+0.5)`` summed in int64, exact and
-    order-independent, so scalar/numpy parity is structural) to the
+    """Farthest-point (maximin) seeding over a hash-ordered sample:
+    first seed = ``pts[0]`` (smallest hash), each next seed = the
+    sample point maximizing its ``_micro_sq_l2`` distance to the
     nearest chosen seed. ``np.argmax`` returns the FIRST maximal
     element and ``pts`` are hash-ordered, so ties resolve to the
-    smallest hash — the scalar reference loop's pick order. The scalar
-    loop is O(num_cells·|sample|·dim) Python float ops — at a
-    serving-realistic num_cells=4096 over the 32x sample that is hours
-    on the driver; the numpy form is the same arithmetic at C speed."""
-
-    if len({len(p) for p in pts}) != 1:
-        # ragged sample (mixed vector widths): the reference zip
-        # truncates per pair — not expressible as one matrix op
-        return _maximin_seeds_scalar(pts, num_cells)
-    P = np.asarray(pts, dtype=np.float64)
-    n = len(pts)
+    smallest hash. dmin 0 = every distinct sample vector already
+    chosen (tiny corpus): the pick duplicates a centroid, whose cell
+    just stays empty. A ragged sample (mixed vector widths) is
+    NaN-padded by ``_dense_rows``, so a term either vector lacks counts
+    0 — ``zip`` truncation per pair. Vectorized because a Python loop
+    is O(num_cells·|sample|·dim) float ops — at a serving-realistic
+    num_cells=4096 over the 32x sample that is hours on the driver."""
+    P = _dense_rows(pts, max(len(p) for p in pts))
     seeds = [list(pts[0])]
-    last = P[0]
-    # float dmin holding exact int64 micro values (all < 2^53): lets
-    # the init stay +inf while comparisons remain exact
-    dmin = np.full(n, np.inf)
+    # float dmin holding exact integer micros (all < 2^53): lets the
+    # init stay +inf while comparisons remain exact
+    dmin = np.full(len(pts), np.inf)
+    i = 0
     while len(seeds) < num_cells:
-        diff = P - last
-        sq = diff * diff
-        acc = np.zeros(n, dtype=np.int64)
-        for j in range(P.shape[1]):
-            acc += np.floor(sq[:, j] * 1e6 + 0.5).astype(np.int64)
-        np.minimum(dmin, acc, out=dmin)
+        np.minimum(dmin, _micro_sq_l2(P, P[i : i + 1])[:, 0], out=dmin)
         i = int(np.argmax(dmin))
-        seeds.append([float(x) for x in P[i]])
-        last = P[i]
+        seeds.append(list(pts[i]))
     return seeds
 
 
@@ -722,40 +688,16 @@ def kmeans_fit(
     pts = [[0.0 if x is None else float(x) for x in r["_v"]] for r in sample]
     centroids = _maximin_seeds(pts, num_cells)
     for _ in range(max_iter):
-        assigned = _lloyd_assign(base, centroids)
-        # per-dimension sums quantized to integer micros and summed in
-        # decimal(38,0): plain double F.sum is partition-merge-order
-        # dependent, so the same data could yield ulp-different
-        # centroids run-to-run and flip a micro-grid nearest-centroid tie —
-        # integer sums make Lloyd exactly reproducible (the lm.py /
-        # anomaly.py order-independent-sum convention); 1e-6 grid is
-        # the repo-wide 1e-6-grid distance convention
-        # try_element_at + coalesce-to-0.0: dim comes from the FIRST
-        # row, and under ANSI (Spark 4 default) a plain element_at on
-        # one truncated/ragged vector would throw INVALID_ARRAY_INDEX
-        # and kill the whole fit; a short vector instead contributes
-        # 0.0 to the dimensions it lacks (NULL elements likewise)
-        sums = assigned.groupBy("cell").agg(
-            F.array(
-                *[
-                    F.sum(
-                        F.floor(
-                            F.coalesce(
-                                F.try_element_at("_v", F.lit(i + 1)),
-                                F.lit(0.0),
-                            )
-                            * F.lit(1_000_000.0)
-                            + F.lit(0.5)
-                        ).cast("decimal(38,0)")
-                    )
-                    for i in range(dim)
-                ]
-            ).alias("_s"),
-            F.count("*").alias("_n"),
+        assigned = base.select(
+            _nearest_centroid_col("_v", centroids).alias("cell"), "_v"
         )
+        # exact integer-micro means (group_centroids): plain double
+        # sums are partition-merge-order dependent, so the same data
+        # could yield ulp-different centroids run-to-run and flip a
+        # micro-grid nearest-centroid tie
         new = {
-            r["cell"]: [float(x) / (r["_n"] * 1_000_000.0) for x in r["_s"]]
-            for r in sums.collect()
+            r["cell"]: list(r["centroid"])
+            for r in group_centroids(assigned, "cell", "_v", dim).collect()
         }
         centroids = [new.get(i, centroids[i]) for i in range(num_cells)]
     base.unpersist()
@@ -769,7 +711,8 @@ def _write_centroids(
     self-describing half every IVF-family writer shares (schema, codec,
     and single-file layout must stay identical across writers so
     probes and oracles read any of them interchangeably)."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, list(c)) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>",
     ).coalesce(1).write.mode(mode).option("compression", codec).parquet(path)
@@ -786,34 +729,9 @@ def _write_codebook(
         for s, book in enumerate(codebooks)
         for c in range(len(book))
     ]
-    spark.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
+    local_frame(
+        spark, rows, "sub int, code int, centroid array<double>"
     ).coalesce(1).write.mode(mode).option("compression", codec).parquet(path)
-
-
-def _nearest_probe_cells(
-    cent: dict[int, list[float]], query: list[float], n_probe: int
-) -> list[int]:
-    """The ``n_probe`` trained cells nearest the query, driver-side
-    (the centroid table is num_cells rows): integer-micro squared-L2
-    (the ``_sq_l2_micros`` convention — Python floats ARE IEEE
-    doubles, so ``floor((a-b)²·1e6+0.5)`` here is bit-identical to the
-    Spark/DuckDB expression) / cell-id tie-break — the ONE convention
-    every probe path and every contract oracle re-derives, kept in one
-    place."""
-    import math
-
-    by_dist = sorted(
-        cent,
-        key=lambda c: (
-            sum(
-                int(math.floor((a - b) * (a - b) * 1_000_000.0 + 0.5))
-                for a, b in zip(query, cent[c])
-            ),
-            c,
-        ),
-    )
-    return by_dist[: max(1, n_probe)]
 
 
 def write_ivf_trained(
@@ -970,29 +888,14 @@ def pq_fit(
                 + F.lit(0.5)
             ).cast("decimal(38,0)")
 
-        arrow = len(bounds) * codes_per_sub >= _ARROW_ASSIGN_MIN_CELLS
         for _ in range(max_iter):
-            if arrow:
-                # one order-exact Arrow kernel computes all m code
-                # assignments (the pq_codes discipline) — the m·codes
-                # expression cascade costs seconds of Janino per
-                # iteration and interprets past the 64 KB cliff
-                src = staged.withColumn(
-                    "_codes", _pq_codes_arrow("_v0", books)
-                )
-                cell_of = lambda s: F.element_at(  # noqa: E731
-                    "_codes", s + 1
-                )
-            else:
-                src = staged
-                cell_of = lambda s: _nearest_centroid(  # noqa: E731
-                    F.col(f"_s{s}"), books[s]
-                )
+            # one Arrow kernel computes all m code assignments (pq_codes)
+            src = staged.withColumn("_codes", _pq_codes_arrow("_v0", books))
             lanes2 = F.array(
                 *[
                     F.struct(
                         F.col(f"_s{s}").alias("v"),
-                        cell_of(s).alias("c"),
+                        F.element_at("_codes", s + 1).alias("c"),
                         F.col(f"_in{s}").alias("m"),
                     )
                     for s in range(len(bounds))
@@ -1027,149 +930,19 @@ def pq_fit(
         staged.unpersist()
 
 
-def _pq_codes_arrow(
-    vec_col: str, codebooks: list[list[list[float]]]
-) -> Column:
-    """All ``m`` subspace code assignments in ONE Arrow kernel —
-    ``array<int>`` of per-subspace nearest-code indexes, arithmetic
-    identical to the ``nearest_centroid_struct`` expression form
-    (per-term ``floor((a-b)²·1e6+0.5)`` with missing/NULL elements
-    contributing 0, exact accumulation in ``_micro_sq_l2``, so parity
-    with the expression path and the SQL oracles is structural; first-index
-    argmin) — parity-tested against the expression path. The
-    expression form spends seconds of Janino compilation on
-    ``m·codes_per_sub`` fold expressions per projection and interprets
-    beyond the 64 KB method limit; the kernel is the same arithmetic
-    at C speed and compiles nothing."""
-    dim = sum(len(b[0]) for b in codebooks)
-    bounds = subspace_bounds(dim, len(codebooks))
-    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-
-    @F.pandas_udf("array<int>")
-    def codes_of(vs: pd.Series) -> pd.Series:
-        arr = _dense_rows(vs, dim)
-        out = np.empty((len(vs), len(bounds)), dtype=np.int32)
-        for s, (st, w) in enumerate(bounds):
-            acc = _micro_sq_l2(arr[:, st - 1 : st - 1 + w], mats[s])
-            out[:, s] = np.argmin(acc, axis=1)
-        return pd.Series(list(out))
-
-    return codes_of(vec_col)
-
-
-def _cell_dist_arrow(
-    vec_col: str, centroids: list[list[float]]
-) -> Column:
-    """``struct<d: long, i: int>`` of the nearest centroid in ONE
-    Arrow kernel — the kernel twin of ``nearest_centroid_struct`` for
-    consumers that need the winning DISTANCE too (pruning). Identical
-    integer-micro arithmetic (floored micro terms summed exactly in
-    float64, see ``_micro_sq_l2``), first-index argmin; missing/NULL
-    ELEMENTS contribute 0 — the per-term coalesce
-    convention. A wholly-NULL vector mirrors the expression form
-    exactly: cell 0 with a NULL distance (``F.aggregate`` over a NULL
-    array is NULL)."""
-    C = np.asarray(centroids, dtype=np.float64)
-    dim = C.shape[1]
-
-    @F.pandas_udf("struct<d: long, i: int>")
-    def cell_dist_of(vs: pd.Series) -> pd.DataFrame:
-        null_row = np.array([vec is None for vec in vs], dtype=bool)
-        acc = _micro_sq_l2(_dense_rows(vs, dim), C)
-        best = np.argmin(acc, axis=1)
-        dvals = pd.array(
-            acc[np.arange(len(vs)), best].astype(np.int64), dtype="Int64"
-        )
-        dvals[null_row] = pd.NA
-        return pd.DataFrame({"d": dvals, "i": best.astype(np.int32)})
-
-    return cell_dist_of(vec_col)
-
-
-def _probe_cells_arrow(
-    vec_col: str, cent: dict[int, list[float]], n_probe: int
-) -> Column:
-    """Per-row top-``n_probe`` probe cells as ``array<int>`` in ONE
-    Arrow kernel — the kernel twin of the per-cell
-    ``_sq_l2_micros``-struct cascade in ``ivf_pq_knn_join``. Same
-    integer-micro distances (floored micro terms summed exactly in
-    float64), same (distance, cell-id) tie-break (``np.lexsort`` with
-    the cell ids as the secondary key), so probe sets are
-    bit-identical to the expression form and to the SQL oracle's
-    QUALIFY ordering."""
-    cells = np.asarray(sorted(cent), dtype=np.int32)
-    C = np.asarray([cent[c] for c in cells], dtype=np.float64)
-    k, dim = C.shape
-    n_probe = min(n_probe, k)
-
-    @F.pandas_udf("array<int>")
-    def probes_of(vs: pd.Series) -> pd.Series:
-        acc = _micro_sq_l2(_dense_rows(vs, dim), C)
-        out = []
-        for r in range(len(vs)):
-            order = np.lexsort((cells, acc[r]))[:n_probe]
-            out.append(cells[order])
-        return pd.Series(out)
-
-    return probes_of(vec_col)
-
-
-def nearest_centroid_struct_col(
-    vec_col: str, centroids: list[list[float]]
-) -> Column:
-    """``nearest_centroid_struct`` with the kernel/expression switch
-    (the ``_nearest_centroid_col`` convention, keeping the ``d``
-    lane): expression below ``_ARROW_ASSIGN_MIN_CELLS``, Arrow kernel
-    at/above — bit-identical, parity-tested."""
-    if len(centroids) >= _ARROW_ASSIGN_MIN_CELLS:
-        return _cell_dist_arrow(vec_col, centroids)
-    return nearest_centroid_struct(F.col(vec_col), centroids)
-
-
 def pq_codes(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Adds ``codes`` (``array<int>``, one code per subspace): each
-    subspace slice's nearest codebook entry by integer-micro squared L2,
-    index tie-break — the ``nearest_centroid_struct`` convention, so an
-    independent reader (the contract oracle) re-derives identical codes
-    from the persisted codebook bytes. The sub-vector slices are STAGED
-    as intermediate columns first: ``nearest_centroid_struct``
-    references its input once per centroid, and an inlined slice would
-    be re-evaluated ``codes_per_sub`` times per row (the CLAUDE.md
-    column-inlining trap).
-
-    ``use_arrow`` (default: when total fold count m·codes exceeds
-    ``_ARROW_ASSIGN_MIN_CELLS``) swaps the expression cascade for the
-    order-exact Arrow kernel (``_pq_codes_arrow``) — identical codes,
-    no Janino cost, no 64 KB codegen cliff."""
+    subspace slice's nearest codebook entry by integer-micro squared
+    L2, index tie-break, in one Arrow kernel (``_pq_codes_arrow``) — so
+    an independent reader (the contract oracle) re-derives identical
+    codes from the persisted codebook bytes."""
     if not codebooks or any(not b for b in codebooks):
         raise ValueError("pq_codes: empty codebooks")
-    total = sum(len(b) for b in codebooks)
-    if use_arrow is None:
-        use_arrow = total >= _ARROW_ASSIGN_MIN_CELLS
-    if use_arrow:
-        return df.withColumn("codes", _pq_codes_arrow(vec_col, codebooks))
-    dim = sum(len(b[0]) for b in codebooks)
-    out = df
-    subs = []
-    for s, (st, w) in enumerate(subspace_bounds(dim, len(codebooks))):
-        name = f"_pqsub{s}"
-        out = out.withColumn(name, F.slice(F.col(vec_col), st, w))
-        subs.append(name)
-    out = out.withColumn(
-        "codes",
-        F.array(
-            *[
-                nearest_centroid_struct(F.col(n), codebooks[s])["i"].cast("int")
-                for s, n in enumerate(subs)
-            ]
-        ),
-    )
-    return out.drop(*subs)
+    return df.withColumn("codes", _pq_codes_arrow(vec_col, codebooks))
 
 
 def write_pq_index(
@@ -1419,29 +1192,9 @@ def ivf_pq_knn_join(
     dim = sum(len(b[0]) for b in books.values())
     bounds = subspace_bounds(dim, m)
     # probe cells: per-query n_probe nearest trained centroids by the
-    # integer-micro distance / cell-id tie-break convention
-    # (_sq_l2_micros — same floor(term*1e6+0.5) long sums the driver
-    # path and the oracle CTEs compute). Above _ARROW_PROBE_MIN_CELLS
-    # the per-cell expression cascade (one fold per cell — the same
-    # Janino/64 KB wall class as Lloyd assignment) switches to a
-    # kernel computing all cell distances + the (d, cell) tie-broken
-    # top-n_probe in one pass, bit-identical by the integer-micro
-    # argument. The gate sits HIGHER than _ARROW_ASSIGN_MIN_CELLS:
-    # at contract/bench cell counts (8-16) the Arrow worker round trip
-    # costs more than the small cached cascade (measured +0.6 s on the
-    # 32-query bench row), while the 64 KB wall begins far above.
-    if len(cent) >= _ARROW_PROBE_MIN_CELLS:
-        probe_arr = _probe_cells_arrow(vec_col, cent, max(1, n_probe))
-    else:
-        ds = []
-        for c in sorted(cent):
-            lit = F.array(*[F.lit(float(x)) for x in cent[c]])
-            d = _sq_l2_micros(F.col(vec_col), lit)
-            ds.append(F.struct(d.alias("d"), F.lit(c).alias("i")))
-        probe_arr = F.transform(
-            F.slice(F.array_sort(F.array(*ds)), 1, max(1, n_probe)),
-            lambda st: st["i"],
-        )
+    # (distance, cell id) convention the driver path and the oracle
+    # CTEs compute (_probe_rows)
+    probe_arr = _probe_cells_arrow(vec_col, cent, n_probe)
     # per-query integer ADC tables, one staged column per subspace so
     # no generated method outgrows the JIT limit (CLAUDE.md trap)
     q1 = q0
@@ -1553,9 +1306,11 @@ def group_centroids(
     """Exact per-group mean vectors — the domain-centroid aggregation
     behind domain-level similarity, mixture seeding, and SemDeDup
     warm starts: ``(group, centroid, n_vectors)``. Per-dimension sums
-    are integer micros in decimal(38,0) (the kmeans Lloyd-update
-    discipline), so the mean is partition-order independent and an
-    independent engine reproduces it bit-for-bit from the same rows.
+    are integer micros in decimal(38,0) (the lm.py / anomaly.py
+    order-independent-sum convention on the repo-wide 1e-6 grid; also
+    kmeans_fit's Lloyd update), so the mean is partition-order
+    independent and an independent engine reproduces it bit-for-bit
+    from the same rows.
     ``as_micros=True`` returns ``array<long>`` of
     ``floor(sum_micros / n)`` (pure integer arithmetic end-to-end —
     the contract-oracle form); otherwise ``array<double>`` true means.
@@ -1567,6 +1322,10 @@ def group_centroids(
     count."""
     dim = dim if dim is not None else _vec_dim(df, vec_col)
     v = F.col(vec_col)
+    # try_element_at + coalesce-to-0.0: dim may come from the FIRST
+    # row, and under ANSI (Spark 4 default) a plain element_at on one
+    # truncated/ragged vector would throw INVALID_ARRAY_INDEX and kill
+    # the whole job
     sums = (
         df.filter(v.isNotNull())
         .groupBy(group_col)

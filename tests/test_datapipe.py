@@ -17,6 +17,38 @@ from .conftest import plan_string
 SF_DIR = "/root/testdata/sf0.001"
 
 
+# Plain-Python reference for the integer-micro nearest-centroid
+# convention every similarity kernel shares: per-term
+# floor((a-b)²·1e6+0.5) over zip (truncating to the shorter vector), a
+# NULL element contributing 0, first index on a distance tie.
+def _py_micro_sq_l2(v, c):
+    return sum(
+        int(math.floor((a - b) * (a - b) * 1_000_000.0 + 0.5))
+        for a, b in zip(v, c)
+        if a is not None and b is not None
+    )
+
+
+def _py_nearest(v, cents):
+    """``(d, i)`` of the nearest centroid; a NULL vector is (None, 0)."""
+    if v is None:
+        return (None, 0)
+    ds = [_py_micro_sq_l2(v, c) for c in cents]
+    i = min(range(len(ds)), key=lambda j: (ds[j], j))
+    return (ds[i], i)
+
+
+def _py_maximin(pts, k):
+    """Farthest-point seeding: the first maximal point wins a tie."""
+    seeds = [list(pts[0])]
+    dmin = [math.inf] * len(pts)
+    while len(seeds) < k:
+        for i, p in enumerate(pts):
+            dmin[i] = min(dmin[i], _py_micro_sq_l2(p, seeds[-1]))
+        seeds.append(list(pts[max(range(len(pts)), key=dmin.__getitem__)]))
+    return seeds
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
@@ -542,13 +574,13 @@ def test_kmeans_empty_input(spark):
     assert similarity.kmeans_fit(df, num_cells=4, dim=3) == []
 
 
-def test_maximin_seeds_numpy_matches_scalar():
-    """The vectorized maximin seeding (r3 verdict nit #1) is
-    arithmetic-identical to the scalar reference: same per-term
-    integer-micro quantization (exact, order-independent int64 sums),
-    same first-maximal tie-break — including
-    num_cells > |distinct sample| (duplicate picks) and a ragged
-    sample (numpy path must fall back to the scalar loop)."""
+def test_maximin_seeds_matches_python_reference():
+    """The vectorized maximin seeding (r3 verdict nit #1) picks the
+    same seeds as the plain-Python reference: same per-term
+    integer-micro quantization, same first-maximal tie-break —
+    including num_cells > |distinct sample| (duplicate picks) and a
+    ragged sample (NaN padding must count a missing term as 0, zip's
+    truncation)."""
     from logshipper_spark.datapipe import similarity
 
     pts = [
@@ -559,20 +591,15 @@ def test_maximin_seeds_numpy_matches_scalar():
     # symmetric around the first seed
     pts[7] = list(pts[3])
     for k in (2, 16, 100, 450):
-        assert similarity._maximin_seeds(pts, k) == (
-            similarity._maximin_seeds_scalar(pts, k)
-        )
+        assert similarity._maximin_seeds(pts, k) == _py_maximin(pts, k)
     ragged = [p[: 8 + (i % 5)] for i, p in enumerate(pts[:50])]
-    assert similarity._maximin_seeds(ragged, 8) == (
-        similarity._maximin_seeds_scalar(ragged, 8)
-    )
+    assert similarity._maximin_seeds(ragged, 8) == _py_maximin(ragged, 8)
 
 
-def test_kmeans_arrow_assign_parity(spark):
-    """Lloyd's Arrow-batched assignment kernel (num_cells above
-    _ARROW_ASSIGN_MIN_CELLS) assigns every row to the SAME cell as the
-    expression form — including ragged vectors and NULL elements (the
-    zip_with coalesce-to-0 convention)."""
+def test_kmeans_assign_matches_python_reference(spark):
+    """Lloyd's assignment kernel (``_nearest_centroid_col``) assigns
+    every row to the reference's nearest cell — including ragged
+    vectors and NULL elements (counted as 0)."""
     from logshipper_spark.datapipe import similarity
 
     rows = [
@@ -586,18 +613,13 @@ def test_kmeans_arrow_assign_parity(spark):
         )
     )
     cents = similarity.kmeans_fit(df, num_cells=40, dim=12, max_iter=1)
-    assert len(cents) == 40 > similarity._ARROW_ASSIGN_MIN_CELLS - 1
-    key = lambda r: (  # noqa: E731
-        tuple(-9e99 if x is None else x for x in r["_v"]), r["cell"]
-    )
-    exp = sorted(
-        map(key, base.select(
-            similarity._nearest_centroid(F.col("_v"), cents).alias("cell"),
-            "_v",
-        ).collect())
-    )
-    arw = sorted(map(key, similarity._lloyd_assign(base, cents).collect()))
-    assert exp == arw
+    assert len(cents) == 40
+    got = base.select(
+        similarity._nearest_centroid_col("_v", cents).alias("cell"), "_v"
+    ).collect()
+    assert len(got) == 302
+    for r in got:
+        assert r["cell"] == _py_nearest(r["_v"], cents)[1], r["_v"]
 
 
 def test_knn_join_hot_cell_salt_parity(spark, tmp_path):
@@ -683,9 +705,9 @@ def test_pq_fit_batched_matches_sequential(spark):
             books.append(book)
         return books
 
-    # (4, 16) crosses _ARROW_ASSIGN_MIN_CELLS total folds, so the
-    # batched Lloyd runs the Arrow code kernel while the sequential
-    # reference stays on the expression path — the cross-parity proof
+    # the batched update divides the decimal sums on the driver while
+    # kmeans_fit's goes through group_centroids in Spark — the
+    # cross-parity proof that both means round identically
     for m, codes, sm in ((3, 4, None), (4, 6, 3), (4, 16, None)):
         got = similarity.pq_fit(
             df, m=m, codes_per_sub=codes, dim=10, max_iter=3, sample_mod=sm
@@ -2812,10 +2834,9 @@ def test_pmi_pairs_matches_python_reference(spark):
     assert got == want and len(got) > 0
 
 
-def test_pq_codes_arrow_matches_expression(spark):
-    """The Arrow PQ code kernel assigns the identical codes as the
-    nearest_centroid_struct expression cascade — including ragged and
-    NULL-element vectors."""
+def test_pq_codes_matches_python_reference(spark):
+    """The PQ code kernel assigns each subspace slice the reference's
+    nearest code — including ragged and NULL-element vectors."""
     from logshipper_spark.datapipe import similarity
 
     rows = [
@@ -2829,15 +2850,19 @@ def test_pq_codes_arrow_matches_expression(spark):
         "vec_id long, embedding array<double>",
     ))
     books = similarity.pq_fit(df, m=3, codes_per_sub=4, dim=12, max_iter=2)
+    bounds = similarity.subspace_bounds(12, 3)
     exp = {
-        r["vec_id"]: list(r["codes"])
-        for r in similarity.pq_codes(df, books, use_arrow=False).collect()
+        r["vec_id"]: [
+            _py_nearest(r["embedding"][st - 1 : st - 1 + w], books[s])[1]
+            for s, (st, w) in enumerate(bounds)
+        ]
+        for r in df.collect()
     }
-    arw = {
+    got = {
         r["vec_id"]: list(r["codes"])
-        for r in similarity.pq_codes(df, books, use_arrow=True).collect()
+        for r in similarity.pq_codes(df, books).collect()
     }
-    assert exp == arw and len(exp) == 202
+    assert got == exp and len(got) == 202
 
 
 def test_fuzzy_dedup_against(spark, tmp_path):
@@ -2951,17 +2976,18 @@ def test_group_centroids_exact(spark):
 
 def test_arrow_kernels_reject_micro_sums_past_2_53(spark):
     """A vector of magnitude ~1e5 puts one micro term near 1e16, past
-    the 2^53 float64 exactness bound: every Arrow kernel must raise."""
+    the 2^53 float64 exactness bound: every Arrow kernel and every
+    driver-side caller of the shared kernel must raise."""
     from logshipper_spark.datapipe import similarity
 
-    cents = [[float(i), 0.0] for i in range(similarity._ARROW_ASSIGN_MIN_CELLS)]
+    cents = [[float(i), 0.0] for i in range(8)]
     df = spark.createDataFrame(
         [([0.5, 0.5],), ([1e5, 0.0],)], "_v array<double>"
     )
     kernels = [
-        lambda: similarity._lloyd_assign(df, cents),
+        lambda: df.select(similarity._nearest_centroid_col("_v", cents)),
         lambda: df.select(similarity._pq_codes_arrow("_v", [cents])),
-        lambda: df.select(similarity._cell_dist_arrow("_v", cents)),
+        lambda: df.select(similarity.nearest_centroid_struct_col("_v", cents)),
         lambda: df.select(
             similarity._probe_cells_arrow("_v", dict(enumerate(cents)), 2)
         ),
@@ -2969,13 +2995,19 @@ def test_arrow_kernels_reject_micro_sums_past_2_53(spark):
     for build in kernels:
         with pytest.raises(Exception, match=r"2\*\*53"):
             build().collect()
+    with pytest.raises(ValueError, match=r"2\*\*53"):
+        similarity._maximin_seeds([[0.5, 0.5], [1e5, 0.0]], 2)
+    with pytest.raises(ValueError, match=r"2\*\*53"):
+        similarity._nearest_probe_cells(dict(enumerate(cents)), [1e5, 0.0], 2)
 
 
-def test_cell_dist_and_probe_kernels_match_expression(spark):
-    """Round-5 kernel twins: _cell_dist_arrow (struct d+i) and
-    _probe_cells_arrow (tie-broken top-n_probe) equal the expression
-    forms row-for-row — including ragged, NULL-element, and NULL
-    vectors, and planted exact distance ties."""
+def test_cell_dist_and_probe_kernels_match_python_reference(spark):
+    """The nearest-struct kernel (``nearest_centroid_struct_col``,
+    d + i) and the probe kernel (``_probe_cells_arrow``, top-n_probe
+    by (distance, cell id)) equal the plain-Python reference
+    row-for-row — including ragged, NULL-element, and NULL vectors, and
+    a planted exact distance tie; the driver-side
+    ``_nearest_probe_cells`` returns the kernel's probes."""
     from logshipper_spark.datapipe import similarity
 
     rows = [
@@ -2995,44 +3027,31 @@ def test_cell_dist_and_probe_kernels_match_expression(spark):
     )
     cents = similarity.kmeans_fit(df, num_cells=16, dim=12, max_iter=1)
     cents[3] = list(cents[5])  # planted duplicate centroid: exact tie
-    exp = {
+    vecs = {r["vec_id"]: r["_v"] for r in base.collect()}
+    got = {
         r["vec_id"]: (r["b"]["d"], r["b"]["i"])
         for r in base.select(
             "vec_id",
-            similarity.nearest_centroid_struct(
-                F.col("_v"), cents
-            ).alias("b"),
+            similarity.nearest_centroid_struct_col("_v", cents).alias("b"),
         ).collect()
     }
-    arw = {
-        r["vec_id"]: (r["b"]["d"], r["b"]["i"])
-        for r in base.select(
-            "vec_id", similarity._cell_dist_arrow("_v", cents).alias("b")
-        ).collect()
-    }
-    assert exp == arw
-    # probe kernel vs expression cascade (3 probes, planted tie)
+    assert got == {vid: _py_nearest(v, cents) for vid, v in vecs.items()}
+    # probe kernel (3 probes, planted tie) over the join's isNotNull
+    # domain
     cent = {i: c for i, c in enumerate(cents)}
-    ds = []
-    for c in sorted(cent):
-        lit = F.array(*[F.lit(float(x)) for x in cent[c]])
-        ds.append(
-            F.struct(
-                similarity._sq_l2_micros(F.col("_v"), lit).alias("d"),
-                F.lit(c).alias("i"),
-            )
-        )
-    probe_expr = F.transform(
-        F.slice(F.array_sort(F.array(*ds)), 1, 3), lambda st: st["i"]
-    )
-    nn = base.filter(F.col("_v").isNotNull())  # expression cascade:
-    # NULL vector yields d=0 per cell too, but keep parity domain to
-    # the join's isNotNull contract
-    e = {r["vec_id"]: r["p"] for r in nn.select("vec_id", probe_expr.alias("p")).collect()}
-    a = {
+    nn = base.filter(F.col("_v").isNotNull())
+    probes = {
         r["vec_id"]: r["p"]
         for r in nn.select(
             "vec_id", similarity._probe_cells_arrow("_v", cent, 3).alias("p")
         ).collect()
     }
-    assert e == a
+    assert probes == {
+        vid: sorted(cent, key=lambda c: (_py_micro_sq_l2(v, cent[c]), c))[:3]
+        for vid, v in vecs.items()
+        if v is not None
+    }
+    for vid in (0, 17, 900, 901):
+        assert similarity._nearest_probe_cells(cent, vecs[vid], 3) == probes[vid]
+
+

@@ -32,7 +32,7 @@ def _py_scores():
 
     out = {}
     for vid, v in VECS:
-        # the _sq_l2_micros convention: per-term floor(term*1e6+0.5)
+        # the similarity._micro_sq_l2 convention: per-term floor(term*1e6+0.5)
         # summed as ints, then integer grid rescale (round-half-up)
         ds = [
             sum(

@@ -15,7 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from logshipper_spark.datapipe.similarity import _sq_l2_micros, floor_round
+from logshipper_spark.datapipe.similarity import floor_round, nearest_centroid_struct_col
 
 
 def _adversarial_values() -> list[float]:
@@ -89,13 +89,15 @@ def test_sq_l2_micros_spark_duckdb_python_numpy_parity(spark):
         ]
         vecs.append([b + d for b, d in zip(base, delta)])
         cents.append(base)
-    lit0 = F.array(*[F.lit(float(x)) for x in cents[0]])
     sdf = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "i long, v array<double>"
     )
+    # Spark leg: the nearest-struct kernel's d against one centroid
     got_spark = {
         r["i"]: r["d"]
-        for r in sdf.select("i", _sq_l2_micros(F.col("v"), lit0).alias("d")).collect()
+        for r in sdf.select(
+            "i", nearest_centroid_struct_col("v", [cents[0]])["d"].alias("d")
+        ).collect()
     }
     # DuckDB leg: the oracle expression verbatim
     import sys, os
