@@ -49,13 +49,17 @@ def edge_agg(
     blocks-per-edge elements, bounded by retention / block size). No
     task ever sorts a hot edge's full history. ``ring_block_s=None``
     selects the single-window plan (one shuffle; fine when no edge is
-    hot enough to matter). Outputs are identical whenever the order
-    tuple is unique per edge (blocks partition the primary order
-    column's value range, so block-major order == global order); on
-    full-tuple ties at the ring boundary the blocked plan picks rows
-    deterministically (latency is the final struct sort key) where the
-    window plan picks arbitrarily. ``order_cols[0]`` must be
-    timestamp-typed for the blocked path.
+    hot enough to matter). Which plan to run is the caller's choice;
+    ``pipeline.commit_batch`` runs the single window. ``order_cols[0]``
+    must be timestamp-typed for the blocked path.
+
+    Tie rule: both plans rank by ``order_cols`` descending, then by
+    latency descending with NULLs last (the order the blocked plan's
+    struct sort already used), so rows tied on the whole order tuple
+    enter the ring largest latency first. The two plans therefore give
+    identical output on every input: blocks partition the primary order
+    column's value range, so block-major order == global order, and
+    rows tied on order tuple AND latency are interchangeable.
     """
     order_cols = order_cols or [ts_col]
     src, dst, op = F.col(src_col), F.col(dst_col), F.col(op_col)
@@ -72,15 +76,15 @@ def edge_agg(
         "src", "dst", "op", "call_count", "error_count", "latency_sum_us",
         "latency_p99_us", "first_seen", "last_seen",
     ]
+    ring_order = [F.col(c).desc() for c in order_cols]
+    ring_order.append(F.col(latency_col).desc_nulls_last())
 
     if ring_block_s is None:
         # Single-shuffle plan: the row_number window hash-partitions on
         # the edge key; the groupBy on the same keys reuses that
         # partitioning (no second exchange, no join). The last-100 ring
         # folds into the same aggregation as a conditional collect_list.
-        w = Window.partitionBy(src_col, dst_col, op_col).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
+        w = Window.partitionBy(src_col, dst_col, op_col).orderBy(*ring_order)
         ranked = fed.withColumn("_rn", F.row_number().over(w))
         lat_in_ring = F.when(F.col("_rn") <= P99_WINDOW, F.col(latency_col))
         aggd = ranked.groupBy(*keys).agg(
@@ -106,9 +110,7 @@ def edge_agg(
         F.col(latency_col).alias("_lat"),
     )
     with_blk = fed.withColumn("_blk", blk)
-    wb = Window.partitionBy(src_col, dst_col, op_col, "_blk").orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
+    wb = Window.partitionBy(src_col, dst_col, op_col, "_blk").orderBy(*ring_order)
     ranked = with_blk.withColumn("_rn", F.row_number().over(wb))
     top_in_blk = F.when(F.col("_rn") <= P99_WINDOW, ostruct)
     part = ranked.groupBy(*keys, "_blk").agg(

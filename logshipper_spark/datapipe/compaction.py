@@ -53,6 +53,7 @@ the 100 TB training-data posture.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,9 +105,58 @@ def append_commit_marker(
     EVERY marker writer (the streaming dedup/screen indexes, as-of
     state epochs, epoch pins) must go through here so the schema and
     path layout live in exactly one place."""
-    spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
-        "append"
-    ).parquet(os.path.join(index_dir, "_commits"))
+    import pyarrow as pa
+
+    marker = pa.table({"batch_id": pa.array([batch_id], pa.int64())})
+    write_small_parquet(
+        spark, os.path.join(index_dir, "_commits"), marker, overwrite=False
+    )
+
+
+def write_small_parquet(
+    spark: SparkSession, dir_path: str, table, overwrite: bool
+) -> None:
+    """Write a driver-built ``pyarrow.Table`` of a few rows (a commit
+    marker, a batch's lineage) as ONE lz4 parquet file under
+    ``dir_path``, without a Spark job. A Spark write of such a frame
+    runs a job, and ``createDataFrame(list)`` also starts a Python
+    worker to unpickle one row.
+
+    The bytes go through the path's Hadoop FileSystem, so every scheme
+    Spark writes to works. The file is written under a ``_``-prefixed
+    temp name, which parquet readers skip, then renamed to its final
+    name: a reader never sees a partial file. ``overwrite=True`` first
+    deletes ``dir_path`` and uses a fixed file name, so a replay leaves
+    one identical file; ``overwrite=False`` appends a uniquely named
+    file. ``store_schema=False`` leaves out the Arrow schema blob: Spark
+    reads the parquet types alone, and the blob adds ~700 B per file."""
+    import io
+
+    import pyarrow.parquet as pq
+
+    buf = io.BytesIO()
+    pq.write_table(table, buf, compression="lz4", store_schema=False)
+    fs, jdir = _fs(spark, dir_path)
+    if overwrite:
+        fs.delete(jdir, True)
+        name = "part-00000.lz4.parquet"
+    else:
+        name = f"part-{uuid.uuid4().hex}.lz4.parquet"
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp, final = path(jdir, f"_{name}.tmp"), path(jdir, name)
+    out = fs.create(tmp, True)
+    try:
+        out.write(buf.getvalue())
+    finally:
+        out.close()
+    _publish(fs, tmp, final)
+
+
+def _publish(fs, tmp, final) -> None:
+    """The commit point of ``write_small_parquet``: the rename that
+    makes the finished file visible."""
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not rename {tmp} to {final}")
 
 
 def compaction_state(spark: SparkSession, index_dir: str) -> tuple[int, int]:
@@ -307,10 +357,15 @@ def _compact(
     if chaos is not None:
         chaos(new_epoch)
     # marker LAST — readers switch epochs only here
-    spark.createDataFrame(
-        [(new_epoch, new_covered)], "epoch long, covered long"
-    ).write.mode("append").parquet(
-        os.path.join(index_dir, "_compact_commits")
+    import pyarrow as pa
+
+    marker = pa.table({
+        "epoch": pa.array([new_epoch], pa.int64()),
+        "covered": pa.array([new_covered], pa.int64()),
+    })
+    write_small_parquet(
+        spark, os.path.join(index_dir, "_compact_commits"), marker,
+        overwrite=False,
     )
     return {"epoch": new_epoch, "covered": new_covered, "compacted": True}
 

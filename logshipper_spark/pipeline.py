@@ -8,12 +8,20 @@ boundaries are the aggregate shuffles. Routing fans each row out to its
 sinks inside that same pass, and one partitioned write lands every sink
 (the reference's transform output channel).
 
+The work after the narrow stage is one function, ``commit_batch``.
+``run_batch`` plans the narrow stage and calls it; a stream plans the
+narrow stage once per query and calls it on every micro-batch
+(``streaming.run_stream``). The edge aggregate's ring is the
+one-shuffle window plan.
+
 Exactly-once + lineage (north rule): every batch writes its sinks under
 ``batch_id=N`` directories (re-running a batch overwrites its own
 output — idempotent restart), and commits per-stage lineage totals
 plus pipeline counters (mirroring the reference's Prometheus counters,
 internal/metrics/metrics.go:12-72) to a checkpoint table, committed
-last so a half-written batch is re-done on restart.
+last so a half-written batch is re-done on restart. The lineage file
+is written from the driver, temp file then rename, and runs no Spark
+job.
 """
 
 from __future__ import annotations
@@ -28,7 +36,7 @@ from pyspark.sql import types as T
 
 from . import aggregate as agg
 from . import enrich, gen, parse, route
-from .datapipe.compaction import _exists
+from .datapipe.compaction import _exists, write_small_parquet
 from .schemas import (
     DEFAULT_INGEST_TS,
     FORMAT_ECS,
@@ -82,33 +90,57 @@ def normalize_and_enrich(
     return enriched.withColumn("turn_rank", F.row_number().over(w))
 
 
-def lineage_frame(
-    spark: SparkSession,
+def lineage_rows(
     run_id: str,
     rows_in: int,
     sink_rows: dict[str, int],
     counters: list[tuple[str, int]],
-    ingest_ts: str = DEFAULT_INGEST_TS,
-) -> DataFrame:
-    """One batch's lineage + counters rows, built on the driver (the
-    ``lineage/batch_id=N`` layout; ``batch_id`` lives in the directory
-    name). Stage totals use ``partition_id -1``: the parse total, one
-    ``sink:<name>`` row per non-empty sink, then the counters.
-
-    ``committed_at`` is the run's pinned ingestion clock, NOT wall
-    clock: a replayed batch re-commits identical lineage (determinism
-    rule)."""
+) -> list[tuple]:
+    """One batch's lineage + counters rows, in ``LINEAGE_SCHEMA`` order
+    without ``batch_id`` (it lives in the ``lineage/batch_id=N``
+    directory name) and ``committed_at`` (``commit_lineage`` adds it).
+    Stage totals use ``partition_id -1``: the parse total, one
+    ``sink:<name>`` row per non-empty sink, then the counters."""
     rows = [(run_id, "parse", -1, rows_in, rows_in, None, None)]
     rows += [
         (run_id, f"sink:{sink}", -1, rows_in, n, None, None)
         for sink, n in sorted(sink_rows.items())
     ]
     rows += [(run_id, "counters", -1, rows_in, None, k, int(v)) for k, v in counters]
-    schema = T.StructType(
-        [f for f in LINEAGE_SCHEMA.fields if f.name not in ("batch_id", "committed_at")]
+    return rows
+
+
+def commit_lineage(
+    spark: SparkSession,
+    out_dir: str,
+    batch_id: int,
+    rows: list[tuple],
+    ingest_ts: str,
+) -> None:
+    """Overwrite ``lineage/batch_id=N`` with ``rows`` as one file,
+    written from the driver without a Spark job
+    (``compaction.write_small_parquet``). Spark reads it back with
+    ``LINEAGE_SCHEMA``'s types.
+
+    ``committed_at`` is the run's pinned ingestion clock, NOT wall
+    clock: a replayed batch re-commits an identical file (determinism
+    rule). It is Spark's own cast of ``ingest_ts`` in the session time
+    zone, taken from a one-row ``LocalTableScan`` (no job)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    stamp = local_frame(spark, [(ingest_ts,)], "ts string").select(
+        F.unix_micros(F.col("ts").cast("timestamp"))
+    ).collect()[0][0]
+    schema = to_arrow_schema(
+        T.StructType([f for f in LINEAGE_SCHEMA.fields if f.name != "batch_id"])
     )
-    return local_frame(spark, rows, schema).withColumn(
-        "committed_at", F.lit(ingest_ts).cast("timestamp")
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r + (stamp,))) for r in rows], schema=schema
+    )
+    write_small_parquet(
+        spark, os.path.join(out_dir, "lineage", f"batch_id={batch_id}"), table,
+        overwrite=True,
     )
 
 
@@ -125,9 +157,47 @@ def run_batch(
     transform_fn=None,
     docker_replicas: bool = True,
 ) -> dict:
-    """One batch of the full pipeline. Returns a summary dict with the
-    per-sink row counts and counters (the numbers the north rule
-    compares against the reference's fixture tests).
+    """One batch of the full pipeline: ``normalize_and_enrich`` (plus
+    the optional ``transform_fn``), then ``commit_batch``. Returns a
+    summary dict with the per-sink row counts and counters (the numbers
+    the north rule compares against the reference's fixture tests).
+
+    Sink payload: the normalized event including the ``raw`` map but
+    not the original source line (reference: NormalizedEvent,
+    internal/event/event.go:24-38, carries Raw, not the raw text).
+    """
+    t0 = time.time()
+    enriched = normalize_and_enrich(
+        spark, transcripts, ingest_ts=ingest_ts,
+        lookup_roles=lookup_roles, lookup_hosts=lookup_hosts,
+        docker_replicas=docker_replicas,
+    )
+    if transform_fn is not None:
+        # config-compiled remap chain (add_fields / case), still narrow
+        enriched = transform_fn(enriched)
+    summary = commit_batch(
+        spark, enriched, out_dir, run_id or uuid.uuid4().hex[:12], batch_id,
+        ingest_ts, rules or gen.routing_rules(),
+    )
+    elapsed = time.time() - t0
+    summary["elapsed_sec"] = elapsed
+    summary["turns_per_sec"] = summary["rows_in"] / elapsed if elapsed > 0 else 0.0
+    return summary
+
+
+def commit_batch(
+    spark: SparkSession,
+    enriched: DataFrame,
+    out_dir: str,
+    run_id: str,
+    batch_id: int,
+    ingest_ts: str,
+    rules: list[tuple[str, str, int]],
+) -> dict:
+    """Everything a batch does after the narrow stage: observe → route
+    → sink write → sink counts → edge aggregate → lineage. ``run_batch``
+    calls it on a freshly planned frame; ``streaming.run_stream`` plans
+    the narrow stage once per query and calls it on each micro-batch.
 
     Counters AND per-sink row counts ride the write pass via
     ``df.observe`` (the Spark analogue of the reference's inline
@@ -144,28 +214,16 @@ def run_batch(
     read back the written parquet (column-pruned scans of compact files
     — the write IS the materialization); the edge aggregate reads the
     catch-all sink's partition, or recomputes the narrow parse chain
-    when no rule is a catch-all.
+    when no rule is a catch-all. The edge ring takes the one-shuffle
+    window plan (``ring_block_s=None``, one job fewer than the blocked
+    plan, same output: ``aggregate.edge_agg``). No measured workload
+    holds a hot edge large enough for the blocked plan to pay off.
 
-    Lineage is committed last, as one small driver-built file per
-    batch (``lineage_frame``): stage totals plus the counters.
-
-    Sink payload: the normalized event including the ``raw`` map but
-    not the original source line (reference: NormalizedEvent,
-    internal/event/event.go:24-38, carries Raw, not the raw text).
+    Lineage is committed last, as one small file per batch written from
+    the driver (``commit_lineage``): stage totals plus the counters.
     """
-    run_id = run_id or uuid.uuid4().hex[:12]
-    rules = sorted(rules or gen.routing_rules(), key=lambda r: r[2])
-    t0 = time.time()
-
+    rules = sorted(rules, key=lambda r: r[2])
     obs = Observation(f"pipeline_{run_id}_{batch_id}")
-    enriched = normalize_and_enrich(
-        spark, transcripts, ingest_ts=ingest_ts,
-        lookup_roles=lookup_roles, lookup_hosts=lookup_hosts,
-        docker_replicas=docker_replicas,
-    )
-    if transform_fn is not None:
-        # config-compiled remap chain (add_fields / case), still narrow
-        enriched = transform_fn(enriched)
     enriched = enriched.observe(
         obs,
         F.count(F.lit(1)).alias("rows_in"),
@@ -212,8 +270,10 @@ def run_batch(
         edge_src = routed.filter(F.col("sink") == catch_all)
     else:
         edge_src = enriched
+    # one-shuffle ring: one job fewer than the blocked plan
     edges = agg.edge_agg(
-        edge_src, ts_col="event_ts", order_cols=["ts", "conv_id", "turn_idx"]
+        edge_src, ts_col="event_ts", order_cols=["ts", "conv_id", "turn_idx"],
+        ring_block_s=None,
     )
     counts.write.mode("overwrite").parquet(
         os.path.join(out_dir, "sink_counts", f"batch_id={batch_id}")
@@ -230,16 +290,14 @@ def run_batch(
         *[(f"sink_rows_{sink}", n) for sink, n in sorted(sink_rows.items())],
     ]
     # one directory per batch, overwritten on replay: a crash after
-    # run_batch but before the streaming checkpoint commit replays the
-    # batch and re-commits identical lineage instead of double-appending
-    # counters. batch_id lives in the directory name (partition
-    # discovery restores it on read).
-    lineage = lineage_frame(spark, run_id, rows_in, sink_rows, counters, ingest_ts)
-    lineage.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "lineage", f"batch_id={batch_id}")
+    # the commit but before the streaming checkpoint records the epoch
+    # replays the batch and re-commits identical lineage instead of
+    # double-appending counters. batch_id lives in the directory name
+    # (partition discovery restores it on read).
+    commit_lineage(
+        spark, out_dir, batch_id,
+        lineage_rows(run_id, rows_in, sink_rows, counters), ingest_ts,
     )
-
-    elapsed = time.time() - t0
     return {
         "run_id": run_id,
         "batch_id": batch_id,
@@ -247,8 +305,6 @@ def run_batch(
         "sink_rows": sink_rows,
         "format_counts": fmt_counts,
         "parse_errors": parse_errors,
-        "elapsed_sec": elapsed,
-        "turns_per_sec": rows_in / elapsed if elapsed > 0 else 0.0,
     }
 
 

@@ -37,8 +37,8 @@ def work_targeted_partitions(
 def local_frame(
     spark: SparkSession, rows: list[tuple], schema: str | StructType
 ) -> DataFrame:
-    """A small driver-built frame (lookup dimensions, lineage and
-    counter rows) that stays in the JVM.
+    """A small driver-built frame (lookup dimensions, the lineage
+    commit's one-row clock) that stays in the JVM.
 
     ``createDataFrame(list)`` builds a pickled Python RDD: every scan of
     it starts Python workers and runs a Spark job, even for three rows.

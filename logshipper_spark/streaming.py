@@ -7,8 +7,10 @@ Two kinds of stream:
 
 * ``foreachBatch`` with a commit: each micro-batch overwrites its own
   ``batch_id=N`` outputs and commits LAST, so Spark's at-least-once
-  epoch replay yields exactly-once output. ``run_stream`` runs the full
-  batch pipeline and commits lineage/counter rows; the index streams
+  epoch replay yields exactly-once output. ``run_stream`` plans the
+  parse/enrich stage once and runs the batch pipeline's commit tail
+  (``pipeline.commit_batch``) per epoch, committing lineage/counter
+  rows; the index streams
   append a ``_commits`` marker (``_index_stream``);
   ``streaming_asof_enrich`` pins the state epochs it read the same way.
   The reference has no restart story at all (process state is lost).
@@ -101,9 +103,12 @@ def _claim_stream_dir(
             )
         if owner is not None:
             return run_id
-    spark.createDataFrame([(run_id,)], "run_id string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(marker)
+    import pyarrow as pa
+
+    compaction.write_small_parquet(
+        spark, marker, pa.table({"run_id": pa.array([run_id], pa.string())}),
+        overwrite=True,
+    )
     return run_id
 
 
@@ -212,11 +217,28 @@ def run_stream(
     """Start (or resume) the streaming pipeline; the query drains all
     currently-available input and stops.
 
+    The narrow stage (``pipeline.normalize_and_enrich``) is planned
+    ONCE, on the streaming frame, and each epoch runs only
+    ``pipeline.commit_batch`` on its micro-batch: the same code path as
+    ``run_batch``, without re-analysing the ~25-step parse/enrich plan
+    from Python in every epoch.
+
+    Streaming contract: the sink rows of all epochs equal
+    ``run_batch``'s rows over the same turns on every column except
+    ``batch_id`` and ``turn_rank``. Streamed rows carry no
+    ``turn_rank``: a ``row_number`` over ``conv_id`` would restart in
+    every micro-batch, so it would be wrong whenever a conversation
+    spans files; ``(conv_id, turn_idx)`` carries the stable order.
+    Per-epoch ``sink_counts`` summed over ``batch_id`` equal the
+    batch's. Earlier versions streamed ``turn_rank``: an ``out_dir``
+    resumed from epochs they wrote holds ``sinks_by`` files of both
+    schemas, so read it with an explicit schema or ``mergeSchema``.
+
     Restart semantics: Spark's streaming checkpoint tracks which input
     files belong to which epoch; on restart, finished epochs are not
     re-read, and a half-finished epoch is replayed — idempotent because
-    `pipeline.run_batch` overwrites its own ``batch_id=N`` output paths
-    before committing lineage.
+    ``pipeline.commit_batch`` overwrites its own ``batch_id=N`` output
+    paths before committing lineage.
 
     ``chaos`` (tests only): callable invoked with the batch id after
     the batch's outputs AND lineage commit but before Spark's streaming
@@ -237,15 +259,19 @@ def run_stream(
         # file:/x that a '://' test would miss.
         run_id = _stream_run_id(checkpoint_dir)
     rules = rules or gen.routing_rules()
-    # per-run constants built once, not per micro-batch: the lookup
-    # dims and the committed-batch set (one lineage scan at start; this
-    # process is the only lineage writer afterwards, so the local set
-    # stays exact). resolve_services still collects the host dim in
-    # every epoch, but it is a driver-built LocalTableScan frame, so
-    # that collect (and the roles broadcast) runs no Spark job.
-    lookup_roles = gen.lookup_roles(spark)
-    lookup_hosts = gen.lookup_hosts(spark)
+    # per-run work done once, not per micro-batch: the committed-batch
+    # set (one lineage scan at start; this process is the only lineage
+    # writer afterwards, so the local set stays exact) and the narrow
+    # plan, whose lookup dims and host-dim collect are built here once
     done = pipeline.claim_out_dir(spark, out_dir, run_id)
+    enriched = pipeline.normalize_and_enrich(
+        spark,
+        read_transcript_stream(spark, input_dir, max_files_per_trigger),
+        ingest_ts=ingest_ts,
+        lookup_roles=gen.lookup_roles(spark),
+        lookup_hosts=gen.lookup_hosts(spark),
+        skip_turn_rank=True,
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # epoch replay after a crash-between-commit: outputs are
@@ -253,23 +279,14 @@ def run_stream(
         # redoing the work
         if batch_id in done:
             return
-        pipeline.run_batch(
-            spark,
-            batch_df,
-            out_dir,
-            run_id=run_id,
-            batch_id=batch_id,
-            ingest_ts=ingest_ts,
-            rules=rules,
-            lookup_roles=lookup_roles,
-            lookup_hosts=lookup_hosts,
+        pipeline.commit_batch(
+            spark, batch_df, out_dir, run_id, batch_id, ingest_ts, rules
         )
         done.add(batch_id)
         if chaos is not None:
             chaos(batch_id)
 
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    return _start(stream, checkpoint_dir, foreach=process_batch)
+    return _start(enriched, checkpoint_dir, foreach=process_batch)
 
 
 def streaming_first_seen(

@@ -81,6 +81,55 @@ def test_edge_agg_blocked_ring_matches_single_window(spark):
     assert max_grp < 900  # 900-event hot edge split across 5 blocks
 
 
+# ── ring ties: both plans cut the last 100 the same way ──
+def _ring_p99_reference(rows, order_key):
+    """Nearest-rank p99 over the last 100 rows of one edge: rows ranked
+    by ``order_key`` descending, then latency descending with NULLs
+    last; NULL latencies hold a ring slot but are skipped (types.go:60-86)."""
+    ranked = sorted(
+        rows,
+        key=lambda r: (order_key(r), r[4] is not None, r[4] or 0),
+        reverse=True,
+    )
+    lats = sorted(r[4] for r in ranked[:100] if r[4] is not None)
+    return lats[int((len(lats) - 1) * 0.99)] if lats else 0
+
+
+def test_edge_agg_ring_ties_are_deterministic(spark):
+    """One edge with 150 rows on ONE event_ts: the ring's cut at 100
+    falls inside a full order-tuple tie, so only the latency tie key
+    decides which rows enter it. 60 distinct latencies and 90 NULLs:
+    the ring holds the 60 latencies and 40 NULLs. The input order
+    (NULLs, then the largest latency, 58 smaller ones, the second
+    largest, NULLs) makes a cut by arrival order, either way round,
+    drop one of the two latencies the p99 depends on."""
+    t = _ts(5)
+    lats = [20_000] + [(i * 37) % 997 * 10 for i in range(1, 59)] + [19_000]
+    rows = [("a", "b", "op", 200, None, t) for _ in range(45)]
+    rows += [("a", "b", "op", 200, lat, t) for lat in lats]
+    rows += [("a", "b", "op", 200, None, t) for _ in range(45)]
+    # a second edge whose tied rows straddle two one-hour blocks
+    base = datetime(2024, 3, 1, 0, 59, 59)
+    for i in range(260):
+        ts = base if i < 130 else datetime(2024, 3, 1, 1, 0, 1)
+        rows.append(("c", "d", "op", 200, None if i % 9 == 0 else i * 3 % 211, ts))
+    df = _df(spark, rows)
+    plans = {
+        ring: {
+            (r["src"], r["dst"], r["op"]): r["latency_p99_us"]
+            for r in agg.edge_agg(df, order_cols=["event_ts"], ring_block_s=ring).collect()
+        }
+        for ring in (3600, None)
+    }
+    want = {
+        (src, dst, "op"): _ring_p99_reference(
+            [r for r in rows if r[0] == src], lambda r: r[5]
+        )
+        for src, dst in (("a", "b"), ("c", "d"))
+    }
+    assert plans[3600] == plans[None] == want
+
+
 # ── types.go:70-84: calcP99(nil) returns 0, never errors ──
 def test_p99_all_null_latency_is_zero(spark):
     rows = [

@@ -1,4 +1,5 @@
-"""run_batch's per-sink counts, lineage commit and fixed cost per batch.
+"""run_batch's per-sink counts, lineage commit and fixed cost per batch
+and per streaming epoch.
 
 Per-sink row counts ride the write pass as ``observe()`` metrics, and
 lineage is one driver-built file per batch. These tests hold both to
@@ -14,7 +15,8 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from logshipper_spark import gen, pipeline, route
+from logshipper_spark import gen, pipeline, route, streaming
+from logshipper_spark.datapipe import compaction
 
 from . import oracle
 from .conftest import plan_string
@@ -192,11 +194,20 @@ def test_lineage_replay_leaves_one_identical_file(spark, tmp_path):
 
 # Spark jobs one run_batch launches over gen.transcripts(spark, 1000) at
 # local[4] with the default rules, as measured. AQE runs each shuffle
-# map stage as its own job: the sink write with its turn_rank shuffle,
-# the windowed sink counts and the edge aggregate take 8, the lineage
-# write 1. It was 14 while sink counts were a groupBy/cache/collect over
-# the written rows and the lookup and lineage frames were Python RDDs.
-JOB_BUDGET = 9
+# map stage as its own job: the broadcast of the roles lookup (1), the
+# turn_rank shuffle (1), the sink write (1), the windowed sink counts'
+# shuffle and write (2), and the edge aggregate's shuffle and write (2;
+# a 1000-row batch takes the one-shuffle ring). The lineage commit is a
+# driver-side file write and runs none. It was 14 while sink counts
+# were a groupBy/cache/collect over the written rows and the lookup and
+# lineage frames were Python RDDs, and 9 while lineage was a Spark
+# write and every batch ran the two-phase ring.
+JOB_BUDGET = 7
+# Spark jobs per epoch of run_stream (one 1000-turn file per epoch):
+# run_batch's 7 less the turn_rank shuffle, which streamed rows do not
+# carry. Counted as perfbench counts them: every job in the query's
+# run-id job group, divided by the committed epochs.
+STREAM_EPOCH_JOB_BUDGET = 6
 
 
 def test_run_batch_job_budget(spark, tmp_path):
@@ -214,15 +225,61 @@ def test_run_batch_job_budget(spark, tmp_path):
     assert 0 < jobs <= JOB_BUDGET
 
 
-def test_small_driver_frames_stay_in_the_jvm(spark):
-    lineage = pipeline.lineage_frame(
-        spark, "r", 10, {"sink_a": 4}, [("events_received_total", 10)]
+def test_run_stream_epoch_job_budget(spark, tmp_path):
+    in_dir, out = str(tmp_path / "in"), str(tmp_path / "out")
+    gen.transcripts(spark, 3000).repartition(3).write.parquet(in_dir)
+    q = streaming.run_stream(
+        spark, in_dir, out, str(tmp_path / "ckpt"), max_files_per_trigger=1
     )
-    for df in (gen.lookup_roles(spark), gen.lookup_hosts(spark), lineage):
+    q.awaitTermination(180)
+    epochs = len(pipeline.completed_batches(spark, out))
+    assert epochs == 3
+    jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert 0 < jobs / epochs <= STREAM_EPOCH_JOB_BUDGET, jobs
+
+
+def test_small_driver_frames_stay_in_the_jvm(spark):
+    for df in (gen.lookup_roles(spark), gen.lookup_hosts(spark)):
         plan = plan_string(df)
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
-    assert [tuple(r)[:7] for r in lineage.collect()] == [
+    lineage = pipeline.lineage_rows(
+        "r", 10, {"sink_a": 4}, [("events_received_total", 10)]
+    )
+    assert lineage == [
         ("r", "parse", -1, 10, 10, None, None),
         ("r", "sink:sink_a", -1, 10, 4, None, None),
         ("r", "counters", -1, 10, None, "events_received_total", 10),
     ]
+
+
+def test_lineage_commit_failing_before_rename_replays_once(spark, tmp_path, monkeypatch):
+    """A crash between the lineage temp-file write and its rename leaves
+    only the ``_``-prefixed temp file, which readers skip: the batch is
+    not committed, and the replay commits it exactly once."""
+    tr = gen.transcripts(spark, 500)
+    out = str(tmp_path / "out")
+    part = os.path.join(out, "lineage", "batch_id=2")
+
+    def crash(fs, tmp, final):
+        raise RuntimeError("crash before rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(compaction, "_publish", crash)
+        with pytest.raises(RuntimeError, match="before rename"):
+            pipeline.run_batch(spark, tr, out, run_id="x", batch_id=2)
+    assert [f for f in os.listdir(part) if not f.startswith(".")] == [
+        "_part-00000.lz4.parquet.tmp"
+    ]
+    assert pipeline.completed_batches(spark, out, "x") == set()
+
+    s = pipeline.run_batch(spark, tr, out, run_id="x", batch_id=2)  # replay
+    assert pipeline.completed_batches(spark, out, "x") == {2}
+    assert _data_files(part) == ["part-00000.lz4.parquet"]
+    assert not [f for f in os.listdir(part) if f.startswith("_")]
+    events = (
+        spark.read.parquet(os.path.join(out, "lineage"))
+        .filter("counter = 'events_received_total'")
+        .collect()
+    )
+    assert [(r["batch_id"], r["value"]) for r in events] == [(2, 500)]
+    assert s["rows_in"] == 500

@@ -7,6 +7,7 @@ rule adds checkpoint/resume — these tests pin that behavior.
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.errors import StreamingQueryException
@@ -21,6 +22,54 @@ def _write_input(spark, path, n_turns, n_files):
     tr = gen.transcripts(spark, n_turns)
     tr.repartition(n_files).write.mode("overwrite").parquet(path)
     return tr
+
+
+def _row_multiset(df, drop=()) -> Counter:
+    """Every row of ``df`` as one JSON string over its columns in name
+    order (map columns included), counted: a multiset that compares all
+    columns without sorting rows that hold maps."""
+    cols = sorted(c for c in df.columns if c not in drop)
+    return Counter(
+        r[0] for r in df.select(F.to_json(F.struct(*cols))).collect()
+    )
+
+
+def test_streamed_rows_equal_batch_rows(spark, tmp_path):
+    """The streaming contract: over the same turns, the sink rows of all
+    epochs equal run_batch's on every column except batch_id and
+    turn_rank, and per-epoch sink_counts summed over batch_id equal
+    the batch's."""
+    input_dir = str(tmp_path / "in")
+    out_s, out_b = str(tmp_path / "s"), str(tmp_path / "b")
+    _write_input(spark, input_dir, 3000, 3)
+    q = streaming.run_stream(
+        spark, input_dir, out_s, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    )
+    q.awaitTermination(180)
+    assert pipeline.completed_batches(spark, out_s) == {0, 1, 2}
+    pipeline.run_batch(spark, spark.read.parquet(input_dir), out_b, run_id="b")
+
+    streamed = spark.read.parquet(os.path.join(out_s, "sinks_by"))
+    batch = spark.read.parquet(os.path.join(out_b, "sinks_by"))
+    assert "turn_rank" not in streamed.columns and "turn_rank" in batch.columns
+    assert set(streamed.columns) == set(batch.columns) - {"turn_rank"}
+    s_rows = _row_multiset(streamed, drop=("batch_id",))
+    assert s_rows == _row_multiset(batch, drop=("batch_id", "turn_rank"))
+    assert sum(s_rows.values()) > 3000  # every turn, some in several sinks
+
+    def summed_counts(out):
+        key = ["sink", "conv_id", "window_start"]
+        sums = (
+            spark.read.parquet(os.path.join(out, "sink_counts"))
+            .groupBy(*key)
+            .agg(*[F.sum(c).alias(c) for c in
+                   ("turn_count", "tool_call_count", "error_pattern_count")])
+            .collect()
+        )
+        return {tuple(r[k] for k in key): tuple(r)[3:] for r in sums}
+
+    s_counts = summed_counts(out_s)
+    assert s_counts == summed_counts(out_b) and len(s_counts) > 0
 
 
 def test_stream_key_scheme_vs_relative_colon():
@@ -411,15 +460,11 @@ def test_stream_crash_in_commit_gap_is_exactly_once(spark, tmp_path):
     assert counter_sum(out_a) == n_input
     assert counter_sum(out_b) == n_input
 
-    # sink contents identical to the uninterrupted run (full row multiset)
-    key = ["sink", "conv_id", "turn_idx"]
-    a_rows = sorted(
-        map(tuple, spark.read.parquet(os.path.join(out_a, "sinks_by")).select(*key).collect())
-    )
-    b_rows = sorted(
-        map(tuple, spark.read.parquet(os.path.join(out_b, "sinks_by")).select(*key).collect())
-    )
-    assert a_rows == b_rows and len(a_rows) > 0
+    # sink contents identical to the uninterrupted run: the full row
+    # multiset, every written column
+    a_rows = _row_multiset(spark.read.parquet(os.path.join(out_a, "sinks_by")))
+    b_rows = _row_multiset(spark.read.parquet(os.path.join(out_b, "sinks_by")))
+    assert a_rows == b_rows and sum(a_rows.values()) > 0
 
 
 def test_single_pass_empty_batch_does_not_crash(spark, tmp_path):
