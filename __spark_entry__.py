@@ -2848,9 +2848,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts AS start_ts",
         "ts + make_dt_interval(0, CAST(1 + event_id % 5 AS INT), 0, 0) AS end_ts",
     )
-    return temporal.range_join(
-        facts, intervals, ["key"], method="bucketed", bucket_width_s=3600
-    )
+    return temporal.range_join(facts, intervals, ["key"], bucket_width_s=3600)
 
 
 # ── driver contract ──

@@ -26,6 +26,9 @@ from .skew import block_prefix_sums, null_safe_block, null_safe_window
 DEFAULT_WINDOW = 100
 DEFAULT_THRESHOLD = 3.0
 DEFAULT_COOLDOWN_S = 30.0
+# edge_metric_feed's block: a hot edge's running counts are sorted one
+# 15-minute bucket of its history at a time, never the whole history
+FEED_BLOCK = "15 minutes"
 
 
 def rolling_zscore(
@@ -315,8 +318,6 @@ def edge_metric_feed(
     ts_col: str = "ts",
     latency_col: str = "latency_us",
     status_col: str = "status_code",
-    two_phase: bool = True,
-    block_duration: str = "15 minutes",
 ) -> DataFrame:
     """The reference's detector feed (graph.go:149-152): per event, two
     metric samples per edge — latency in ms, and the **cumulative**
@@ -324,15 +325,13 @@ def edge_metric_feed(
     stable turn ordering, mirroring the order-dependent rate the Go
     code computes from its running aggregate; SURVEY.md §7.3.4).
 
-    ``two_phase`` (default) computes the running error/call counts
-    BOUNDED with ``skew.block_prefix_sums``: rows are blocked by
-    ``block_duration`` time buckets of ``ts_col`` (monotone in the
-    primary ordering column, so block order == row order; a NULL ts
-    falls in the earliest block, like the window form's
-    ASC-nulls-first). No task ever sorts or scans a hot edge's full
-    history, only one block of it, and the result is identical to the
-    single-window form (``two_phase=False``, kept for plan comparison)
-    for any block choice.
+    The running error/call counts are BOUNDED with
+    ``skew.block_prefix_sums``: rows are blocked by ``FEED_BLOCK`` time
+    buckets of ``ts_col`` (monotone in the primary ordering column, so
+    block order == row order; a NULL ts falls in the earliest block,
+    like an ASC-nulls-first window). No task ever sorts or scans a hot
+    edge's full history, only one block of it, and the result equals
+    one running window per key for any block choice.
 
     Output: key columns + (ts, metric, value) with metric ∈
     {'latency', 'error_rate'} — feed straight into rolling_zscore /
@@ -342,27 +341,16 @@ def edge_metric_feed(
     order_cols = order_cols or [ts_col]
     # NULL status counts as non-error (0), matching the oracle's
     # CASE WHEN ... THEN 1 ELSE 0 END — and keeping the running sums
-    # null-free so the two-phase offsets can never NULL-poison a block
+    # null-free so the block offsets can never NULL-poison a block
     is_err = F.coalesce((F.col(status_col) >= 500).cast("long"), F.lit(0))
-    # window expressions can't live inside a generator's projection —
     # materialize the running rate as a column first, then explode
-    if two_phase:
-        with_rate = block_prefix_sums(
-            df,
-            key_cols,
-            order_cols,
-            null_safe_window(F.col(ts_col), block_duration)["start"],
-            {"_err": is_err, "_cnt": F.lit(1)},
-        ).withColumn("_rate", F.col("_err") / F.col("_cnt"))
-    else:
-        w = (
-            Window.partitionBy(*key_cols)
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        with_rate = df.withColumn(
-            "_rate", F.sum(is_err).over(w) / F.count(F.lit(1)).over(w)
-        )
+    with_rate = block_prefix_sums(
+        df,
+        key_cols,
+        order_cols,
+        null_safe_window(F.col(ts_col), FEED_BLOCK)["start"],
+        {"_err": is_err, "_cnt": F.lit(1)},
+    ).withColumn("_rate", F.col("_err") / F.col("_cnt"))
     lat_ms = F.col(latency_col) / 1000.0
     pair = F.array(
         F.struct(F.lit("latency").alias("metric"), lat_ms.alias("value")),

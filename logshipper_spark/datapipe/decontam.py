@@ -67,7 +67,6 @@ def decontaminate(
     min_overlap: int = 1,
     text_col: str = "text",
     id_col: str = "doc_id",
-    assume_sparse: bool = True,
 ) -> DataFrame:
     """Per-document contamination verdict against a benchmark corpus:
     ``(id_col, n_overlap, contaminated)`` where `n_overlap` counts the
@@ -80,21 +79,17 @@ def decontaminate(
     strings, so there are no false positives to reason about at
     10^12-document scale.
 
-    `assume_sparse` (default) broadcasts the per-doc overlap counts
-    for the verdict join back onto the corpus, keeping the 100 TB side
-    shuffle-free end-to-end — correct whenever contaminated documents
-    are a small fraction of the corpus (the normal case). Set False if
-    contamination may be dense; the verdict join then shuffles on
-    id_col instead of risking a driver-size broadcast."""
+    The per-doc overlap counts are broadcast for the verdict join back
+    onto the corpus, keeping the 100 TB side shuffle-free end-to-end —
+    sized for contaminated documents being a small fraction of the
+    corpus (the normal case)."""
     grams = F.broadcast(benchmark_grams(bench, n, text_col))
     posting = _exploded_grams(docs, n, text_col, id_col)
-    counts = (
+    counts = F.broadcast(
         posting.join(grams, "gram")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_overlap"))
     )
-    if assume_sparse:
-        counts = F.broadcast(counts)
     return (
         docs.select(id_col)
         .join(counts, id_col, "left")

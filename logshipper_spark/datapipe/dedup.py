@@ -559,7 +559,6 @@ def fingerprint_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    verify: bool = False,
 ) -> DataFrame:
     """Exact-duplicate pairs by rolling-hash fingerprint equality
     (textstats.fingerprint): a self-equi-join on the 64-bit fingerprint
@@ -567,24 +566,16 @@ def fingerprint_pairs(
 
     The 64-bit key matches the operator's name (a *fingerprint* is
     64-bit by definition), but at 10^12 docs expects ~n²/2^65 ≈ 2.7×10⁴
-    false pairs; pass ``verify=True`` to ride the text through the
-    fp-join and filter on exact equality (costs text width in the
-    shuffle — for hash-only width at scale use ``exact_dedup``'s
-    128-bit composite key instead, see ``dedup_key``)."""
+    false pairs — for hash-only width at scale use ``exact_dedup``'s
+    128-bit composite key instead (see ``dedup_key``)."""
     from .textstats import fingerprint
 
-    cols = [F.col(id_col).alias("doc_id"), fingerprint(F.col(text_col)).alias("fp")]
-    if verify:
-        cols.append(F.col(text_col).alias("_txt"))
-    fps = df.select(*cols)
-    a = fps.select(F.col("doc_id").alias("id_a"), "fp",
-                   *([F.col("_txt").alias("_ta")] if verify else []))
-    b = fps.select(F.col("doc_id").alias("id_b"), "fp",
-                   *([F.col("_txt").alias("_tb")] if verify else []))
-    pairs = a.join(b, "fp").filter(F.col("id_a") < F.col("id_b"))
-    if verify:
-        pairs = pairs.filter(F.col("_ta") == F.col("_tb"))
-    return pairs.select("id_a", "id_b")
+    fps = df.select(
+        F.col(id_col).alias("doc_id"), fingerprint(F.col(text_col)).alias("fp")
+    )
+    a = fps.select(F.col("doc_id").alias("id_a"), "fp")
+    b = fps.select(F.col("doc_id").alias("id_b"), "fp")
+    return a.join(b, "fp").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
 
 
 def embedding_near_dup_pairs(

@@ -202,7 +202,6 @@ def dsir_weights(
     id_col: str = "doc_id",
     num_buckets: int = NUM_BUCKETS,
     seed: int = 0,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Per-document importance log-weights: ``(id, n_feats,
     logw_micro)`` where logw_micro is the long sum of the document
@@ -226,9 +225,7 @@ def dsir_weights(
             feature_buckets(F.col("_toks"), num_buckets, seed)
         ).alias("bucket"),
     )
-    m = model.select("bucket", F.col("lr_micro").alias("_lr"))
-    if broadcast_model:
-        m = F.broadcast(m)
+    m = F.broadcast(model.select("bucket", F.col("lr_micro").alias("_lr")))
     return (
         feats.join(m, "bucket", "left")
         .groupBy("_id")

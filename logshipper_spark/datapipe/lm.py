@@ -27,10 +27,8 @@ Scale posture (100 TB):
   token arrives pre-combined per map task, ~one row per task).
 - score = one explode, one join against the model, one groupBy doc.
   Vocabulary tables are small relative to any corpus (10⁷ distinct
-  tokens ≈ a few hundred MB) — broadcast by default so the hot-token
-  join-key skew never shuffles; set ``broadcast_model=False`` to
-  shuffle-join a vocabulary too large to ship (AQE skew-join then
-  handles 'the').
+  tokens ≈ a few hundred MB) — always broadcast, so the hot-token
+  join-key skew never shuffles.
 - ``min_count`` prunes the rare-token tail out of the broadcast model;
   pruned tokens score at the OOV probability mass.
 """
@@ -163,7 +161,6 @@ def lm_score(
     oov_nlp_micro: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Per-document unigram cross-entropy: ``(id, n_tokens,
     nlp_sum_micro, bits_per_token)`` where ``bits_per_token =
@@ -171,16 +168,14 @@ def lm_score(
     a row with n_tokens = 0 and NULL bits_per_token — the never-drop
     posture of the parse layer applies to scoring too.
 
-    One explode, one (broadcast by default) join, one map-side-combined
+    One explode, one broadcast join, one map-side-combined
     groupBy on the document id. All sums are longs — see module
     docstring for why that makes the score engine-independent."""
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("token"),
     )
-    m = model.select("token", F.col("nlp_micro").alias("_nlp"))
-    if broadcast_model:
-        m = F.broadcast(m)
+    m = F.broadcast(model.select("token", F.col("nlp_micro").alias("_nlp")))
     scored = (
         toks.join(m, "token", "left")
         .groupBy("_id")
@@ -316,7 +311,6 @@ def lm_score_bigram(
     fb_oov_micro: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Per-document interpolated-bigram cross-entropy; same output
     schema as lm_score: ``(id, n_tokens, nlp_sum_micro,
@@ -352,14 +346,14 @@ def lm_score_bigram(
     rows = base.select("_id", F.explode(F.concat(first, pair_structs)).alias("e")).select(
         "_id", F.col("e.gram").alias("gram"), F.col("e.token").alias("token")
     )
-    bm = bi_model.select("gram", F.col("nlp_micro").alias("_bnlp"))
-    tm = tok_model.select(
-        "token",
-        F.col("uni_nlp_micro").alias("_unlp"),
-        F.col("fb_nlp_micro").alias("_fnlp"),
+    bm = F.broadcast(bi_model.select("gram", F.col("nlp_micro").alias("_bnlp")))
+    tm = F.broadcast(
+        tok_model.select(
+            "token",
+            F.col("uni_nlp_micro").alias("_unlp"),
+            F.col("fb_nlp_micro").alias("_fnlp"),
+        )
     )
-    if broadcast_model:
-        bm, tm = F.broadcast(bm), F.broadcast(tm)
     scored = (
         rows.join(bm, "gram", "left")
         .join(tm, "token", "left")

@@ -282,7 +282,6 @@ def quantile_bins(
     group_col: str | None = None,
     block_size: int = 4096,
     out_col: str = "bin",
-    broadcast_scores: bool = True,
     n_col: str | None = None,
 ) -> DataFrame:
     """Exact k-quantile binning (curriculum / quality-stratification
@@ -306,12 +305,12 @@ def quantile_bins(
     class and rank FIRST (Spark's ASC null ordering — the null-safe
     score join keeps those rows; see test).
 
-    The distinct-score table is tiny only when scores are DISCRETE
-    (quantized quality scores, token counts, …) — the intended use.
-    For a near-continuous score, set ``broadcast_scores=False`` (the
-    base-rank join falls back to a shuffle join) and note the
+    The distinct-score table is always broadcast, so it must be tiny:
+    scores must be DISCRETE (quantized quality scores, token counts, …)
+    — the intended use. Quantize a near-continuous score first;
+    otherwise the broadcast carries one row per distinct score and the
     per-group distinct-score window degenerates toward a group-sized
-    sort — quantize the score first instead.
+    sort.
 
     ``n_col`` keeps the group-size total (already computed for the bin
     arithmetic) as an output column — callers that need it
@@ -348,12 +347,7 @@ def quantile_bins(
     # FIRST (Spark's ASC null ordering) and a NULL GROUP keeps its rows
     # — a plain equi-join on either column would silently drop them and
     # skew every other rank by their count
-    base = base.select(
-        F.struct(g, score_col).alias("_bgs"),
-        "_base",
-    )
-    if broadcast_scores:
-        base = F.broadcast(base)
+    base = F.broadcast(base.select(F.struct(g, score_col).alias("_bgs"), "_base"))
     totals = totals.select(F.struct(g).alias("_tg"), "_n")
     out = (
         ranked.withColumn("_bgs", F.struct(g, score_col))

@@ -397,7 +397,6 @@ def substr_contamination(
     id_col: str = "doc_id",
     w: int = 8,
     window: int = 4,
-    fp_df: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document boilerplate contamination vs a persisted
     fingerprint index: (doc_id, n_fingerprints, n_seen, contamination)
@@ -410,21 +409,13 @@ def substr_contamination(
     BIGINT column. The index is distinct()ed here because append-mode
     snapshot accumulation can repeat hashes — a repeated hash would
     otherwise double-count n_seen. Every input document appears in the
-    output (left join back onto the corpus ids).
-
-    ``fp_df`` (doc_id, pos, gram_hash): a precomputed fingerprint table
-    for ``df`` — pass it when the caller already built one (streaming
-    screen persists it per batch) so the batch isn't re-hashed."""
+    output (left join back onto the corpus ids)."""
     idx = index.select(F.col("gram_hash")).distinct().withColumn(
         "_seen", F.lit(1)
     )
-    fp = (
-        fingerprint_table(df, text_col, id_col, w, window)
-        if fp_df is None
-        else fp_df
-    )
     per_doc = (
-        fp.join(idx, "gram_hash", "left")
+        fingerprint_table(df, text_col, id_col, w, window)
+        .join(idx, "gram_hash", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_fingerprints"),

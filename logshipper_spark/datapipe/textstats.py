@@ -360,7 +360,6 @@ def bm25_topk(
     query_id_col: str = "query_id",
     query_col: str = "query",
     max_df_frac: float | None = None,
-    stats: tuple[int, int] | None = None,
     salt_buckets: int = 64,
 ) -> DataFrame:
     """Okapi BM25 retrieval: exact top-k documents per query over the
@@ -395,18 +394,13 @@ def bm25_topk(
     survivors), so a stop-word query never funnels its full candidate
     set through one task. ``max_df_frac`` drops query terms with df >
     frac*N up front (classic stop-term pruning — those terms carry
-    near-zero idf and dominate candidate volume).
-
-    ``stats=(n_docs, total_tokens)`` skips the one tiny accounting
-    action when the caller already knows them (corpus_stats pass)."""
-    if stats is None:
-        row = docs.select(
-            F.count("*").alias("n"),
-            F.sum(token_count(F.col(text_col))).alias("tot"),
-        ).collect()[0]
-        nd, tot = int(row["n"]), int(row["tot"] or 0)
-    else:
-        nd, tot = stats
+    near-zero idf and dominate candidate volume). N and avgdl come
+    from one tiny accounting collect over the corpus."""
+    row = docs.select(
+        F.count("*").alias("n"),
+        F.sum(token_count(F.col(text_col))).alias("tot"),
+    ).collect()[0]
+    nd, tot = int(row["n"]), int(row["tot"] or 0)
     avgdl = (tot / nd) if nd else 1.0
     tf = term_counts(docs, text_col, id_col, with_dl=True)
     qt = queries.select(

@@ -43,8 +43,10 @@ def local_frame(
     ``createDataFrame(list)`` builds a pickled Python RDD: every scan of
     it starts Python workers and runs a Spark job, even for three rows.
     Built from a ``pyarrow.Table``, the frame is a ``LocalRelation`` and
-    plans as ``LocalTableScan``: collecting or broadcasting it runs no
-    job, and writing it with ``coalesce(1)`` runs one task."""
+    plans as ``LocalTableScan``: collecting it runs no job, and writing
+    it with ``coalesce(1)`` runs one task. Broadcasting it still runs
+    one job every time the joining plan executes (the roles lookup in
+    ``enrich_roles``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 

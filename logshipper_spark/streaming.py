@@ -830,6 +830,8 @@ def streaming_asof_enrich(
     state is bounded by the micro-batch, and the state view is read via
     explicit partition paths so only pinned epochs are ever listed.
     """
+    import pyarrow as pa
+
     from . import temporal
 
     state_fields = spark.createDataFrame([], state_schema).columns
@@ -855,9 +857,13 @@ def streaming_asof_enrich(
             }
         else:
             pinned = compaction.committed_batches(spark, state_dir)
-            spark.createDataFrame(
-                [(b,) for b in sorted(pinned)] or [], "state_batch_id long"
-            ).coalesce(1).write.mode("overwrite").parquet(pin_path)
+            # an empty state set pins as a zero-row file
+            compaction.write_small_parquet(
+                spark,
+                pin_path,
+                pa.table({"state_batch_id": pa.array(sorted(pinned), pa.int64())}),
+                overwrite=True,
+            )
             # pin marker LAST — a crash mid-pin-write is invisible
             compaction.append_commit_marker(spark, pins_dir, batch_id)
             pinned_batches.add(batch_id)

@@ -28,15 +28,14 @@ Spark-first designs, no UDFs anywhere:
   carry-in from a tiny per-(key, block) summary table, phase 3
   coalesces. No task ever sorts a hot key's full history.
 
-* ``range_join`` — broadcast form for small interval tables (the
-  common case: incident/deploy windows are tiny next to the fact
-  stream; BroadcastHashJoin on the key + residual range filter), and a
-  bucketed equi-join form for large×large: intervals explode into the
+* ``range_join`` — a bucketed equi-join: intervals explode into the
   fixed-width time buckets they overlap, facts compute one bucket, the
-  join is a plain shuffled equi-join on (key, bucket) + exact residual
-  filter. Each fact row lands in exactly one bucket so no dedup pass
-  is needed; an interval costs ceil(len/width)+1 rows — size
-  ``bucket_width_s`` to the typical interval length.
+  join is a plain equi-join on (key, bucket) + exact residual filter,
+  and Spark picks broadcast or shuffle from the input sizes (a small
+  incident/deploy window table plans as one BroadcastHashJoin). Each
+  fact row lands in exactly one bucket so no dedup pass is needed; an
+  interval costs ceil(len/width)+1 rows — size ``bucket_width_s`` to
+  the typical interval length.
 
 NULL semantics match ANSI SQL so DuckDB oracles compare exactly:
 build/interval rows with NULL timestamps match nothing; probe/fact
@@ -253,7 +252,6 @@ def range_join(
     start_col: str = "start_ts",
     end_col: str = "end_ts",
     end_exclusive: bool = True,
-    method: str = "broadcast",
     bucket_width_s: int = 3600,
 ) -> DataFrame:
     """INNER interval join: every (fact, interval) pair on the same key
@@ -262,16 +260,12 @@ def range_join(
     overlapping intervals emit one row each. NULL fact ts or NULL
     bounds match nothing (ANSI comparison semantics — oracle-exact).
 
-    ``method="broadcast"`` (default): BroadcastHashJoin on the key with
-    the range as a residual filter — the right plan whenever the
-    interval table fits an executor (incident/deploy windows do).
-
-    ``method="bucketed"``: large×large path — each interval explodes
-    into the ``bucket_width_s``-wide time buckets it overlaps, each
-    fact computes exactly one bucket, and the join becomes a shuffled
-    equi-join on (keys…, bucket) + exact residual filter. Cost:
-    ceil(interval_len/width)+1 rows per interval — size the width to
-    the typical interval so the explode stays O(1) per interval.
+    Each interval explodes into the ``bucket_width_s``-wide time
+    buckets it overlaps, each fact computes exactly one bucket, and the
+    join is an equi-join on (keys…, bucket) + exact residual filter;
+    Spark broadcasts a small interval side and shuffles a large one.
+    Cost: ceil(interval_len/width)+1 rows per interval — size the width
+    to the typical interval so the explode stays O(1) per interval.
     """
     _check_reserved(facts, intervals)
     dup = (set(facts.columns) & set(intervals.columns)) - set(keys)
@@ -289,18 +283,6 @@ def range_join(
     # interval side drops its raw key columns so the output keeps one
     # set (from facts).
     kf = F.struct(*[F.col(k) for k in keys])
-
-    if method == "broadcast":
-        ivj = iv.withColumn("_rk", kf).drop(*keys)
-        return (
-            facts.withColumn("_rk", kf)
-            .join(F.broadcast(ivj), on="_rk", how="inner")
-            .where(in_range)
-            .drop("_rk")
-        )
-    if method != "bucketed":
-        raise ValueError(f"unknown method: {method!r}")
-
     wus = bucket_width_s * 1_000_000
     last_us = _ts_micros(end) - (1 if end_exclusive else 0)
     iv_b = iv.withColumn("_rk", kf).drop(*keys).withColumn(

@@ -317,3 +317,30 @@ def zscore_detect(values, window_size, threshold, min_samples, cooldown_s, ts_li
         last_alert_ts = ts_i
         alerts.append(i)
     return alerts
+
+
+def edge_error_rate_feed(rows, key_cols, order_cols):
+    """anomaly.edge_metric_feed's detector feed (graph.go:149-152) as a
+    running loop: per key (NULL compares equal to NULL), rows in
+    ascending ``order_cols`` order with NULLs first each emit latency
+    in ms and the cumulative ``errors / calls`` as of that row, where a
+    NULL status counts as a non-error. ``rows`` are dicts carrying the
+    key and order columns plus ``latency_us`` and ``status_code``; the
+    result is a list of dicts: key and order columns, ``metric``,
+    ``value``."""
+    by_key: dict = {}
+    for r in rows:
+        by_key.setdefault(tuple(r[k] for k in key_cols), []).append(r)
+    out = []
+    for group in by_key.values():
+        group.sort(key=lambda r: [(r[c] is not None, r[c]) for c in order_cols])
+        errors = 0
+        for calls, r in enumerate(group, start=1):
+            status = r["status_code"]
+            errors += status is not None and status >= 500
+            lat = r["latency_us"]
+            base = {c: r[c] for c in (*key_cols, *order_cols)}
+            out.append({**base, "metric": "latency",
+                        "value": None if lat is None else lat / 1000.0})
+            out.append({**base, "metric": "error_rate", "value": errors / calls})
+    return out

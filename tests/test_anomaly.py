@@ -145,13 +145,40 @@ def test_statistical_eval_f1(spark):
 
 
 # ── bounded two-phase error-rate feed (round-3 scale fix) ──
+_FEED_SCHEMA = (
+    "src_service string, dst_service string, operation string, "
+    "ts timestamp, event_id long, latency_us long, status_code int"
+)
+_FEED_KEYS = ["src_service", "dst_service", "operation"]
+_FEED_ORDER = ["ts", "event_id"]
+
+
+def _feed_vs_oracle(spark, rows):
+    """edge_metric_feed and oracle.edge_error_rate_feed over the same
+    rows, each as {(src_service, event_id, metric): value}."""
+    from logshipper_spark.anomaly import edge_metric_feed
+
+    from . import oracle
+
+    df = spark.createDataFrame(rows, _FEED_SCHEMA)
+    feed = edge_metric_feed(df, key_cols=_FEED_KEYS, order_cols=_FEED_ORDER)
+    key = lambda r: (r["src_service"], r["event_id"], r["metric"])  # noqa: E731
+    got = {key(r): r["value"] for r in feed.collect()}
+    names = [f.name for f in df.schema.fields]
+    want = {
+        key(r): r["value"]
+        for r in oracle.edge_error_rate_feed(
+            [dict(zip(names, row)) for row in rows], _FEED_KEYS, _FEED_ORDER
+        )
+    }
+    return df, got, want
+
+
 def test_edge_metric_feed_two_phase_parity_hot_edge(spark):
-    """Two-phase blocked running sums == single-window running sums on a
+    """Blocked running sums == the plain-Python running feed on a
     synthetic hot edge spanning many time blocks, and no (edge, block)
     group holds more than one block's worth of rows."""
-    from datetime import datetime, timedelta
-
-    from logshipper_spark.anomaly import edge_metric_feed
+    from logshipper_spark.anomaly import FEED_BLOCK
 
     start = datetime(2024, 3, 1)
     rows = []
@@ -161,25 +188,13 @@ def test_edge_metric_feed_two_phase_parity_hot_edge(spark):
     for i in range(20):  # one cold edge in a single block
         rows.append(("cold", "dst", "op", start + timedelta(seconds=i), 1000 + i,
                      50, 200))
-    df = spark.createDataFrame(
-        rows,
-        "src_service string, dst_service string, operation string, "
-        "ts timestamp, event_id long, latency_us long, status_code int",
-    )
-    kw = dict(
-        key_cols=["src_service", "dst_service", "operation"],
-        order_cols=["ts", "event_id"],
-    )
-    fast = edge_metric_feed(df, two_phase=True, block_duration="15 minutes", **kw)
-    slow = edge_metric_feed(df, two_phase=False, **kw)
-    key = lambda r: (r["src_service"], r["event_id"], r["metric"])  # noqa: E731
-    got = {key(r): r["value"] for r in fast.collect()}
-    want = {key(r): r["value"] for r in slow.collect()}
+    df, got, want = _feed_vs_oracle(spark, rows)
     assert got == want
+    assert len(got) == 2 * len(rows)  # every row emits latency + rate
     # per-task bound: the hot edge's 600 rows split across ~50 blocks,
     # so no (edge, block) partition holds more than 2 blocks' rows
     blk = df.groupBy(
-        "src_service", F.window("ts", "15 minutes")["start"].alias("b")
+        "src_service", F.window("ts", FEED_BLOCK)["start"].alias("b")
     ).count()
     assert blk.agg(F.max("count")).first()[0] <= 30
     assert blk.filter("src_service = 'hot'").count() >= 20
@@ -303,14 +318,10 @@ def test_rolling_zscore_blocked_large_mean_tight_spread_stddev(spark):
 
 
 def test_edge_metric_feed_two_phase_null_key_and_ts_parity(spark):
-    """NULL key columns and NULL ts rows must produce the same feed in
-    both forms — the struct-keyed offset join keeps them; a plain
+    """NULL key columns and NULL ts rows must produce the plain-Python
+    running feed — the struct-keyed offset join keeps them; a plain
     equi-join dropped the whole NULL-key group. NULL status counts as
-    non-error in both (the oracle's CASE ... ELSE 0 convention)."""
-    from datetime import datetime, timedelta
-
-    from logshipper_spark.anomaly import edge_metric_feed
-
+    non-error (the oracle's CASE ... ELSE 0 convention)."""
     start = datetime(2024, 3, 1)
     rows = []
     for i in range(40):  # NULL-src edge spanning several 15-min blocks
@@ -318,19 +329,6 @@ def test_edge_metric_feed_two_phase_null_key_and_ts_parity(spark):
                      100 + i, 500 if i % 5 == 0 else None))
     rows.append(("a", "dst", "op", None, 100, 50, 200))  # NULL ts
     rows.append(("a", "dst", "op", start, 101, 60, 503))
-    df = spark.createDataFrame(
-        rows,
-        "src_service string, dst_service string, operation string, "
-        "ts timestamp, event_id long, latency_us long, status_code int",
-    )
-    kw = dict(
-        key_cols=["src_service", "dst_service", "operation"],
-        order_cols=["ts", "event_id"],
-    )
-    fast = edge_metric_feed(df, two_phase=True, block_duration="15 minutes", **kw)
-    slow = edge_metric_feed(df, two_phase=False, **kw)
-    key = lambda r: (r["src_service"], r["event_id"], r["metric"])  # noqa: E731
-    got = {key(r): r["value"] for r in fast.collect()}
-    want = {key(r): r["value"] for r in slow.collect()}
+    _, got, want = _feed_vs_oracle(spark, rows)
     assert got == want
     assert len(got) == 2 * len(rows)  # every row emits latency + rate

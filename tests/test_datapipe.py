@@ -1146,9 +1146,8 @@ def test_decontaminate_property(spark):
         bench_texts=st.lists(text_st, min_size=1, max_size=3),
         n=st.integers(min_value=1, max_value=3),
         min_overlap=st.integers(min_value=1, max_value=2),
-        sparse=st.booleans(),
     )
-    def check(doc_texts, bench_texts, n, min_overlap, sparse):
+    def check(doc_texts, bench_texts, n, min_overlap):
         docs = spark.createDataFrame(
             list(enumerate(doc_texts)), "doc_id long, text string"
         )
@@ -1159,8 +1158,7 @@ def test_decontaminate_property(spark):
         got = {
             r["doc_id"]: (r["n_overlap"], r["contaminated"])
             for r in decontam.decontaminate(
-                docs, bench, n=n, min_overlap=min_overlap,
-                assume_sparse=sparse,
+                docs, bench, n=n, min_overlap=min_overlap
             ).collect()
         }
         bench_grams = set().union(*(grams(t, n) for t in bench_texts))

@@ -60,13 +60,6 @@ def test_unigram_lm_min_count_prunes_to_oov(spark, tiny_corpus):
     assert scored[1] == 1_000_000 + oov  # a c
 
 
-def test_lm_score_broadcast_and_shuffle_agree(spark, tiny_corpus):
-    model, oov = lm.fit_unigram_lm(tiny_corpus)
-    a = lm.lm_score(tiny_corpus, model, oov, broadcast_model=True)
-    b = lm.lm_score(tiny_corpus, model, oov, broadcast_model=False)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_lm_quality_filter_band(spark, tiny_corpus):
     model, oov = lm.fit_unigram_lm(tiny_corpus)
     scored = lm.lm_score(tiny_corpus, model, oov)

@@ -204,9 +204,7 @@ def test_range_join_bucketed_equivalent(spark):
     facts = spark.createDataFrame(FACTS, FACT_SCHEMA)
     iv = spark.createDataFrame(INTERVALS, IV_SCHEMA)
     for width in (60, 3600, 86400):
-        got = temporal.range_join(
-            facts, iv, ["key"], method="bucketed", bucket_width_s=width
-        )
+        got = temporal.range_join(facts, iv, ["key"], bucket_width_s=width)
         assert _range_pairs(got) == _expected_range(), width
         assert "_rb" not in got.columns
 
