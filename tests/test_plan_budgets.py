@@ -195,8 +195,12 @@ BUDGETS = [
         _probe(fx("tr")), _deploys(fx("tr")), ["key"], payloads=["ver"],
         tiebreak="ver", block_s=3600), (3, 0, 1, 0)),
     # the small incident side broadcasts into the (key, bucket) equi-join
-    ("temporal.range_join", lambda fx: temporal.range_join(
+    # at the default and at a narrower bucket width
+    ("temporal.range_join_broadcast", lambda fx: temporal.range_join(
         _probe(fx("tr")), _incidents(fx("tr")), ["key"]), (0, 0, 1, 0)),
+    ("temporal.range_join_bucketed", lambda fx: temporal.range_join(
+        _probe(fx("tr")), _incidents(fx("tr")), ["key"],
+        bucket_width_s=1800), (0, 0, 1, 0)),
     ("similarity.ivf_knn_join", lambda fx: similarity.ivf_knn_join(
         fx("spark"), fx("ivf_dir"), fx("emb").filter("vec_id < 8"), k=5,
         dim=_dim(fx("emb"))), (1, 0, 1, 0)),
