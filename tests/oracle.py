@@ -243,6 +243,18 @@ def resolve(n: dict, lookup_rows) -> dict:
     return n
 
 
+def enrich_roles(n: dict, role, tool, lookup_rows) -> dict:
+    """The (role, tool) roles lookup as a plain dict: ``team``,
+    ``cost_tier`` and ``sink_hint`` from the matching row of
+    ``lookup_rows`` (role, tool, team, cost_tier, sink_hint), ``""`` on
+    a miss, on a NULL role or tool and for a NULL value."""
+    table = {(r[0], r[1]): r[2:] for r in lookup_rows}
+    hit = table.get((role, tool)) if role is not None and tool is not None else None
+    for k, v in zip(("team", "cost_tier", "sink_hint"), hit or (None,) * 3):
+        n[k] = v if v is not None else ""
+    return n
+
+
 def route_row(n: dict, tool: str) -> list[str]:
     """The gen.routing_rules() predicates, evaluated Go-style."""
     sinks = []

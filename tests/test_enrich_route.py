@@ -127,14 +127,19 @@ def test_resolve_services(spark):
 def test_enrich_roles_broadcast(spark):
     lookup = gen.lookup_roles(spark)
     df = spark.createDataFrame(
-        [("tool", "code_exec"), ("user", ""), ("mystery", "")],
+        [("tool", "code_exec"), ("user", ""), ("mystery", ""), (None, "search"),
+         ("tool", None)],
         "role string, tool string",
     )
     out = {(r["role"], r["tool"]): r.asDict() for r in enrich_roles(df, lookup).collect()}
+    assert len(out) == 5
     assert out[("tool", "code_exec")]["cost_tier"] == "high"
     assert out[("tool", "code_exec")]["sink_hint"] == "sink_tools"
     assert out[("user", "")]["team"] == "end-user"
     assert out[("mystery", "")]["team"] == ""  # unmatched → empty, row kept
+    # a NULL role or tool never matches, as in the equi-join; row kept
+    for key in [(None, "search"), ("tool", None)]:
+        assert [out[key][c] for c in ("team", "cost_tier", "sink_hint")] == ["", "", ""]
     # plan must use a broadcast join (no shuffle of the fact side)
     plan = plan_string(enrich_roles(df, lookup))
     assert "BroadcastHashJoin" in plan

@@ -32,6 +32,7 @@ def frames(spark):
         (r["host_pattern"], r["service"], r["is_wildcard"], r["priority"])
         for r in gen.lookup_hosts(spark).collect()
     ]
+    role_rows = [tuple(r) for r in gen.lookup_roles(spark).collect()]
     tx_rows = sorted(
         (r.asDict() for r in tx.collect()), key=lambda r: (r["conv_id"], r["turn_idx"])
     )
@@ -39,6 +40,7 @@ def frames(spark):
     for r in tx_rows:
         n = oracle.parse_normalized(r["text"], r["role"])
         n = oracle.resolve(n, lookup_rows)
+        n = oracle.enrich_roles(n, r["role"], r["tool"], role_rows)
         n["conv_id"], n["turn_idx"], n["tool"], n["ts"] = (
             r["conv_id"], r["turn_idx"], r["tool"], r["ts"],
         )
@@ -54,7 +56,8 @@ def _naive(dt):
 
 FIELDS = [
     "trace_id", "span_id", "src_service", "dst_service", "operation",
-    "status_code", "latency_us", "level", "format",
+    "status_code", "latency_us", "level", "format", "team", "cost_tier",
+    "sink_hint",
 ]
 
 
