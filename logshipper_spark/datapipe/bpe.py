@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .textstats import tokens
 from .tokenize import positional_values
 
@@ -134,8 +135,8 @@ def bpe_train(
         words = words.withColumn(
             "symbols", _merge_pair(F.col("symbols"), left, right)
         ).localCheckpoint()
-    merges_df = spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
+    merges_df = local_frame(
+        spark, merges, "rank int, left string, right string, pair_count long"
     )
     return merges_df, words.select(
         "word", "cnt", F.col("symbols").alias("pieces")

@@ -58,6 +58,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "committed_batches",
     "compaction_state",
@@ -237,7 +239,7 @@ def _live_view(
             )
     if not parts:
         empty_schema = schema + "".join(f", {c} int" for c in part_cols)
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     view = parts[0]
     for p in parts[1:]:
         view = view.unionByName(p)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import hold
+from ..session import hold, local_frame
 from .dedup import near_dup_components
 from .similarity import _nearest_centroid_col, _write_centroids, floor_round
 
@@ -260,8 +260,8 @@ def semantic_dedup_against(
             # and the probe filter below would throw UNRESOLVED_COLUMN.
             # The committed index is simply empty (compaction.
             # _pinned_scan guards the same case for the batch layout).
-            index_df = spark.createDataFrame(
-                [], "vec_id long, embedding array<double>, cell int"
+            index_df = local_frame(
+                spark, [], "vec_id long, embedding array<double>, cell int"
             )
     idx = index_df.filter(F.col("cell").isin(probe_cells)).select(
         F.col("embedding").alias("_iv"), inrm.alias("_in"), "cell"

@@ -1,17 +1,19 @@
-"""Enrichment: broadcast lookup joins (the reference's resolver layer).
+"""Enrichment: small config dimensions compiled into the plan (the
+reference's resolver layer).
 
 The reference resolves hosts → services per event through a chain of
 resolvers with a TTL cache (reference: internal/resolve/static.go,
-chain.go:11-22, cache.go:26-78, applied at pipeline.go:178-192). In
-Spark the whole dimension ships once per stage as a **broadcast hash
-join** — no shuffle of the fact side, and the TTL cache is subsumed
-(the broadcast IS the cache; streaming refreshes it per micro-batch).
+chain.go:11-22, cache.go:26-78, applied at pipeline.go:178-192). Both
+dimensions here (the host → service map and the (role, tool) roles
+lookup) are a few config rows, so each is collected once on the driver
+and compiled into an expression: no join, no shuffle of the fact side,
+and no broadcast job per execution. The compiled plan IS the cache; a
+stream compiles it once per query.
 
 Wildcard patterns (``*.redis.svc``, reference static.go:27-33) are a
 tiny priority-ordered list → compiled into a single first-match
-``when()`` chain (expression, not a join — avoids fan-out duplicate
-rows from multi-pattern matches while preserving first-match-wins,
-reference chain.go:15-21).
+``when()`` chain (avoids fan-out duplicate rows from multi-pattern
+matches while preserving first-match-wins, reference chain.go:15-21).
 """
 
 from __future__ import annotations
@@ -79,12 +81,7 @@ def _docker_stage(host: Column, rows: list[tuple[str, str, bool, int]]) -> Colum
 
 
 def resolve_services(
-    df: DataFrame,
-    hosts_df: DataFrame,
-    dst_col: str = "dst_service",
-    src_col: str = "src_service",
-    source_name_col: str = "source_name",
-    docker_replicas: bool = False,
+    df: DataFrame, hosts_df: DataFrame, docker_replicas: bool = False
 ) -> DataFrame:
     """Pipeline.resolve semantics (reference: pipeline.go:178-192):
     enrich dst_service when set; backfill empty src_service from the
@@ -103,51 +100,54 @@ def resolve_services(
         (r["host_pattern"], r["service"], r["is_wildcard"], r["priority"])
         for r in hosts_df.collect()
     ]
-    dst = F.col(dst_col)
-    src = F.col(src_col)
-    src_name = F.col(source_name_col)
+    dst = F.col("dst_service")
+    src = F.col("src_service")
+    src_name = F.col("source_name")
     resolved_dst = resolve_expr(dst, rows)
     resolved_src = resolve_expr(src_name, rows)
     if docker_replicas:
         resolved_dst = F.coalesce(resolved_dst, _docker_stage(dst, rows))
         resolved_src = F.coalesce(resolved_src, _docker_stage(src_name, rows))
     out = df.withColumn(
-        dst_col, F.when(dst != "", F.coalesce(resolved_dst, dst)).otherwise(dst)
+        "dst_service", F.when(dst != "", F.coalesce(resolved_dst, dst)).otherwise(dst)
     )
     out = out.withColumn(
-        src_col, F.when(src == "", F.coalesce(resolved_src, src_name)).otherwise(src)
+        "src_service", F.when(src == "", F.coalesce(resolved_src, src_name)).otherwise(src)
     )
     return out
 
 
-def enrich_roles(
-    df: DataFrame,
-    lookup_df: DataFrame,
-    role_col: str = "role",
-    tool_col: str = "tool",
-) -> DataFrame:
-    """Broadcast-join enrichment keyed on (role, tool) — the north-rule
-    lookup. Left join; unmatched rows keep the fact row with empty
-    enrichment values (nothing is ever dropped)."""
-    lk = F.broadcast(
-        lookup_df.select(
-            F.col("role").alias("_lk_role"),
-            F.col("tool").alias("_lk_tool"),
-            "team",
-            "cost_tier",
-            "sink_hint",
-        )
-    )
-    joined = df.join(
-        lk,
-        (F.col(role_col) == F.col("_lk_role")) & (F.col(tool_col) == F.col("_lk_tool")),
-        "left",
-    ).drop("_lk_role", "_lk_tool")
-    return (
-        joined.withColumn("team", F.coalesce(F.col("team"), F.lit("")))
-        .withColumn("cost_tier", F.coalesce(F.col("cost_tier"), F.lit("")))
-        .withColumn("sink_hint", F.coalesce(F.col("sink_hint"), F.lit("")))
-    )
+_ROLE_VALUES = ("team", "cost_tier", "sink_hint")
+
+
+def enrich_roles(df: DataFrame, lookup_df: DataFrame) -> DataFrame:
+    """Enrichment keyed on (role, tool), the north-rule lookup, with
+    the semantics of a left equi-join: every fact row is kept, and a
+    miss (a NULL role or tool always misses) gives ``""`` in ``team``,
+    ``cost_tier`` and ``sink_hint``, as does a NULL value.
+
+    ``lookup_df`` is a config dimension: it is collected once on the
+    driver and compiled into one map literal keyed on
+    ``struct(role, tool)``. Lookup rows with a NULL key are skipped (they
+    never matched the join); a duplicate key raises ``ValueError``
+    here, since a join would have duplicated fact rows."""
+    table: dict = {}
+    for r in lookup_df.collect():
+        key = (r["role"], r["tool"])
+        if None in key:
+            continue
+        if key in table:
+            raise ValueError(f"duplicate (role, tool) in the roles lookup: {key}")
+        table[key] = F.struct(*[F.lit(r[c]).cast("string").alias(c) for c in _ROLE_VALUES])
+    if not table:
+        return df.withColumns({c: F.lit("") for c in _ROLE_VALUES})
+    compiled = F.create_map(*[
+        x
+        for (role, tool), values in table.items()
+        for x in (F.struct(F.lit(role).alias("role"), F.lit(tool).alias("tool")), values)
+    ])
+    hit = F.try_element_at(compiled, F.struct("role", "tool"))
+    return df.withColumns({c: F.coalesce(hit[c], F.lit("")) for c in _ROLE_VALUES})
 
 
 def resolve_one(

@@ -255,8 +255,9 @@ def transcripts(
 
 
 def lookup_roles(spark: SparkSession) -> DataFrame:
-    """Enrichment dimension keyed on (role, tool) — north-rule broadcast
-    join. Small by construction (≤ |roles|×|tools| rows)."""
+    """Enrichment dimension keyed on (role, tool), the north-rule lookup
+    ``enrich.enrich_roles`` compiles into the plan. Small by
+    construction (≤ |roles|×|tools| rows)."""
     rows = []
     teams = {"user": "end-user", "assistant": "model", "system": "platform", "tool": "tooling"}
     tiers = {"search": "low", "code_exec": "high", "db_query": "medium", "http_get": "low", "none": "free"}

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 WHITE, GRAY, BLACK = 0, 1, 2
 
 
@@ -359,9 +361,7 @@ def bfs_depths(
         .localCheckpoint()
     )
     nbr = e.select(F.col("src").alias("_mid"), F.col("dst").alias("_nd"))
-    depths = spark.createDataFrame(
-        [(root, 0)], "node string, depth int"
-    ).localCheckpoint()
+    depths = local_frame(spark, [(root, 0)], "node string, depth int")
     frontier = depths
     converged = False
     for d in range(1, max_iter + 1):

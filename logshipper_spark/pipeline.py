@@ -59,15 +59,15 @@ def normalize_and_enrich(
     spark: SparkSession,
     transcripts: DataFrame,
     ingest_ts: str = DEFAULT_INGEST_TS,
-    lookup_roles: DataFrame | None = None,
     lookup_hosts: DataFrame | None = None,
     skip_turn_rank: bool = False,
     docker_replicas: bool = True,
 ) -> DataFrame:
     """The narrow stage: parse the text column (role plays the
-    reference's source name), broadcast-enrich on (role, tool), resolve
-    dst/src services, and pin stable turn ordering (W11) with a
-    row_number over (conv_id, turn_idx).
+    reference's source name), enrich on (role, tool), resolve dst/src
+    services, and pin stable turn ordering (W11) with a row_number over
+    (conv_id, turn_idx). Both lookups compile into the projection, so
+    parse → enrich → resolve is one projection over the scan.
 
     ``skip_turn_rank=True`` keeps the chain fully narrow (no window
     shuffle) — required for the native streaming path, where arbitrary
@@ -76,9 +76,7 @@ def normalize_and_enrich(
     parsed = parse.parse_normalized(
         transcripts, text_col="text", source_name=F.col("role"), ingest_ts=ingest_ts
     )
-    enriched = enrich.enrich_roles(
-        parsed, lookup_roles if lookup_roles is not None else gen.lookup_roles(spark)
-    )
+    enriched = enrich.enrich_roles(parsed, gen.lookup_roles(spark))
     enriched = enrich.resolve_services(
         enriched,
         lookup_hosts if lookup_hosts is not None else gen.lookup_hosts(spark),
@@ -152,7 +150,6 @@ def run_batch(
     batch_id: int = 0,
     ingest_ts: str = DEFAULT_INGEST_TS,
     rules: list[tuple[str, str, int]] | None = None,
-    lookup_roles: DataFrame | None = None,
     lookup_hosts: DataFrame | None = None,
     transform_fn=None,
     docker_replicas: bool = True,
@@ -168,8 +165,7 @@ def run_batch(
     """
     t0 = time.time()
     enriched = normalize_and_enrich(
-        spark, transcripts, ingest_ts=ingest_ts,
-        lookup_roles=lookup_roles, lookup_hosts=lookup_hosts,
+        spark, transcripts, ingest_ts=ingest_ts, lookup_hosts=lookup_hosts,
         docker_replicas=docker_replicas,
     )
     if transform_fn is not None:

@@ -45,8 +45,8 @@ def local_frame(
     Built from a ``pyarrow.Table``, the frame is a ``LocalRelation`` and
     plans as ``LocalTableScan``: collecting it runs no job, and writing
     it with ``coalesce(1)`` runs one task. Broadcasting it still runs
-    one job every time the joining plan executes (the roles lookup in
-    ``enrich_roles``)."""
+    one job every time the joining plan executes, so a config dimension
+    is collected and compiled into the plan instead (``enrich``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 

@@ -34,10 +34,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import gen, pipeline, route
 from .datapipe import compaction
 from .schemas import DEFAULT_INGEST_TS, TRANSCRIPT_SCHEMA
+from .session import local_frame
 
 
 def _stream_key(path: str) -> str:
@@ -262,14 +264,12 @@ def run_stream(
     # per-run work done once, not per micro-batch: the committed-batch
     # set (one lineage scan at start; this process is the only lineage
     # writer afterwards, so the local set stays exact) and the narrow
-    # plan, whose lookup dims and host-dim collect are built here once
+    # plan, whose lookup dims are collected and compiled here once
     done = pipeline.claim_out_dir(spark, out_dir, run_id)
     enriched = pipeline.normalize_and_enrich(
         spark,
         read_transcript_stream(spark, input_dir, max_files_per_trigger),
         ingest_ts=ingest_ts,
-        lookup_roles=gen.lookup_roles(spark),
-        lookup_hosts=gen.lookup_hosts(spark),
         skip_turn_rank=True,
     )
 
@@ -638,7 +638,7 @@ def streaming_substr_screen(
                 spark, index_dir, committed=committed, state=comp_state
             )
         else:
-            idx = spark.createDataFrame([], "gram_hash long")
+            idx = local_frame(spark, [], "gram_hash long")
         # contamination vs the index AND the batch itself (the
         # siblings' rule (b)): a fingerprint counts as seen for doc a
         # when the index holds it OR a LOWER-id doc in this batch does —
@@ -834,7 +834,7 @@ def streaming_asof_enrich(
 
     from . import temporal
 
-    state_fields = spark.createDataFrame([], state_schema).columns
+    state_fields = StructType.fromDDL(state_schema).fieldNames()
     pins_dir = os.path.join(out_dir, "_epoch_pins")
     # the pins belong to ONE logical stream: a new checkpoint over a
     # reused out_dir would collide batch ids with the old run's pins
@@ -877,7 +877,7 @@ def streaming_asof_enrich(
             # (CLAUDE.md gotcha) — select the declared fields only
             state = state.select(*state_fields)
         else:
-            state = spark.createDataFrame([], state_schema)
+            state = local_frame(spark, [], state_schema)
         enriched = temporal.asof_join(
             batch_df,
             state,

@@ -23,9 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-DEFAULT_WINDOW = 100
-DEFAULT_THRESHOLD = 3.0
-DEFAULT_COOLDOWN_S = 30.0
+from .anomaly import DEFAULT_COOLDOWN_S, DEFAULT_THRESHOLD, DEFAULT_WINDOW
 
 ALERT_SCHEMA = T.StructType(
     [

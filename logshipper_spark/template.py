@@ -16,6 +16,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .parse import _TS_STRING_RE
 from .schemas import DEFAULT_INGEST_TS, FORMAT_TEMPLATE
 
 _VAR_PATTERN = re.compile(r"\$([a-zA-Z_][a-zA-Z0-9_]*)")
@@ -23,7 +24,6 @@ _VAR_PATTERN = re.compile(r"\$([a-zA-Z_][a-zA-Z0-9_]*)")
 # Go time layouts at template.go:67-72 → Spark datetime patterns; the
 # RFC3339 family is handled by try_to_timestamp's ISO parser behind a
 # full date-time gate (see parse._TS_STRING_RE rationale).
-_TS_STRING_RE = r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}"
 _NGINX_TIME_FMT = "dd/MMM/yyyy:HH:mm:ss Z"
 
 TIME_VAR_KEYS = ["time_local", "time_iso8601", "timestamp", "ts", "time"]  # template.go:75

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from logshipper_spark import gen, route
 from logshipper_spark.enrich import enrich_roles, resolve_expr, resolve_one, resolve_services
+from logshipper_spark.session import local_frame
 
 from .conftest import plan_string
 
@@ -124,7 +126,7 @@ def test_resolve_services(spark):
     assert out[3]["src_service"] == "plainsource"
 
 
-def test_enrich_roles_broadcast(spark):
+def test_enrich_roles_compiled(spark):
     lookup = gen.lookup_roles(spark)
     df = spark.createDataFrame(
         [("tool", "code_exec"), ("user", ""), ("mystery", ""), (None, "search"),
@@ -140,9 +142,27 @@ def test_enrich_roles_broadcast(spark):
     # a NULL role or tool never matches, as in the equi-join; row kept
     for key in [(None, "search"), ("tool", None)]:
         assert [out[key][c] for c in ("team", "cost_tier", "sink_hint")] == ["", "", ""]
-    # plan must use a broadcast join (no shuffle of the fact side)
-    plan = plan_string(enrich_roles(df, lookup))
-    assert "BroadcastHashJoin" in plan
+    # the dimension is compiled into the projection: no join of any kind
+    assert "Join" not in plan_string(enrich_roles(df, lookup))
+
+    schema = "role string, tool string, team string, cost_tier string, sink_hint string"
+    facts = spark.createDataFrame([("user", ""), ("tool", "search")], "role string, tool string")
+
+    def enriched(rows):
+        got = enrich_roles(facts, local_frame(spark, rows, schema)).collect()
+        return {(r["role"], r["tool"]): (r["team"], r["cost_tier"], r["sink_hint"]) for r in got}
+
+    # a lookup row with a NULL key never matched the join: ignored; a
+    # NULL value becomes ""
+    assert enriched([
+        (None, "", "ghost", "x", "y"), ("tool", None, "ghost", "x", "y"),
+        ("user", "", "end-user", None, "sink_default"),
+    ]) == {("user", ""): ("end-user", "", "sink_default"), ("tool", "search"): ("", "", "")}
+    # an empty lookup enriches every row with ""
+    assert set(enriched([]).values()) == {("", "", "")}
+    # a duplicate key would have duplicated fact rows: refused up front
+    with pytest.raises(ValueError, match="duplicate"):
+        enriched([("user", "", "a", "b", "c"), ("user", "", "d", "e", "f")])
 
 
 def test_routed_rows_fanout(spark):

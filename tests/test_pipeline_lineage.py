@@ -194,20 +194,23 @@ def test_lineage_replay_leaves_one_identical_file(spark, tmp_path):
 
 # Spark jobs one run_batch launches over gen.transcripts(spark, 1000) at
 # local[4] with the default rules, as measured. AQE runs each shuffle
-# map stage as its own job: the broadcast of the roles lookup (1), the
-# turn_rank shuffle (1), the sink write (1), the windowed sink counts'
-# shuffle and write (2), and the edge aggregate's shuffle and write (2;
-# a 1000-row batch takes the one-shuffle ring). The lineage commit is a
-# driver-side file write and runs none. It was 14 while sink counts
-# were a groupBy/cache/collect over the written rows and the lookup and
-# lineage frames were Python RDDs, and 9 while lineage was a Spark
-# write and every batch ran the two-phase ring.
-JOB_BUDGET = 7
+# map stage as its own job: the turn_rank shuffle (1), the sink write
+# (1), the windowed sink counts' shuffle and write (2), and the edge
+# aggregate's shuffle and write (2; a 1000-row batch takes the
+# one-shuffle ring). The lineage commit is a driver-side file write and
+# runs none. It was 14 while sink counts were a groupBy/cache/collect
+# over the written rows and the lookup and lineage frames were Python
+# RDDs, 9 while lineage was a Spark write and every batch ran the
+# two-phase ring, and 7 while the roles lookup was a broadcast join
+# (its broadcast ran one job per execution; it is now compiled into the
+# projection).
+JOB_BUDGET = 6
 # Spark jobs per epoch of run_stream (one 1000-turn file per epoch):
-# run_batch's 7 less the turn_rank shuffle, which streamed rows do not
+# run_batch's 6 less the turn_rank shuffle, which streamed rows do not
 # carry. Counted as perfbench counts them: every job in the query's
-# run-id job group, divided by the committed epochs.
-STREAM_EPOCH_JOB_BUDGET = 6
+# run-id job group, divided by the committed epochs. It was 6 while the
+# roles lookup's broadcast ran a job in every epoch.
+STREAM_EPOCH_JOB_BUDGET = 5
 
 
 def test_run_batch_job_budget(spark, tmp_path):

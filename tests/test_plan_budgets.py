@@ -162,29 +162,31 @@ def _representatives(fx):
 
 # (case id, frame builder over the fixture getter, budget)
 BUDGETS = [
-    # the whole parse → enrich chain is narrow except the single
-    # turn-ordering window; enrichment only broadcasts
-    ("normalize_and_enrich", lambda fx: fx("enr"), (1, 0, 1, 0)),
+    # the whole parse → enrich chain is one projection (both lookups are
+    # compiled into it, no join) plus the single turn-ordering window.
+    # Every row over fx("enr") lost the roles lookup's BroadcastHashJoin
+    # when enrich_roles stopped joining.
+    ("normalize_and_enrich", lambda fx: fx("enr"), (1, 0, 0, 0)),
     # phase 1 shares one (edge, time-block) exchange between the
     # block window and the partial groupBy; phase 2 merges per edge
     ("edge_agg", lambda fx: aggregate.edge_agg(
-        fx("enr"), ts_col="event_ts", order_cols=ORDER), (2, 0, 1, 0)),
+        fx("enr"), ts_col="event_ts", order_cols=ORDER), (2, 0, 0, 0)),
     ("edge_agg_single_window", lambda fx: aggregate.edge_agg(
         fx("enr"), ts_col="event_ts", order_cols=ORDER, ring_block_s=None),
-     (1, 0, 1, 0)),
+     (1, 0, 0, 0)),
     ("route.sink_counts", lambda fx: route.sink_counts(
         route.routed_rows(fx("enr"), gen.routing_rules()), ts_col="ts"),
-     (1, 0, 1, 0)),
+     (1, 0, 0, 0)),
     ("skew.turn_rank_salted", lambda fx: skew.turn_rank_salted(
         fx("tr"), block_size=1024), (3, 0, 1, 0)),
     ("anomaly.rolling_zscore", lambda fx: anomaly.rolling_zscore(
         fx("enr").filter("src_service <> ''").selectExpr(
             "src_service AS k", "ts", "conv_id", "turn_idx",
             "latency_us / 1000.0 AS value"),
-        key_cols=["k"], value_col="value", order_cols=ORDER), (1, 0, 1, 0)),
+        key_cols=["k"], value_col="value", order_cols=ORDER), (1, 0, 0, 0)),
     # three ROLLUP levels through one map-side-combined exchange
     ("aggregate.edge_rollup", lambda fx: aggregate.edge_rollup(fx("enr")),
-     (1, 0, 1, 0)),
+     (1, 0, 0, 0)),
     ("transcript.conv_stats", lambda fx: transcript.conv_stats(fx("tr")),
      (1, 0, 0, 0)),
     # no join operator: build and probe rows share one window shuffle
@@ -235,9 +237,14 @@ BUDGETS = [
     # its consumers: 8 of the 11 exchanges and all 4 sort-merge joins
     ("dsir.dsir_select", _dsir_select, (11, 0, 3, 4)),
     # the hot-key decompositions' callers (skew.block_prefix_sums and
-    # skew.salted_topk)
+    # skew.salted_topk). The feed reads fx("enr") in both branches, so
+    # the roles join counted twice; without it the estimated size of the
+    # enriched 10k rows fell from ~1.27 GB (a left join estimates as the
+    # product of its sides) to ~1.9 MB, the per-(edge, block) offsets
+    # side fits the broadcast threshold, and the offsets join-back is a
+    # BroadcastHashJoin instead of a SortMergeJoin over one more exchange
     ("anomaly.edge_metric_feed", lambda fx: anomaly.edge_metric_feed(
-        fx("enr"), order_cols=ORDER), (4, 0, 2, 1)),
+        fx("enr"), order_cols=ORDER), (3, 0, 1, 0)),
     ("anomaly.rolling_zscore_blocked", lambda fx:
      anomaly.rolling_zscore_blocked(fx("events"), ["event_type"],
                                     block_size=256), (9, 0, 4, 0)),
