@@ -121,10 +121,11 @@ def main(argv: list[str] | None = None) -> int:
     if bool(args.dsir_target) != (args.dsir_k is not None):
         ap.error("--dsir-target and --dsir-k go together")
 
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from logshipper_spark.datapipe import curate, dedup, lm, packing
-    from logshipper_spark.datapipe.compaction import _exists
+    from logshipper_spark.datapipe.compaction import _exists, write_small_parquet
     from logshipper_spark.datapipe.filters import c4_line_clean, pii_scrub
     from logshipper_spark.session import get_spark, release_held
 
@@ -171,9 +172,10 @@ def main(argv: list[str] | None = None) -> int:
     def _write_domain(idx_path: str) -> None:
         dpath = os.path.join(idx_path, "_domain")
         if not _exists(spark, dpath):
-            spark.createDataFrame(
-                [domain], "scrub_pii boolean, line_clean boolean"
-            ).coalesce(1).write.mode("overwrite").parquet(dpath)
+            write_small_parquet(spark, dpath, pa.table({
+                "scrub_pii": pa.array([domain[0]], pa.bool_()),
+                "line_clean": pa.array([domain[1]], pa.bool_()),
+            }), overwrite=True)
 
     # 0. one-shot text normalization — every later stage shares it.
     # The text COLUMN is rewritten in place; every other input column

@@ -50,6 +50,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from logshipper_spark import config as cfgmod
     from logshipper_spark import gen, pipeline, streaming
+    from logshipper_spark.datapipe import compaction
     from logshipper_spark.session import get_spark
 
     spark = get_spark(app_name="logshipper-pipeline")
@@ -61,7 +62,9 @@ def main(argv: list[str] | None = None) -> int:
         # its own out dir); --config runs are batches too, so they skip
         # a committed batch id like any other
         try:
-            done = pipeline.claim_out_dir(spark, args.out, batch_run_id)
+            done = compaction.claim_commits(
+                spark, os.path.join(args.out, "lineage"), batch_run_id
+            )
         except ValueError as e:
             ap.error(str(e))
         if args.batch_id in done:

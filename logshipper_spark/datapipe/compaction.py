@@ -25,8 +25,8 @@ only trust committed epochs — and a rerun overwrites the same
 the batch tail; ``vacuum_index`` may then delete covered batch
 partitions and superseded epochs at leisure (nothing references them).
 ``_commits`` itself is never rewritten: streaming replay-skip needs the
-full batch-id set, and it stays O(total batches) 8-byte ROWS, not
-files.
+full batch-id set and the owning run id, and it stays O(total
+batches) ``(batch_id, run_id)`` rows.
 
 Readers go through ``read_minhash_index`` / ``read_semantic_index`` /
 ``read_fingerprint_index`` — each returns the live view with a pinned
@@ -61,6 +61,8 @@ from pyspark.sql import functions as F
 from ..session import local_frame
 
 __all__ = [
+    "commit_runs",
+    "claim_commits",
     "committed_batches",
     "compaction_state",
     "read_minhash_index",
@@ -87,29 +89,69 @@ def _exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(jpath)
 
 
-def committed_batches(spark: SparkSession, index_dir: str) -> set[int]:
-    """Batch ids whose commit marker landed — the partitions a reader
-    may trust. Only the path-missing case yields the empty set; a
+def commit_runs(spark: SparkSession, table: str) -> dict[str | None, set[int]]:
+    """Committed batch ids per owning run id, from one commit table: a
+    ``_commits`` marker table (``batch_id`` a column) or a pipeline's
+    ``lineage`` table (``batch_id`` the hive partition, which naming it
+    in the pinned schema types). A row without a ``run_id`` — a state
+    dir's marker, or a table written before the column existed — keys
+    under ``None``. Only the path-missing case yields no runs; a
     transient read error PROPAGATES (failing open would disable the
-    dedup filter and pollute the index with duplicates)."""
-    path = os.path.join(index_dir, "_commits")
-    if not _exists(spark, path):
-        return set()
-    df = spark.read.schema("batch_id long").parquet(path)
-    return {r["batch_id"] for r in df.select("batch_id").distinct().collect()}
+    dedup filter or restart-skip and mask the fault)."""
+    if not _exists(spark, table):
+        return {}
+    # pinned schema: an existing-but-empty dir reads as empty instead of
+    # throwing on inference
+    df = spark.read.schema("run_id string, batch_id long").parquet(table)
+    runs: dict[str | None, set[int]] = {}
+    for r in df.select("run_id", "batch_id").distinct().collect():
+        runs.setdefault(r["run_id"], set()).add(r["batch_id"])
+    return runs
+
+
+def claim_commits(spark: SparkSession, table: str, run_id: str) -> set[int]:
+    """Claim a commit table for one logical run and return the batch ids
+    that run committed. Batch outputs, index partitions and pins are
+    keyed by batch_id alone, and Spark numbers batches per checkpoint,
+    so a second run would SKIP or OVERWRITE the first run's
+    ``batch_id=N`` work: any other run id in the table, ``None``
+    included, raises ``ValueError``."""
+    runs = commit_runs(spark, table)
+    foreign = sorted(set(runs) - {run_id}, key=str)
+    if foreign:
+        raise ValueError(
+            f"{table!r} holds commits from run(s) {foreign}; this run is "
+            f"{run_id!r}. A directory belongs to ONE logical stream or "
+            f"batch run (its batch_id-keyed work would collide): use a "
+            f"fresh directory, or resume the original run with its "
+            f"checkpoint/run_id"
+        )
+    return runs.get(run_id, set())
+
+
+def committed_batches(spark: SparkSession, index_dir: str) -> set[int]:
+    """Batch ids whose commit marker landed, whichever run wrote it —
+    the partitions a reader may trust."""
+    runs = commit_runs(spark, os.path.join(index_dir, "_commits"))
+    return set().union(*runs.values())
 
 
 def append_commit_marker(
-    spark: SparkSession, index_dir: str, batch_id: int
+    spark: SparkSession, index_dir: str, batch_id: int, run_id: str | None
 ) -> None:
-    """Append the single-row commit marker for ``batch_id`` — the
-    write half of the marker protocol ``committed_batches`` reads.
-    EVERY marker writer (the streaming dedup/screen indexes, as-of
-    state epochs, epoch pins) must go through here so the schema and
-    path layout live in exactly one place."""
+    """Append the single-row ``(batch_id, run_id)`` commit marker — the
+    write half of the marker protocol ``commit_runs`` reads. ``run_id``
+    is the owning stream's (``claim_commits`` checks it on the next
+    start), or ``None`` for a table no stream owns (as-of state). EVERY
+    marker writer (the streaming dedup/screen indexes, as-of state
+    epochs, epoch pins) must go through here so the schema and path
+    layout live in exactly one place."""
     import pyarrow as pa
 
-    marker = pa.table({"batch_id": pa.array([batch_id], pa.int64())})
+    marker = pa.table({
+        "batch_id": pa.array([batch_id], pa.int64()),
+        "run_id": pa.array([run_id], pa.string()),
+    })
     write_small_parquet(
         spark, os.path.join(index_dir, "_commits"), marker, overwrite=False
     )
@@ -322,7 +364,6 @@ def _compact(
     spark: SparkSession,
     index_dir: str,
     tables: list[tuple[str, str, list[str]]],
-    codec: str = "zstd",
     chaos=None,
     transforms: dict | None = None,
 ) -> dict:
@@ -350,7 +391,7 @@ def _compact(
         )
         if transforms and table in transforms:
             view = transforms[table](view)
-        writer = view.write.mode("overwrite").option("compression", codec)
+        writer = view.write.mode("overwrite").option("compression", "zstd")
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(
@@ -376,7 +417,6 @@ def compact_minhash_index(
     spark: SparkSession,
     index_dir: str,
     id_col: str = "doc_id",
-    codec: str = "zstd",
     chaos=None,
 ) -> dict:
     """Compact a streaming-layout MinHash index (sigs + bands)."""
@@ -386,7 +426,7 @@ def compact_minhash_index(
             ("sigs", f"{id_col} long, sig array<long>", []),
             ("bands", f"{id_col} long, band int, bucket long", []),
         ],
-        codec, chaos,
+        chaos,
     )
 
 
@@ -395,7 +435,6 @@ def compact_semantic_index(
     index_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codec: str = "zstd",
     chaos=None,
 ) -> dict:
     """Compact a streaming-layout semantic index, preserving the
@@ -403,12 +442,12 @@ def compact_semantic_index(
     return _compact(
         spark, index_dir,
         [("vectors", f"{id_col} long, {vec_col} array<double>", ["cell"])],
-        codec, chaos,
+        chaos,
     )
 
 
 def compact_fingerprint_index(
-    spark: SparkSession, index_dir: str, codec: str = "zstd", chaos=None
+    spark: SparkSession, index_dir: str, chaos=None
 ) -> dict:
     """Compact a streaming-layout substring-fingerprint index. The
     rewrite also collapses cross-batch repeats of a gram hash (each
@@ -417,7 +456,7 @@ def compact_fingerprint_index(
     return _compact(
         spark, index_dir,
         [("grams", "gram_hash long", [])],
-        codec, chaos,
+        chaos,
         transforms={"grams": lambda v: v.distinct()},
     )
 

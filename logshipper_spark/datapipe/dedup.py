@@ -43,23 +43,22 @@ def write_key_index(
     path: str,
     text_col: str = "text",
     mode: str = "append",
-    codec: str = "zstd",
 ) -> None:
     """Persist the distinct 128-bit dedup keys of a corpus snapshot as
     a compact parquet key index (two BIGINT columns, 16 bytes/doc):
     the state a continuously-ingesting pipeline carries between crawls
     so each new batch dedups against everything already kept. Append
     mode accumulates snapshots; dedup_against() tolerates the
-    resulting cross-snapshot repeats. ``codec`` defaults to zstd like
-    the sibling index writers — the session-default lz4 frames are
-    Spark-only, and a persisted carry-state index should stay readable
-    by non-Spark tooling (DuckDB, pyarrow)."""
+    resulting cross-snapshot repeats. Written zstd like the sibling
+    index writers — the session-default lz4 frames are Spark-only, and
+    a persisted carry-state index should stay readable by non-Spark
+    tooling (DuckDB, pyarrow)."""
     (
         df.select(dedup_key(F.col(text_col)).alias("k"))
         .select("k.h0", "k.h1")
         .distinct()
         .write.mode(mode)
-        .option("compression", codec)
+        .option("compression", "zstd")
         .parquet(path)
     )
 
@@ -138,7 +137,6 @@ def write_minhash_index(
     num_hashes: int = 32,
     bands: int = 8,
     mode: str = "append",
-    codec: str = "zstd",
 ) -> None:
     """Persist a kept corpus snapshot's MinHash state as the carry
     index for incremental NEAR-dup dedup across crawls (the near-dup
@@ -154,9 +152,9 @@ def write_minhash_index(
         minhash_signature(F.col(text_col), k, num_hashes).alias("sig"),
     )
     sigs.persist()
-    sigs.write.mode(mode).option("compression", codec).parquet(path + "/sigs")
+    sigs.write.mode(mode).option("compression", "zstd").parquet(path + "/sigs")
     banded_buckets(sigs, num_hashes, bands).write.mode(mode).option(
-        "compression", codec
+        "compression", "zstd"
     ).parquet(path + "/bands")
     sigs.unpersist()
 
@@ -1016,7 +1014,6 @@ def write_fuzzy_index(
     id_col: str = "doc_id",
     q: int = 3,
     mode: str = "append",
-    codec: str = "zstd",
 ) -> None:
     """Persist the fuzzy-dedup carry state of a kept corpus snapshot —
     the L67 member of the incremental-index family (exact keys L8,
@@ -1027,11 +1024,11 @@ def write_fuzzy_index(
     holds the multiset q-gram postings ``(gram, occ, fid, flen)``.
     Append mode accumulates snapshots."""
     keys = _fuzzy_keys(df, key_col, id_col)
-    keys.write.mode(mode).option("compression", codec).parquet(
+    keys.write.mode(mode).option("compression", "zstd").parquet(
         f"{path}/keys"
     )
     _fuzzy_postings(keys, q).write.mode(mode).option(
-        "compression", codec
+        "compression", "zstd"
     ).parquet(f"{path}/postings")
 
 

@@ -185,13 +185,13 @@ def fit_dsir(
 
 
 def write_dsir_model(
-    model: DataFrame, path: str, mode: str = "overwrite", codec: str = "zstd"
+    model: DataFrame, path: str, mode: str = "overwrite"
 ) -> None:
     """Persist the fitted model — fit once (target corpora are small;
     the raw histogram from a deterministic hash slice if need be),
     score many. zstd so independent readers (the DuckDB contract
     oracle) can decode it."""
-    model.write.mode(mode).option("compression", codec).parquet(path)
+    model.write.mode(mode).option("compression", "zstd").parquet(path)
 
 
 def dsir_weights(

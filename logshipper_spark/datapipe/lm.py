@@ -119,13 +119,13 @@ def fit_unigram_lm(
 
 
 def write_unigram_lm(
-    model: DataFrame, path: str, mode: str = "overwrite", codec: str = "zstd"
+    model: DataFrame, path: str, mode: str = "overwrite"
 ) -> None:
     """Persist the fitted model — the reusable artifact a 100 TB run
     fits once (or on a deterministic hash-slice) and every scoring
     pass reads back. zstd so independent readers (the DuckDB contract
     oracle) can decode it."""
-    model.write.mode(mode).option("compression", codec).parquet(path)
+    model.write.mode(mode).option("compression", "zstd").parquet(path)
 
 
 def _finalize_scores(
@@ -291,14 +291,13 @@ def write_bigram_lm(
     tok_model: DataFrame,
     path: str,
     mode: str = "overwrite",
-    codec: str = "zstd",
 ) -> None:
     """Persist both model tables under ``path`` (``bigram/`` and
     ``tokens/``) — zstd so independent readers can decode them."""
-    bi_model.write.mode(mode).option("compression", codec).parquet(
+    bi_model.write.mode(mode).option("compression", "zstd").parquet(
         f"{path}/bigram"
     )
-    tok_model.write.mode(mode).option("compression", codec).parquet(
+    tok_model.write.mode(mode).option("compression", "zstd").parquet(
         f"{path}/tokens"
     )
 

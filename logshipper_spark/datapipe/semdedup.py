@@ -161,7 +161,6 @@ def write_semantic_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     mode: str = "append",
-    codec: str = "zstd",
 ) -> None:
     """Persist a kept corpus snapshot's embeddings as the carry index
     for INCREMENTAL semantic dedup across crawls — the SemDeDup analog
@@ -177,10 +176,10 @@ def write_semantic_index(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
         "cell",
-    ).write.mode(mode).option("compression", codec).partitionBy(
+    ).write.mode(mode).option("compression", "zstd").partitionBy(
         "cell"
     ).parquet(path + "/vectors")
-    _write_centroids(spark, path + "/centroids", centroids, "overwrite", codec)
+    _write_centroids(spark, path + "/centroids", centroids, "overwrite")
 
 
 def semantic_dedup_against(

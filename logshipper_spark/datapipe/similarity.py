@@ -167,17 +167,16 @@ def write_ivf_index(
     vec_col: str = "embedding",
     dim: int | None = None,
     mode: str = "overwrite",
-    codec: str = "zstd",
 ) -> None:
     """Persist the table partitioned by its IVF cell (the cell id is
     stable per vector, so this is a one-time ingest-side cost). Queries
     through ``ivf_topk_indexed`` then read only the probed partition
     directories — at 100 TB, a ``n_probe/num_cells`` fraction of the
-    bytes, decided before any task launches. ``codec`` defaults zstd
-    like every sibling index writer (the session default lz4 is
-    unreadable to DuckDB — CLAUDE.md round-2 gotcha)."""
+    bytes, decided before any task launches. Written zstd like every
+    sibling index writer (the session default lz4 is unreadable to
+    DuckDB — CLAUDE.md round-2 gotcha)."""
     assign_cells(df, num_cells, vec_col, dim=dim).write.mode(mode).option(
-        "compression", codec
+        "compression", "zstd"
     ).partitionBy("cell").parquet(path)
 
 
@@ -705,7 +704,7 @@ def kmeans_fit(
 
 
 def _write_centroids(
-    spark, path: str, centroids: list[list[float]], mode: str, codec: str
+    spark, path: str, centroids: list[list[float]], mode: str
 ) -> None:
     """One (cell, centroid) sidecar row per coarse cell — the
     self-describing half every IVF-family writer shares (schema, codec,
@@ -715,11 +714,11 @@ def _write_centroids(
         spark,
         [(i, list(c)) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>",
-    ).coalesce(1).write.mode(mode).option("compression", codec).parquet(path)
+    ).coalesce(1).write.mode(mode).option("compression", "zstd").parquet(path)
 
 
 def _write_codebook(
-    spark, path: str, codebooks: list[list[list[float]]], mode: str, codec: str
+    spark, path: str, codebooks: list[list[list[float]]], mode: str
 ) -> None:
     """(sub, code, centroid) PQ codebook sidecar — shared by
     write_pq_index and write_ivf_pq for the same reason as
@@ -731,7 +730,7 @@ def _write_codebook(
     ]
     local_frame(
         spark, rows, "sub int, code int, centroid array<double>"
-    ).coalesce(1).write.mode(mode).option("compression", codec).parquet(path)
+    ).coalesce(1).write.mode(mode).option("compression", "zstd").parquet(path)
 
 
 def write_ivf_trained(
@@ -740,7 +739,6 @@ def write_ivf_trained(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     mode: str = "overwrite",
-    codec: str = "zstd",
 ) -> None:
     """Persist the table partitioned by its TRAINED cell, plus the
     centroid table at ``<path>_centroids`` — the index is then fully
@@ -749,8 +747,8 @@ def write_ivf_trained(
     spark = df.sparkSession
     df.withColumn("cell", _nearest_centroid_col(vec_col, centroids)).write.mode(
         mode
-    ).option("compression", codec).partitionBy("cell").parquet(path)
-    _write_centroids(spark, path + "_centroids", centroids, mode, codec)
+    ).option("compression", "zstd").partitionBy("cell").parquet(path)
+    _write_centroids(spark, path + "_centroids", centroids, mode)
 
 
 def ivf_trained_topk(
@@ -952,7 +950,6 @@ def write_pq_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     mode: str = "overwrite",
-    codec: str = "zstd",
 ) -> None:
     """Persist the PQ codes table at ``path`` (``id, codes`` — ~``m``
     small ints per vector instead of ``dim`` doubles: at m=8/dim=768
@@ -963,9 +960,9 @@ def write_pq_index(
     ``write_ivf_trained`` convention)."""
     spark = df.sparkSession
     pq_codes(df, codebooks, vec_col).select(id_col, "codes").write.mode(mode).option(
-        "compression", codec
+        "compression", "zstd"
     ).parquet(path)
-    _write_codebook(spark, path + "_codebook", codebooks, mode, codec)
+    _write_codebook(spark, path + "_codebook", codebooks, mode)
 
 
 def _read_codebook(spark, path: str) -> dict[int, dict[int, list[float]]]:
@@ -1096,7 +1093,6 @@ def write_ivf_pq(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     mode: str = "overwrite",
-    codec: str = "zstd",
 ) -> None:
     """IVF×PQ index — the composed 100 TB serving layout: PQ code rows
     partitioned by TRAINED coarse cell, so a query prunes to
@@ -1114,10 +1110,10 @@ def write_ivf_pq(
         vec_col,
     )
     coded.select(id_col, "codes", "cell").write.mode(mode).option(
-        "compression", codec
+        "compression", "zstd"
     ).partitionBy("cell").parquet(path)
-    _write_centroids(spark, path + "_centroids", centroids, mode, codec)
-    _write_codebook(spark, path + "_codebook", codebooks, mode, codec)
+    _write_centroids(spark, path + "_centroids", centroids, mode)
+    _write_codebook(spark, path + "_codebook", codebooks, mode)
 
 
 def ivf_pq_topk(

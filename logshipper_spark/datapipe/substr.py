@@ -371,7 +371,6 @@ def write_fingerprint_index(
     w: int = 8,
     window: int = 4,
     mode: str = "append",
-    codec: str = "zstd",
 ) -> None:
     """Persist the DISTINCT winnowed gram hashes of a kept corpus
     snapshot — the boilerplate memory for incremental substring-level
@@ -385,7 +384,7 @@ def write_fingerprint_index(
         .select("gram_hash")
         .distinct()
         .write.mode(mode)
-        .option("compression", codec)
+        .option("compression", "zstd")
         .parquet(path)
     )
 

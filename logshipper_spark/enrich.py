@@ -18,8 +18,6 @@ matches while preserving first-match-wins, reference chain.go:15-21).
 
 from __future__ import annotations
 
-from fnmatch import fnmatchcase
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -148,26 +146,3 @@ def enrich_roles(df: DataFrame, lookup_df: DataFrame) -> DataFrame:
     ])
     hit = F.try_element_at(compiled, F.struct("role", "tool"))
     return df.withColumns({c: F.coalesce(hit[c], F.lit("")) for c in _ROLE_VALUES})
-
-
-def resolve_one(
-    host: str,
-    lookup_rows: list[tuple[str, str, bool, int]],
-    docker_replicas: bool = False,
-) -> str | None:
-    """Driver-side single-value resolver (test oracle parity helper),
-    same semantics as resolve_expr (+ optional Docker replica stage)."""
-    import re
-
-    lowered = host.lower()
-    ordered = sorted(lookup_rows, key=lambda r: r[3])
-    for pat, svc, is_wild, _ in ordered:
-        if not is_wild and lowered == pat.lower():
-            return svc
-    for pat, svc, is_wild, _ in ordered:
-        if is_wild and fnmatchcase(lowered, pat.lower()):
-            return svc
-    if docker_replicas and re.search(r"[-_]\d+$", host):
-        stripped = re.sub(r"[-_]\d+$", "", host)
-        return resolve_one(stripped, lookup_rows) or stripped
-    return None

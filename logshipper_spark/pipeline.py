@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from . import aggregate as agg
 from . import enrich, gen, parse, route
-from .datapipe.compaction import _exists, write_small_parquet
+from .datapipe.compaction import commit_runs, write_small_parquet
 from .schemas import (
     DEFAULT_INGEST_TS,
     FORMAT_ECS,
@@ -308,48 +308,10 @@ def completed_batches(
     spark: SparkSession, out_dir: str, run_id: str | None = None
 ) -> set[int]:
     """Batches whose lineage committed — the resume point for restarts.
-    With ``run_id``, only batches committed by that logical run count
-    (a fresh run over a reused output dir must not skip its own work
-    because an older run left lineage behind).
-
-    Only the path-missing case yields the empty set; a corrupt or
-    transiently unreadable lineage table PROPAGATES (failing open
-    would silently disable restart-skip forever and mask the
-    corruption — same posture as compaction.committed_batches)."""
-    runs = lineage_runs(spark, out_dir)
+    With ``run_id``, only batches committed by that logical run count.
+    A run that commits checks ownership with
+    ``compaction.claim_commits`` on the same table."""
+    runs = commit_runs(spark, os.path.join(out_dir, "lineage"))
     if run_id is not None:
         return runs.get(run_id, set())
-    return {b for batches in runs.values() for b in batches}
-
-
-def claim_out_dir(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
-    """Claim ``out_dir`` for one logical run: batch outputs are keyed by
-    batch_id alone, so a second run would OVERWRITE the first run's
-    ``batch_id=N`` partitions. Raises ``ValueError`` on another run's
-    lineage; otherwise returns ``run_id``'s committed batches."""
-    runs = lineage_runs(spark, out_dir)
-    foreign = sorted(set(runs) - {run_id})
-    if foreign:
-        raise ValueError(
-            f"out_dir {out_dir!r} already holds lineage from run(s) "
-            f"{foreign}; an output dir belongs to ONE logical stream or "
-            f"batch run — use a fresh out_dir, or resume the original "
-            f"run with its checkpoint/run_id"
-        )
-    return runs.get(run_id, set())
-
-
-def lineage_runs(spark: SparkSession, out_dir: str) -> dict[str, set[int]]:
-    """Committed batches per run_id — one lineage scan serving both the
-    resume-skip set and the foreign-run guard (``claim_out_dir``)."""
-    path = os.path.join(out_dir, "lineage")
-    if not _exists(spark, path):
-        return {}
-    # partial pinned schema: an existing-but-empty dir reads as empty
-    # instead of throwing on inference; batch_id is the hive partition
-    # column (naming it in the schema pins its type, no duplicate col)
-    df = spark.read.schema("run_id string, batch_id long").parquet(path)
-    runs: dict[str, set[int]] = {}
-    for r in df.select("run_id", "batch_id").distinct().collect():
-        runs.setdefault(r["run_id"], set()).add(r["batch_id"])
-    return runs
+    return set().union(*runs.values())

@@ -4,20 +4,11 @@
   internal/sinks/stdout.go:14-27): each event JSON-encoded; in Spark a
   projection to one JSON string column (pipe to console/`.show()`/any
   text sink).
-* ``write_table`` — target abstraction for the fan-out sinks: writes
-  through Iceberg (`writeTo(...).append()` with partition spec
-  ``days(ts), bucket(conv_id)``) when an Iceberg catalog is configured
-  on the session; this sandbox ships no Iceberg runtime jars, so the
-  fallback writes parquet under ``<base>/<table>/batch_id=N`` paths —
-  the same idempotent-replay layout run_batch relies on (overwriting a
-  batch directory ≙ replacing an Iceberg snapshot for that batch).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -26,43 +17,3 @@ def json_lines(df: DataFrame, pretty: bool = False) -> DataFrame:
     reference's indent option via to_json's pretty flag."""
     opts = {"pretty": "true"} if pretty else {}
     return df.select(F.to_json(F.struct(*df.columns), opts).alias("json"))
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured and its classes are
-    on the classpath."""
-    try:
-        confs = spark.sparkContext.getConf().getAll()
-    except Exception:
-        return False
-    has_catalog = any(k.startswith("spark.sql.catalog.") for k, _ in confs)
-    if not has_catalog:
-        return False
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def write_table(
-    df: DataFrame,
-    table: str,
-    base_dir: str,
-    batch_id: int,
-    spark: SparkSession | None = None,
-) -> str:
-    """Write one batch of one sink table; returns the physical target.
-
-    Iceberg path: ``writeTo`` appends a snapshot (idempotence then
-    comes from the caller's MERGE/overwrite-by-filter on batch_id).
-    Parquet path: overwrite the ``batch_id=N`` directory (replaying a
-    batch replaces exactly its own output)."""
-    spark = spark or df.sparkSession
-    if iceberg_available(spark):
-        full = f"{table}"
-        df.withColumn("batch_id", F.lit(batch_id)).writeTo(full).append()
-        return full
-    path = os.path.join(base_dir, table, f"batch_id={batch_id}")
-    df.write.mode("overwrite").parquet(path)
-    return path

@@ -13,6 +13,12 @@ Two kinds of stream:
   rows; the index streams
   append a ``_commits`` marker (``_index_stream``);
   ``streaming_asof_enrich`` pins the state epochs it read the same way.
+  Every commit row carries the owning run id, derived from the
+  checkpoint path (``_stream_run_id``), and each query starts with
+  ``compaction.claim_commits`` on its commit table: Spark numbers
+  batches per checkpoint, so a different checkpoint over a directory
+  another run committed to would skip or overwrite that run's
+  ``batch_id=N`` work, and it is refused instead.
   The reference has no restart story at all (process state is lost).
 
 * native stateful append (``streaming_first_seen``,
@@ -66,54 +72,6 @@ def _stream_run_id(checkpoint_dir: str) -> str:
     return f"stream-{digest[:12]}"
 
 
-def _claim_stream_dir(
-    spark: SparkSession, state_dir: str, checkpoint_dir: str
-) -> str:
-    """An index/state/pins directory belongs to ONE logical stream.
-    Claim it with a run id derived from the checkpoint path: a restart
-    (same checkpoint) re-claims silently; a DIFFERENT checkpoint over
-    the same directory is refused loudly. Without the guard, Spark's
-    per-checkpoint batch numbering restarts at 0, so a fresh stream
-    over an accumulated index would find the old run's batch_id-keyed
-    commit markers and silently SKIP its own first epochs (or, for
-    pins, enrich new data against stale pinned state) — the same
-    failure mode run_stream's lineage run_id guard exists for. A
-    pre-guard directory (markers but no ``_stream_id``) is adopted by
-    the first claimer. The underscore prefix keeps the marker invisible
-    to parquet directory listings."""
-    run_id = _stream_run_id(checkpoint_dir)
-    # migration: before the RFC-3986 scheme fix, a RELATIVE checkpoint
-    # path containing a colon (e.g. ``ckpt:v2/cp``) hashed VERBATIM;
-    # it now abspaths, so a restart over pre-fix state would derive a
-    # different run_id and be refused as foreign. Accept the legacy
-    # verbatim-key id as the same owner (and leave the marker as-is —
-    # rewriting it would strand a rollback to the old code).
-    legacy_digest = hashlib.sha256(checkpoint_dir.encode()).hexdigest()
-    legacy_run_id = f"stream-{legacy_digest[:12]}"
-    marker = os.path.join(state_dir, "_stream_id")
-    if compaction._exists(spark, marker):
-        owner = spark.read.schema("run_id string").parquet(marker).head()
-        if owner is not None and owner["run_id"] == legacy_run_id:
-            return legacy_run_id
-        if owner is not None and owner["run_id"] != run_id:
-            raise ValueError(
-                f"{state_dir!r} is owned by stream {owner['run_id']!r}; "
-                f"this checkpoint derives {run_id!r} — a state directory "
-                f"belongs to ONE logical stream (its batch_id-keyed "
-                f"markers would collide). Use a fresh directory, or "
-                f"resume with the original checkpoint."
-            )
-        if owner is not None:
-            return run_id
-    import pyarrow as pa
-
-    compaction.write_small_parquet(
-        spark, marker, pa.table({"run_id": pa.array([run_id], pa.string())}),
-        overwrite=True,
-    )
-    return run_id
-
-
 def read_transcript_stream(
     spark: SparkSession,
     input_dir: str,
@@ -157,25 +115,30 @@ def _index_stream(
     reads the index only at the ``committed`` batch ids, and persists
     each frame it reuses through ``keep(df)``.
 
-    The commit marker appends LAST, after ``body`` returns, and a
-    replayed batch reads the index restricted to COMMITTED batch ids —
-    a crash between the index write and the marker replays cleanly
-    because the half-written partition is invisible to the dedup join
-    and gets overwritten. ``chaos`` (tests): called with the batch id
+    The commit marker ``(batch_id, run_id)`` appends LAST, after
+    ``body`` returns, and a replayed batch reads the index restricted
+    to COMMITTED batch ids — a crash between the index write and the
+    marker replays cleanly because the half-written partition is
+    invisible to the dedup join and gets overwritten. The markers'
+    run id claims ``index_dir`` for this checkpoint's stream; a stream
+    that crashes before its first marker holds nothing yet.
+    ``chaos`` (tests): called with the batch id
     after commit but before Spark's checkpoint records the epoch — the
     crash-in-the-commit-gap drill."""
     # the index belongs to ONE logical stream: Spark restarts batch ids
     # at 0 per checkpoint, so a new checkpoint over an accumulated index
-    # would silently skip its first epochs via the old markers
-    _claim_stream_dir(spark, index_dir, checkpoint_dir)
-    # one _commits + _compaction scan at stream start: this process is
+    # would silently skip its first epochs via the old markers. One
+    # _commits + _compaction scan at stream start: this process is
     # the only marker writer afterwards (run_stream's lineage pattern),
     # so the locally-maintained set stays exact and each epoch pays
     # zero extra scans/collects of tables that grow one row per batch
     # forever. Stale compaction state is still a CORRECT view (the
     # pre-compaction epoch + full tail); vacuum requires a quiesced
     # stream anyway (vacuum_index docstring).
-    committed = compaction.committed_batches(spark, index_dir)
+    run_id = _stream_run_id(checkpoint_dir)
+    committed = compaction.claim_commits(
+        spark, os.path.join(index_dir, "_commits"), run_id
+    )
     comp_state = compaction.compaction_state(spark, index_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -193,7 +156,7 @@ def _index_stream(
         try:
             body(batch_df, batch_id, committed, comp_state, keep)
             # marker LAST — the restart point
-            compaction.append_commit_marker(spark, index_dir, batch_id)
+            compaction.append_commit_marker(spark, index_dir, batch_id, run_id)
             committed.add(batch_id)
         finally:
             while cached:
@@ -253,10 +216,10 @@ def run_stream(
         # logical stream (same checkpoint) keeps its run_id, so
         # replayed epochs skip via lineage; a FRESH stream (new
         # checkpoint) over a reused out_dir gets a distinct run_id and
-        # never skips its own batch 0 because an older run's lineage
-        # is lying around (completed_batches' run_id contract). A
-        # shared constant default would silently drop the new run's
-        # first epochs. Scheme-prefixed paths hash VERBATIM
+        # is refused instead of skipping its own batch 0 because an
+        # older run's lineage is lying around. A shared constant
+        # default would silently drop the new run's first epochs.
+        # Scheme-prefixed paths hash VERBATIM
         # (_stream_key) — including single-slash Hadoop forms like
         # file:/x that a '://' test would miss.
         run_id = _stream_run_id(checkpoint_dir)
@@ -265,7 +228,9 @@ def run_stream(
     # set (one lineage scan at start; this process is the only lineage
     # writer afterwards, so the local set stays exact) and the narrow
     # plan, whose lookup dims are collected and compiled here once
-    done = pipeline.claim_out_dir(spark, out_dir, run_id)
+    done = compaction.claim_commits(
+        spark, os.path.join(out_dir, "lineage"), run_id
+    )
     enriched = pipeline.normalize_and_enrich(
         spark,
         read_transcript_stream(spark, input_dir, max_files_per_trigger),
@@ -783,7 +748,7 @@ def asof_state_append(
     rows.write.mode("overwrite").option("compression", "zstd").parquet(
         os.path.join(state_dir, f"batch_id={batch_id}")
     )
-    compaction.append_commit_marker(spark, state_dir, batch_id)
+    compaction.append_commit_marker(spark, state_dir, batch_id, None)
 
 
 def streaming_asof_enrich(
@@ -838,13 +803,15 @@ def streaming_asof_enrich(
     pins_dir = os.path.join(out_dir, "_epoch_pins")
     # the pins belong to ONE logical stream: a new checkpoint over a
     # reused out_dir would collide batch ids with the old run's pins
-    # and enrich NEW data against STALE pinned state views
-    _claim_stream_dir(spark, pins_dir, checkpoint_dir)
-    # one pins _commits scan at stream start, maintained locally — this
-    # process is the sole pins writer (run_stream's lineage pattern);
-    # the per-batch STATE-dir scan below stays, state has an external
+    # and enrich NEW data against STALE pinned state views. One pins
+    # _commits scan at stream start, maintained locally — this process
+    # is the sole pins writer (run_stream's lineage pattern); the
+    # per-batch STATE-dir scan below stays, state has an external
     # writer (asof_state_append callers)
-    pinned_batches = compaction.committed_batches(spark, pins_dir)
+    run_id = _stream_run_id(checkpoint_dir)
+    pinned_batches = compaction.claim_commits(
+        spark, os.path.join(pins_dir, "_commits"), run_id
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         pin_path = os.path.join(pins_dir, f"batch_id={batch_id}")
@@ -865,7 +832,7 @@ def streaming_asof_enrich(
                 overwrite=True,
             )
             # pin marker LAST — a crash mid-pin-write is invisible
-            compaction.append_commit_marker(spark, pins_dir, batch_id)
+            compaction.append_commit_marker(spark, pins_dir, batch_id, run_id)
             pinned_batches.add(batch_id)
         if chaos is not None:
             chaos(batch_id, "pinned")

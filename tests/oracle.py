@@ -14,6 +14,7 @@ import json
 import math
 import re
 from datetime import datetime, timedelta, timezone
+from fnmatch import fnmatchcase
 
 DEFAULT_INGEST = datetime(2024, 1, 1, tzinfo=timezone.utc)
 
@@ -229,10 +230,32 @@ def parse_normalized(line: str, source_name: str, ingest=DEFAULT_INGEST) -> dict
     return n
 
 
+def resolve_one(
+    host: str,
+    lookup_rows: list[tuple[str, str, bool, int]],
+    docker_replicas: bool = False,
+) -> str | None:
+    """One host through the static resolver (reference:
+    internal/resolve/static.go, chain.go:11-22): exact matches first,
+    then wildcards, each in priority order (``lookup_rows`` is
+    ``(pattern, service, is_wildcard, priority)``), plus the optional
+    Docker replica stage. The twin of ``enrich.resolve_expr``."""
+    lowered = host.lower()
+    ordered = sorted(lookup_rows, key=lambda r: r[3])
+    for pat, svc, is_wild, _ in ordered:
+        if not is_wild and lowered == pat.lower():
+            return svc
+    for pat, svc, is_wild, _ in ordered:
+        if is_wild and fnmatchcase(lowered, pat.lower()):
+            return svc
+    if docker_replicas and re.search(r"[-_]\d+$", host):
+        stripped = re.sub(r"[-_]\d+$", "", host)
+        return resolve_one(stripped, lookup_rows) or stripped
+    return None
+
+
 def resolve(n: dict, lookup_rows) -> dict:
     """pipeline.resolve (pipeline.go:178-192) via the static resolver."""
-    from logshipper_spark.enrich import resolve_one
-
     if n["dst_service"]:
         svc = resolve_one(n["dst_service"], lookup_rows)
         if svc:

@@ -9,10 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from logshipper_spark import gen, route
-from logshipper_spark.enrich import enrich_roles, resolve_expr, resolve_one, resolve_services
+from logshipper_spark.enrich import enrich_roles, resolve_expr, resolve_services
 from logshipper_spark.session import local_frame
 
 from .conftest import plan_string
+from .oracle import resolve_one
 
 LOOKUP = [
     ("10.0.0.5", "payment-db", False, 0),

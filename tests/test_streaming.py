@@ -838,6 +838,57 @@ def test_streaming_asof_enrich_pins_empty_state(spark, tmp_path):
     assert got == [(1, None)]
 
 
+def test_streaming_asof_enrich_pins_foreign_checkpoint_refused(spark, tmp_path):
+    """The epoch pins under ``out_dir`` belong to ONE logical stream: a
+    second checkpoint over the same ``out_dir`` is refused before any
+    batch runs (its batch ids would reuse the first stream's pins and
+    enrich new rows against a stale state view), while the same
+    checkpoint resumes. The state table no stream owns carries NULL
+    run ids."""
+    from datetime import datetime
+
+    input_dir = str(tmp_path / "asof_in")
+    state_dir = str(tmp_path / "asof_state")
+    out_dir = str(tmp_path / "asof_out")
+    pins = os.path.join(out_dir, "_epoch_pins")
+    schema = "pid long, key string, ts timestamp_ntz"
+    st_schema = "key string, ts timestamp_ntz, ver long"
+    kw = dict(schema=schema, state_schema=st_schema, keys=["key"], payloads=["ver"])
+
+    def probe(pid):
+        spark.createDataFrame(
+            [(pid, "a", datetime(2024, 6, 1, 12, 0, 10))], schema
+        ).coalesce(1).write.mode("append").parquet(input_dir)
+
+    streaming.asof_state_append(
+        spark,
+        spark.createDataFrame([("a", datetime(2024, 6, 1, 12, 0, 0), 1)], st_schema),
+        state_dir,
+        0,
+    )
+    assert compaction.commit_runs(
+        spark, os.path.join(state_dir, "_commits")
+    ) == {None: {0}}
+    probe(1)
+    ckpt_a = str(tmp_path / "asof_ck_a")
+    streaming.streaming_asof_enrich(
+        spark, input_dir, state_dir, out_dir, ckpt_a, **kw
+    ).awaitTermination(180)
+    assert compaction.committed_batches(spark, pins) == {0}
+
+    # the same checkpoint resumes: the next probe file is batch 1
+    probe(2)
+    streaming.streaming_asof_enrich(
+        spark, input_dir, state_dir, out_dir, ckpt_a, **kw
+    ).awaitTermination(180)
+    assert compaction.committed_batches(spark, pins) == {0, 1}
+
+    with pytest.raises(ValueError, match="ONE logical stream"):
+        streaming.streaming_asof_enrich(
+            spark, input_dir, state_dir, out_dir, str(tmp_path / "asof_ck_b"), **kw
+        )
+
+
 # the three index streams, each with a one-row input it keeps:
 # (start, schema, row, extra arguments)
 _INDEX_STREAMS = {
